@@ -892,9 +892,8 @@ object InteropQueries {
 
     // ---- q116: SHALLOW CLONE pins a state, histories diverge ----
     // A Delta table — PARTITIONED by l_returnflag, so the clone's read
-    // path must rebuild partition columns from the log (absolute-path
-    // files forbid basePath discovery; the one-scan broadcast-lookup
-    // plan is what's under test) — is mutated, SHALLOW-CLONED through
+    // path must take partition columns from the log (absolute-path
+    // files carry no hive layout of the clone's own) — is mutated, SHALLOW-CLONED through
     // the SQL surface (CREATE TABLE ... SHALLOW CLONE, a metadata-only
     // commit referencing the source's files by absolute path), then BOTH
     // tables are mutated further. The query reads the CLONE; the oracle

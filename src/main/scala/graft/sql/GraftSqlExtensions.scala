@@ -404,7 +404,6 @@ object GraftSqlExtensions {
       val field = snap.schema.fields.find(_.name == colName).getOrElse(return None)
       if (snap.files.exists(_.deletionVector.exists(_.cardinality > 0))) return None
       val isPart = snap.partitionColumns.contains(colName)
-      lazy val sentinelNull = sentinelIsNullFor(t, snap)
       var acc: Option[Long] = None
       snap.files.foreach { f =>
         if (f.rows != 0L) {
@@ -412,10 +411,10 @@ object GraftSqlExtensions {
           // a NULL partition value (JSON null or the hive path sentinel
           // `__HIVE_DEFAULT_PARTITION__`) proves the partition column
           // all-null in this file — ignorable without a null count
-          if (isPart && rawPartValue(f, colName, sentinelNull).contains(null)) ()
+          if (isPart && rawPartValue(f, colName).contains(null)) ()
           else {
           val stat =
-            if (isPart) rawPartValue(f, colName, sentinelNull)
+            if (isPart) rawPartValue(f, colName)
             else (if (isMin) f.minValues else f.maxValues).flatMap(_.get(colName))
           stat.filter(_ != null)
             .flatMap(s => graft.tables.FileStats.orderedStatValue(field.dataType, s)) match {
@@ -752,40 +751,15 @@ object GraftSqlExtensions {
     }
   }
 
-  /** Whether a log-recorded `__HIVE_DEFAULT_PARTITION__` partition
-    * value provably denotes SQL NULL for THIS snapshot — i.e. the scan
-    * itself reads those rows as NULL. Always true for path-parsed
-    * sources (the native log and Iceberg parse values out of hive-style
-    * paths, where the sentinel IS the encoding of null — a real string
-    * equal to it is unrepresentable, exactly as in hive/Spark partition
-    * discovery). A foreign-Delta log records values as JSON, where null
-    * is unambiguous and a sentinel STRING could be a REAL value; there
-    * the decode is sound only when the snapshot takes the
-    * hive-discovery read route (every file's path rendering matches its
-    * JSON values — the same test DeltaLog.dfForSnapshot makes before
-    * choosing basePath discovery, which conflates identically).
-    * Anything else → the caller bails to the scan rather than guess.
-    */
-  private def sentinelIsNullFor(t: graft.tables.TxTable,
-      snap: graft.tables.TxLog.Snapshot): Boolean =
-    t.log != graft.tables.ForeignDeltaCommitLog ||
-      snap.files.forall(f =>
-        !graft.tables.TxLog.isAbsolute(f.path) &&
-          graft.tables.TxLog.partitionValuesOf(f.path) == f.partitionValues)
-
   /** A partition value as the log records it, normalized to SQL
-    * semantics: `__HIVE_DEFAULT_PARTITION__` decodes to NULL only when
-    * `sentinelIsNull` proves the scan reads it that way (see
-    * [[sentinelIsNullFor]]) — otherwise the value is ambiguous and the
-    * file is unprovable. None = no decodable value for the column
-    * (unprovable membership → callers fall to the scan). */
-  private def rawPartValue(f: graft.tables.TxLog.AddFile, col: String,
-      sentinelIsNull: => Boolean): Option[String] =
-    f.partitionValues.get(col).flatMap {
-      case null => Some(null)
-      case "__HIVE_DEFAULT_PARTITION__" =>
-        if (sentinelIsNull) Some(null) else None
-      case v => Some(v)
+    * semantics exactly as the read decodes it (LogFileIndex): JSON null
+    * and the hive path sentinel `__HIVE_DEFAULT_PARTITION__` are NULL.
+    * None = no value for the column (unprovable membership → callers
+    * fall to the scan). */
+  private def rawPartValue(f: graft.tables.TxLog.AddFile, col: String): Option[String] =
+    f.partitionValues.get(col).map {
+      case "__HIVE_DEFAULT_PARTITION__" => null
+      case v => v
     }
 
   /** One absorbed partition-predicate conjunct. `eval` is SQL
@@ -953,7 +927,6 @@ object GraftSqlExtensions {
       // convertible type — anything else is unprovable from the log
       if (!partFilter.forall(p =>
           partSet.contains(p.col) && fieldType.contains(p.col))) return None
-      lazy val sentinelNull = sentinelIsNullFor(t, snap)
       // files surviving the partition-only predicate (exact: partition
       // values are never truncated). A NULL partition value is exactly
       // decidable under three-valued logic (PartPred.eval); only a
@@ -961,7 +934,7 @@ object GraftSqlExtensions {
       val inScope = snap.files.filter { f =>
         if (f.rows < 0L) return None
         partFilter.forall { p =>
-          rawPartValue(f, p.col, sentinelNull) match {
+          rawPartValue(f, p.col) match {
             case Some(v) =>
               p.eval(v, s => partitionValueToCatalyst(fieldType(p.col), s))
                 .getOrElse(return None)
@@ -979,7 +952,7 @@ object GraftSqlExtensions {
         .empty[Seq[String], scala.collection.mutable.ArrayBuffer[graft.tables.TxLog.AddFile]]
       inScope.foreach { f =>
         val key = groupCols.map { c =>
-          rawPartValue(f, c, sentinelNull) match {
+          rawPartValue(f, c) match {
             case Some(v) if v != null => v
             // null (incl. the hive path sentinel) or missing group key:
             // SQL would emit a NULL-keyed group — fall to scan rather
@@ -1000,7 +973,7 @@ object GraftSqlExtensions {
           if (f.rows != 0L) {
             // a NULL partition value (incl. the hive path sentinel) makes
             // the column all-null in that file — contributes 0, exactly
-            if (isPart) rawPartValue(f, c, sentinelNull) match {
+            if (isPart) rawPartValue(f, c) match {
               case Some(v) => if (v != null) acc += f.rows
               case None => return None
             }
@@ -1022,7 +995,7 @@ object GraftSqlExtensions {
         // overcount; an unconvertible value is unprovable -> scan
         val liveByVal = scala.collection.mutable.Map.empty[Any, Long]
         files.foreach { f =>
-          rawPartValue(f, c, sentinelNull) match {
+          rawPartValue(f, c) match {
             case Some(v) =>
               if (v != null) {
                 val typed = partitionValueToCatalyst(fieldType(c), v)
@@ -1046,10 +1019,10 @@ object GraftSqlExtensions {
           if (f.rows != 0L) {
             // a NULL partition value (incl. the hive sentinel) proves the
             // column all-null in the file — no extreme to contribute
-            if (isPart && rawPartValue(f, c, sentinelNull).contains(null)) ()
+            if (isPart && rawPartValue(f, c).contains(null)) ()
             else {
             val stat =
-              if (isPart) rawPartValue(f, c, sentinelNull)
+              if (isPart) rawPartValue(f, c)
               else (if (isMin) f.minValues else f.maxValues).flatMap(_.get(c))
             stat.filter(_ != null)
               .flatMap(s => graft.tables.FileStats.orderedStatValue(dt, s)) match {

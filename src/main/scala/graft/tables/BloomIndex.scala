@@ -333,7 +333,7 @@ object BloomIndex {
             BloomFunctions.bloomAgg(col(s"`$c`"), numBits, k).as(c)): _*)
       // map the scan's URI form back to the log's AddFile.path (the
       // sidecar key) via a broadcast lookup — same URI-normalization
-      // contract as PartitionLookup/TxMerge
+      // contract as TxMerge
       val lookupRows = files.map { f =>
         val encoded = new org.apache.hadoop.fs.Path(
           TxLog.resolve(table.location, f.path)).toUri.toString
@@ -353,20 +353,21 @@ object BloomIndex {
     missingByFile.map(_._2.size).sum
   }
 
-  /** Files of `candidates` NOT provably absent for `predicate`'s
+  /** Files of `candidates` NOT provably absent for the filters'
     * top-level equality/IN conjuncts on indexed columns. Purely
     * subtractive on top of stats pruning; no index / no usable conjunct
     * → `candidates` unchanged.
     */
   def prune(spark: SparkSession, location: String, snap: TxLog.Snapshot,
-      candidates: Seq[TxLog.AddFile], predicate: String): Seq[TxLog.AddFile] = {
+      candidates: Seq[TxLog.AddFile],
+      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[TxLog.AddFile] = {
     val cols = indexedColumns(snap.properties)
     if (cols.isEmpty || candidates.isEmpty) return candidates
+    val lookups = equalityLookups(filters, cols)
+    if (lookups.isEmpty) return candidates
     val dir = indexDir(location)
     if (!TxLog.fs(spark, location).exists(new org.apache.hadoop.fs.Path(dir)))
       return candidates
-    val lookups = equalityLookups(spark, predicate, cols)
-    if (lookups.isEmpty) return candidates
 
     val sidecar = spark.read.schema(sidecarSchema).parquet(dir)
     val absent: Set[String] = lookups.flatMap { case (colName, keys) =>
@@ -382,49 +383,46 @@ object BloomIndex {
   }
 
   /** Top-level AND conjuncts of shape `col = lit` / `lit = col` /
-    * `col IN (lits)` on an indexed column, as (indexed column name,
-    * probe key renderings). Keys render exactly as the build side's
-    * `CAST(col AS STRING)` for the indexable types; anything else is
-    * skipped (no pruning, never wrong pruning).
+    * `col IN (lits)` on an indexed column, parsed or resolved, as
+    * (indexed column name, probe key renderings). Keys render exactly
+    * as the build side's `CAST(col AS STRING)` for the indexable types;
+    * anything else is skipped (no pruning, never wrong pruning).
     */
-  private def equalityLookups(spark: SparkSession, predicate: String,
+  private def equalityLookups(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       indexed: Seq[String]): Seq[(String, Seq[String])] = {
-    import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, In, Literal}
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe,
+      EqualTo, Expression, In, InSet, Literal}
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def split(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
+    def split(e: Expression): Seq[Expression] = e match {
       case And(l, r) => split(l) ++ split(r)
       case other => Seq(other)
     }
-    def attrName(e: org.apache.spark.sql.catalyst.expressions.Expression): Option[String] =
-      e match {
-        case a: UnresolvedAttribute if a.nameParts.length == 1 =>
-          indexed.find(_.equalsIgnoreCase(a.nameParts.head))
-        case _ => None
-      }
-    def render(l: Literal): Option[String] = (l.value, l.dataType) match {
-      case (null, _) => None
-      case (v, ByteType | ShortType | IntegerType | LongType) => Some(v.toString)
-      case (v, StringType) => Some(v.toString)
+    def attrName(e: Expression): Option[String] = e match {
+      case a: UnresolvedAttribute if a.nameParts.length == 1 =>
+        indexed.find(_.equalsIgnoreCase(a.nameParts.head))
+      case a: AttributeReference => indexed.find(_.equalsIgnoreCase(a.name))
       case _ => None
     }
-    val parsed =
-      try spark.sessionState.sqlParser.parseExpression(predicate)
-      catch { case _: Exception => return Seq.empty }
-    split(parsed).flatMap {
+    def render(v: Any, dt: DataType): Option[String] = (v, dt) match {
+      case (null, _) => None
+      case (v, ByteType | ShortType | IntegerType | LongType | StringType) => Some(v.toString)
+      case _ => None
+    }
+    // every IN key must render, else the conjunct can't prune (a
+    // non-renderable key might be the one a file holds)
+    def all(n: String, keys: Seq[Option[String]]) =
+      if (keys.nonEmpty && keys.forall(_.isDefined)) Some(n -> keys.map(_.get)) else None
+    filters.flatMap(split).flatMap {
       case EqualTo(a, l: Literal) =>
-        for (n <- attrName(a); s <- render(l)) yield n -> Seq(s)
+        for (n <- attrName(a); s <- render(l.value, l.dataType)) yield n -> Seq(s)
       case EqualTo(l: Literal, a) =>
-        for (n <- attrName(a); s <- render(l)) yield n -> Seq(s)
+        for (n <- attrName(a); s <- render(l.value, l.dataType)) yield n -> Seq(s)
       case EqualNullSafe(a, l: Literal) =>
-        for (n <- attrName(a); s <- render(l)) yield n -> Seq(s)
-      case In(a, list) if list.nonEmpty && list.forall(_.isInstanceOf[Literal]) =>
-        attrName(a).flatMap { n =>
-          // every IN key must render, else the conjunct can't prune
-          // (a non-renderable key might be the one a file holds)
-          val keys = list.map(l => render(l.asInstanceOf[Literal]))
-          if (keys.forall(_.isDefined)) Some(n -> keys.map(_.get)) else None
-        }
+        for (n <- attrName(a); s <- render(l.value, l.dataType)) yield n -> Seq(s)
+      case In(a, list) if list.forall(_.isInstanceOf[Literal]) =>
+        attrName(a).flatMap(n => all(n, list.map { case l: Literal => render(l.value, l.dataType) }))
+      case InSet(a, set) =>
+        attrName(a).flatMap(n => all(n, set.toSeq.map(render(_, a.dataType))))
       case _ => None
     }
   }

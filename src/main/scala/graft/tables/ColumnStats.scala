@@ -1662,11 +1662,6 @@ object ColumnStats {
   private def partitionDropKeep(table: TxTable, props: Map[String, String],
       base: TxLog.Snapshot, snap: TxLog.Snapshot,
       removedPaths: Seq[String]): Option[DropKeep] = {
-    // the hive sentinel IS null for path-parsed logs (native, Iceberg —
-    // a real string equal to it is unrepresentable there); a foreign
-    // Delta log records values as JSON where the sentinel STRING could
-    // be a real value — never guess, bail to an unset layer
-    val sentinelIsNull = table.log != ForeignDeltaCommitLog
     val pvalsEnc = props.get(PvalsProp).getOrElse(return None)
     val pk = props.get(PkProp).getOrElse(return None)
     val pcols = base.partitionColumns
@@ -1678,7 +1673,7 @@ object ColumnStats {
     if (removedFiles.size != removedSet.size) return None // can't bind the batch
     val ptypes = pcols.map(c => base.schema(c).dataType)
     def tupleOf(f: TxLog.AddFile): Option[Seq[String]] =
-      stampedTupleOf(f, pcols, ptypes, sentinelIsNull)
+      stampedTupleOf(f, pcols, ptypes)
     val removedTuples = removedFiles
       .map(f => tupleOf(f).getOrElse(return None)).toSet
     val tuples = decodeTuples(pvalsEnc)
@@ -1738,16 +1733,13 @@ object ColumnStats {
   /** A file's log-recorded partition tuple in the STAMPED encoding
     * (renderValue over internal values) — the ONE converter both the
     * pure-drop and partial-keep proofs use, so they can never disagree
-    * on which tuple a file belongs to. None = ambiguous/unconvertible
-    * (incl. the hive sentinel on a JSON-sourced log, where a real
-    * string equal to it would be indistinguishable from SQL NULL). */
+    * on which tuple a file belongs to. The hive sentinel is NULL, as the
+    * read decodes it. None = unconvertible. */
   private def stampedTupleOf(f: TxLog.AddFile, pcols: Seq[String],
-      ptypes: Seq[DataType], sentinelIsNull: Boolean): Option[Seq[String]] = {
+      ptypes: Seq[DataType]): Option[Seq[String]] = {
     val out = pcols.zip(ptypes).map { case (c, dt) =>
       f.partitionValues.get(c) match {
-        case Some(null) => null
-        case Some("__HIVE_DEFAULT_PARTITION__") =>
-          if (sentinelIsNull) null else return None
+        case Some(null | "__HIVE_DEFAULT_PARTITION__") => null
         case Some(raw) => logPartValueToStamped(dt, raw).getOrElse(return None)
         case None => return None
       }
@@ -1778,7 +1770,6 @@ object ColumnStats {
   private def partitionTouchedKeep(table: TxTable, props: Map[String, String],
       base: TxLog.Snapshot, snap: TxLog.Snapshot,
       removedPaths: Seq[String]): Option[Map[String, String]] = {
-    val sentinelIsNull = table.log != ForeignDeltaCommitLog
     val pvalsEnc = props.get(PvalsProp).getOrElse(return None)
     val pk = props.get(PkProp).getOrElse(return None)
     val pcols = base.partitionColumns
@@ -1795,7 +1786,7 @@ object ColumnStats {
         snapPaths.contains(f.path) || removedSet.contains(f.path))) return None
     val ptypes = pcols.map(c => base.schema(c).dataType)
     def tupleOf(f: TxLog.AddFile): Option[Seq[String]] =
-      stampedTupleOf(f, pcols, ptypes, sentinelIsNull)
+      stampedTupleOf(f, pcols, ptypes)
     val touched = removedFiles.map(f => tupleOf(f).getOrElse(return None)).toSet
     // rewrite survivors (files the commit added) must stay inside the
     // touched set — a delete writes survivors into the same partitions,

@@ -100,89 +100,6 @@ private[graft] sealed trait CommitLog {
   def refPinnedPaths(spark: SparkSession, location: String): Seq[String] = Seq.empty
 }
 
-/** One-scan reads for partitioned snapshots whose file paths can't ride
-  * hive-style `basePath` partition discovery (absolute add.paths from
-  * SHALLOW CLONE; layouts whose directories disagree with the log's
-  * partition values — legal per the Delta protocol). The log's partition
-  * values are joined back in from a broadcast (normalized file path →
-  * values) lookup on `_metadata.file_path`, so plan size is O(1) in
-  * partition-tuple count — the previous one-union-child-per-tuple plan
-  * made every read of a 10k-tuple clone superlinear in analyzer/optimizer
-  * time alone. Partition pruning is unaffected where it matters: scan
-  * paths prune files at the MANIFEST level (FileStats.survivingFiles sees
-  * the log's partition values) before this plan is built.
-  */
-private[tables] object PartitionLookup {
-  import org.apache.spark.sql.{Column, GraftColumnBridge => B, Row}
-  import org.apache.spark.sql.functions.{broadcast, col}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-
-  /** Below this many distinct partition tuples, reads use one union
-    * branch per tuple with LITERAL partition values: Catalyst
-    * constant-folds `p = 7`-style filters and drops whole branches'
-    * file scans at planning time — pruning the broadcast-lookup form
-    * cannot offer (its partition values only exist post-join). Above
-    * it, plan size wins: the single-scan join is O(1) in tuple count
-    * where the union is superlinear in analyzer time.
-    */
-  private val UnionFanoutMax = 32
-
-  /** Columns out: `schema` fields in order, then (when `withMeta`) the
-    * DeltaLog provenance columns FileMetaCol/RowMetaCol.
-    */
-  def read(spark: SparkSession, location: String, schema: StructType,
-      partitionColumns: Seq[String], files: Seq[AddFile],
-      withMeta: Boolean): DataFrame = {
-    val dataSchema = StructType(schema.filterNot(f => partitionColumns.contains(f.name)))
-    // shared by both plan shapes below
-    val metaSel: Seq[Column] =
-      if (withMeta) Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
-        col("_metadata.row_index").as(DeltaLog.RowMetaCol))
-      else Seq.empty
-    val metaNames = if (withMeta) Seq(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol) else Seq.empty
-    val byTuple = files.groupBy(_.partitionValues)
-    if (files.nonEmpty && byTuple.size <= UnionFanoutMax)
-      return byTuple.toSeq.map { case (pv, fs) =>
-        spark.read.schema(dataSchema)
-          .parquet(fs.map(f => TxLog.resolve(location, f.path)): _*)
-          .select(dataSchema.fieldNames.map(col).toIndexedSeq ++ metaSel: _*)
-          .select((schema.fieldNames.toIndexedSeq.map { c =>
-            if (partitionColumns.contains(c))
-              org.apache.spark.sql.functions.lit(pv.getOrElse(c, null))
-                .cast(schema(c).dataType).as(c)
-            else col(c)
-          } ++ metaNames.map(col)): _*)
-      }.reduce(_ unionAll _)
-    val pathKey = "__gr_pv_path"
-    def pvCol(pc: String) = s"__gr_pv_$pc"
-    val lookupSchema = StructType(StructField(pathKey, StringType) +:
-      partitionColumns.map(pc => StructField(pvCol(pc), StringType)))
-    val lookupRows = files.map { f =>
-      // _metadata.file_path is the URL-ENCODED URI form (Spark stores
-      // Path.toUri.toString); key through the same encoding or files with
-      // spaces/percent-escapes in their names silently drop out of the
-      // inner join
-      val encoded = new org.apache.hadoop.fs.Path(
-        TxLog.resolve(location, f.path)).toUri.toString
-      Row.fromSeq(DeletionVectors.normalizedUri(encoded) +:
-        partitionColumns.map(pc => f.partitionValues.getOrElse(pc, null)))
-    }
-    val lookup = spark.createDataFrame(
-      spark.sparkContext.parallelize(lookupRows, 1), lookupSchema)
-    // _metadata must resolve against the scan, so project it (and the
-    // join key) BEFORE the join
-    val scan = spark.read.schema(dataSchema)
-      .parquet(files.map(f => TxLog.resolve(location, f.path)): _*)
-      .select(dataSchema.fieldNames.map(col).toIndexedSeq ++ metaSel :+
-        B.toCol(NormalizedPath(B.toExpr(col("_metadata.file_path")))).as(pathKey): _*)
-    scan.join(broadcast(lookup), Seq(pathKey), "inner")
-      .select((schema.fieldNames.toIndexedSeq.map { c =>
-        if (partitionColumns.contains(c)) col(pvCol(c)).cast(schema(c).dataType).as(c)
-        else col(c)
-      } ++ metaNames.map(col)): _*)
-  }
-}
-
 /** Native `_graft_log` backend — thin delegation to TxLog. */
 private[graft] object NativeCommitLog extends CommitLog {
   def snapshot(spark: SparkSession, location: String, asOfVersion: Option[Long]): Snapshot =
@@ -229,23 +146,8 @@ private[graft] object NativeCommitLog extends CommitLog {
         c.operation == "REORG" || c.operation == "RENAME COLUMN" ||
         c.operation == "DROP COLUMN")
 
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    if (s.files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    } else if (s.partitionColumns.nonEmpty && s.files.exists(f => TxLog.isAbsolute(f.path))) {
-      // shallow-cloned partitioned table: absolute paths forbid basePath
-      // partition discovery — one scan + broadcast partition-value lookup
-      PartitionLookup.read(spark, location, s.schema, s.partitionColumns,
-        s.files, withMeta = false)
-    } else {
-      val paths = s.files.map(f => TxLog.resolve(location, f.path))
-      val reader = spark.read.schema(s.schema)
-      (if (s.partitionColumns.nonEmpty) reader.option("basePath", location) else reader)
-        .parquet(paths: _*)
-        .select(s.schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
-  }
+  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame =
+    LogFileIndex.readSnapshot(spark, location, s, s.files)
 
   def stage(spark: SparkSession, location: String, df: DataFrame, snap: Snapshot): Seq[AddFile] =
     TxLog.stageData(spark, location,
@@ -793,7 +695,7 @@ private[graft] object IcebergCommitLog extends CommitLog {
         if (withMeta) Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
           col("_metadata.row_index").as(DeltaLog.RowMetaCol))
         else Seq.empty
-      IcebergLog.readData(spark, metaJson, s.schema, files, metaSel)
+      IcebergLog.readData(spark, metaJson, s, files, metaSel)
     }
     if (dvFiles.isEmpty) return read(s.files, withMeta = false)
     // broadcast DESCRIPTORS, not bitmap bytes: driver and broadcast stay

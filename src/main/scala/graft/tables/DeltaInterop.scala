@@ -691,21 +691,15 @@ object DeltaLog {
         mat.toSeq.flatMap { case (r, c) => Seq(r, c) }: _*)
   }
 
-  /** Predicate scan with manifest-level data skipping: the per-file
-    * minValues/maxValues parsed from the foreign log's stats JSON prune
-    * files exactly like the native TxTable.scan path (same shared pruner),
-    * before Spark's own row-group pruning sees the survivors.
+  /** Predicate scan: `toDF.filter(predicate)`; the read's LogFileIndex
+    * prunes files on the log's partition values and per-file stats.
     */
-  def scan(spark: SparkSession, location: String, predicate: String): DataFrame = {
-    val s = snapshot(spark, location)
-    val surviving = FileStats.survivingFiles(spark, s, predicate)
-    dfForSnapshot(spark, location, s.copy(files = surviving))
-      .filter(org.apache.spark.sql.functions.expr(predicate))
-  }
+  def scan(spark: SparkSession, location: String, predicate: String): DataFrame =
+    toDF(spark, location).filter(org.apache.spark.sql.functions.expr(predicate))
 
   /** Files the pruner would read for a predicate (tests/inspection). */
   def filesAfterPruning(spark: SparkSession, location: String, predicate: String): Int =
-    FileStats.survivingFiles(spark, snapshot(spark, location), predicate).size
+    LogFileIndex.filesScanned(scan(spark, location, predicate))
 
   /** Files ADDED per commit in (fromExclusive, toInclusive], oldest first —
     * the raw material for change feeds over a real Delta log. Only the JSON
@@ -931,12 +925,10 @@ object DeltaLog {
     df.filter(toCol(DvIsRowLive(toExpr(col(FileMetaCol)), toExpr(col(RowMetaCol)), bc)))
   }
 
-  /** Plan a distributed read over a snapshot's active files. Fast path:
-    * when file paths are hive-layout-consistent with the log's partition
-    * values (how Delta-Spark and delta-rs lay files out), one parquet scan
-    * with basePath resolves partition columns — planning-time partition
-    * pruning intact. Otherwise (legal per protocol) read per partition
-    * group with the values injected as literals.
+  /** Plan a distributed read over a snapshot's active files: one
+    * LogFileIndex relation, partition values from the log (the layout
+    * of the files is irrelevant — absolute SHALLOW CLONE paths and
+    * directories that disagree with the log read alike).
     */
   private def rawRead(spark: SparkSession, location: String, s: TxLog.Snapshot,
       withMeta: Boolean): DataFrame = {
@@ -944,53 +936,25 @@ object DeltaLog {
       if (withMeta) Seq(col("_metadata.file_path").as(FileMetaCol),
         col("_metadata.row_index").as(RowMetaCol))
       else Seq.empty
-    val metaFields =
-      if (withMeta) Seq(
-        org.apache.spark.sql.types.StructField(FileMetaCol, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(RowMetaCol, org.apache.spark.sql.types.LongType))
-      else Seq.empty
-    val outNames = s.schema.fieldNames.toSeq ++ metaFields.map(_.name)
-    if (s.files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(s.schema.fields.toSeq ++ metaFields))
     val mapping = columnMappingOf(s.schema)
-    if (mapping.nonEmpty) return mappedRead(spark, location, s, mapping, metaSel, outNames)
-    // absolute add.paths (legal per protocol; SHALLOW CLONE emits them)
-    // cannot ride basePath partition discovery — fall to the literal-
-    // injection branch, which resolves each path independently
-    val hiveConsistent = (s.partitionColumns.isEmpty ||
-      s.files.forall(f => TxLog.partitionValuesOf(f.path) == f.partitionValues)) &&
-      !(s.partitionColumns.nonEmpty && s.files.exists(f => TxLog.isAbsolute(f.path)))
-    if (hiveConsistent) {
-      val paths = s.files.map(f => TxLog.resolve(location, f.path))
-      val reader = spark.read.schema(s.schema)
-      (if (s.partitionColumns.nonEmpty) reader.option("basePath", location) else reader)
-        .parquet(paths: _*)
-        .select(s.schema.fieldNames.map(col).toIndexedSeq ++ metaSel: _*)
-    } else {
-      // one scan + broadcast partition-value lookup: O(1) plan size in
-      // partition-tuple count (vs a union subtree per tuple)
-      PartitionLookup.read(spark, location, s.schema, s.partitionColumns,
-        s.files, withMeta)
-    }
+    if (mapping.isEmpty) LogFileIndex.readSnapshot(spark, location, s, s.files, metaSel)
+    else mappedRead(spark, location, s, mapping, metaSel)
   }
 
   /** Read a column-mapped table: data files store PHYSICAL column names
-    * (top-level and nested), so the scan reads the physicalized schema and
-    * casts each top-level column back to its logical type — struct casts
-    * rename nested fields positionally. In id mode the physicalized schema
-    * additionally carries `parquet.field.id`s and the parquet reader
-    * matches columns BY ID (spark.sql.parquet.fieldId.read.enabled), the
-    * mode's defining semantics; files without ids fall back to physical
-    * names (ignoreMissing). Partition directories also use physical names,
-    * so partition values come from the (already logical-keyed) manifest,
-    * injected as literals per partition group; filters on them
-    * constant-fold at planning time.
+    * (top-level and nested), so the relation reads the physicalized
+    * schema and one select casts each top-level column back to its
+    * logical name and type — struct casts rename nested fields
+    * positionally. In id mode the physicalized schema additionally
+    * carries `parquet.field.id`s and the parquet reader matches columns
+    * BY ID (spark.sql.parquet.fieldId.read.enabled), the mode's defining
+    * semantics; files without ids fall back to physical names
+    * (ignoreMissing). Partition values come from the (already
+    * logical-keyed) log.
     */
   private def mappedRead(spark: SparkSession, location: String,
       s: TxLog.Snapshot, mapping: Map[String, String],
-      metaSel: Seq[org.apache.spark.sql.Column], outNames: Seq[String]): DataFrame = {
+      metaSel: Seq[org.apache.spark.sql.Column]): DataFrame = {
     def stripMeta(dt: DataType): DataType = dt match {
       case st: StructType => StructType(st.fields.map(f =>
         org.apache.spark.sql.types.StructField(f.name, stripMeta(f.dataType), f.nullable)))
@@ -1006,7 +970,8 @@ object DeltaLog {
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
       spark.conf.set("spark.sql.parquet.fieldId.read.ignoreMissing", "true")
     }
-    val dataFields = s.schema.fields.filterNot(f => s.partitionColumns.contains(f.name)).toSeq
+    val (partFields, dataFields) =
+      s.schema.fields.toSeq.partition(f => s.partitionColumns.contains(f.name))
     val physSchema = StructType(dataFields.map { f =>
       val meta =
         if (idMode && f.metadata.contains(ColumnIdKey))
@@ -1017,20 +982,14 @@ object DeltaLog {
         mapping.getOrElse(f.name, f.name),
         physicalize(f.dataType, withFieldIds = idMode).asInstanceOf[DataType], f.nullable, meta)
     })
-    val groups = s.files.groupBy(_.partitionValues).toSeq
-    groups.map { case (pv, files) =>
-      val base = spark.read.schema(physSchema)
-        .parquet(files.map(f => TxLog.resolve(location, f.path)): _*)
-      val logicalCols = dataFields.map { f =>
-        col(s"`${mapping.getOrElse(f.name, f.name)}`").cast(stripMeta(f.dataType)).as(f.name)
-      }
-      val withParts = s.partitionColumns.foldLeft(
-          base.select(logicalCols.toIndexedSeq ++ metaSel: _*)) { (d, pc) =>
-        val dt = s.schema(pc).dataType
-        d.withColumn(pc, lit(pv.getOrElse(pc, null)).cast(stripMeta(dt)))
-      }
-      withParts.select(outNames.map(col): _*)
-    }.reduce(_ unionAll _)
+    val partSchema = StructType(partFields.map(f =>
+      org.apache.spark.sql.types.StructField(f.name, stripMeta(f.dataType))))
+    LogFileIndex.read(spark, location, s, s.files, physSchema, partSchema,
+        logicalNames = dataFields.map(f => mapping.getOrElse(f.name, f.name) -> f.name).toMap)
+      .select(s.schema.fields.toIndexedSeq.map { f =>
+        if (s.partitionColumns.contains(f.name)) col(s"`${f.name}`")
+        else col(s"`${mapping.getOrElse(f.name, f.name)}`").cast(stripMeta(f.dataType)).as(f.name)
+      } ++ metaSel: _*)
   }
 }
 

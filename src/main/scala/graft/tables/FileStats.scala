@@ -159,7 +159,7 @@ object FileStats {
     * refusal, non-deterministic expression).
     */
   def partitionTrueEvaluator(spark: org.apache.spark.sql.SparkSession,
-      parsed: Expression, snap: TxLog.Snapshot, sentinelIsNull: Boolean)
+      parsed: Expression, snap: TxLog.Snapshot)
       : Option[TxLog.AddFile => Option[Boolean]] =
     try {
       import org.apache.spark.sql.catalyst.InternalRow
@@ -202,9 +202,7 @@ object FileStats {
         var i = 0
         while (i < pcols.size && ok) {
           f.partitionValues.get(pcols(i)) match {
-            case Some(null) => vals(i) = null
-            case Some("__HIVE_DEFAULT_PARTITION__") =>
-              if (sentinelIsNull) vals(i) = null else ok = false
+            case Some(null | "__HIVE_DEFAULT_PARTITION__") => vals(i) = null
             case Some(raw) => partitionInternalValue(ptypes(i), raw) match {
               case Some(v) => vals(i) = v
               case None => ok = false
@@ -341,17 +339,24 @@ object FileStats {
     case _ => v
   }
 
-  /** Manifest-level file pruning shared by the native and foreign-Delta
-    * scan paths: keep only the files whose partition values or min/max
-    * stats might satisfy `predicate`.
+  /** Manifest-level file pruning: keep only the snapshot's files whose
+    * partition values or min/max stats might satisfy `predicate`.
     */
   def survivingFiles(spark: org.apache.spark.sql.SparkSession, snap: TxLog.Snapshot,
-      predicate: String): Seq[TxLog.AddFile] = {
-    val conjuncts = prunableConjuncts(
-      spark.sessionState.sqlParser.parseExpression(predicate))
+      predicate: String): Seq[TxLog.AddFile] =
+    survivingFiles(snap, snap.files, prunableConjuncts(
+      spark.sessionState.sqlParser.parseExpression(predicate)))
+
+  /** Files of `files` whose partition values or min/max/null-count
+    * stats might satisfy every conjunct (`snap` supplies the column
+    * types and which columns are partition columns).
+    */
+  def survivingFiles(snap: TxLog.Snapshot, files: Seq[TxLog.AddFile],
+      conjuncts: Seq[Conjunct]): Seq[TxLog.AddFile] = {
+    if (conjuncts.isEmpty) return files
     val fieldTypes = snap.schema.fields.map(f => f.name -> f.dataType).toMap
     val partSet = snap.partitionColumns.toSet
-    snap.files.filter { f =>
+    files.filter { f =>
       conjuncts.forall { c =>
         fieldTypes.get(c.colName) match {
           case Some(dt) if partSet.contains(c.colName) =>

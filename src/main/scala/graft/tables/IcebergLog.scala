@@ -255,24 +255,6 @@ object IcebergLog {
     } finally r.close()
   }
 
-  /** Schema'd scan over Iceberg data files. One plain name-resolved read
-    * on a table that never renamed. After a rename, files split by
-    * footer shape (inspected on EXECUTORS — one (hasIds, names) pair per
-    * file reaches the driver): id-bearing files resolve by parquet field
-    * id; id-LESS files (foreign writers, imported tables) resolve
-    * through the name mapping, with fields absent from a file read as
-    * null — the spec's "Column Projection" + "Name Mapping Serialization"
-    * rules, matching how iceberg-java reads such files.
-    *
-    * Identity-partitioned source columns MISSING from the data files
-    * (hive-migrated tables, dual-format publishes over hive-layout
-    * files) substitute the manifest's partition value per the spec's
-    * Column Projection rule #2: files group by their missing-value
-    * tuple — O(partition tuples) scans, not O(files) — and each group
-    * reads with the values as literals. Detection costs one driver
-    * footer read of the first file, so our own full-row files keep the
-    * single-scan fast path.
-    */
   /** Footer shapes of data files, cached for the life of the JVM:
     * Iceberg data files are IMMUTABLE once written, so a file's
     * (hasIds, topLevelNames) pair never changes and each file is
@@ -309,9 +291,33 @@ object IcebergLog {
       footerTopLevel(conf, f.path)
     })
 
-  private[tables] def readData(spark: SparkSession, meta: JValue, schema: StructType,
+  /** Schema'd scan over Iceberg data files, one LogFileIndex relation
+    * per physical read schema. One plain name-resolved relation on a
+    * table that never renamed. After a rename, files split by footer
+    * shape (inspected on EXECUTORS — one (hasIds, names) pair per file
+    * reaches the driver): id-bearing files resolve by parquet field id;
+    * id-LESS files (foreign writers, imported tables) resolve through
+    * the name mapping, one relation per rename era, with fields absent
+    * from a file read as null — the spec's "Column Projection" + "Name
+    * Mapping Serialization" rules, matching how iceberg-java reads such
+    * files.
+    *
+    * Identity-partitioned source columns MISSING from the data files
+    * (hive-migrated tables, dual-format publishes over hive-layout
+    * files) come from the manifest's partition values, per the spec's
+    * Column Projection rule #2: they are the relation's partition
+    * columns. Detection costs one driver footer read of the first file.
+    * `snap` supplies the schema and the pruning context.
+    */
+  private[tables] def readData(spark: SparkSession, meta: JValue, snap: TxLog.Snapshot,
       files: Seq[TxLog.AddFile], metaSel: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val paths = files.map(_.path)
+    val schema = snap.schema
+    val location = (meta \ "location").extract[String]
+    val transforms = transformFieldsOf(meta).filter { case (_, _, src) =>
+      schema.fieldNames.contains(src) }
+    def relation(fs: Seq[TxLog.AddFile], data: StructType,
+        parts: StructType = new StructType(), names: Map[String, String] = Map.empty) =
+      LogFileIndex.read(spark, location, snap, fs, data, parts, transforms, names)
     def sel(df: DataFrame) =
       df.select(schema.fieldNames.toIndexedSeq.map(col) ++ metaSel: _*)
     if (!renamedEver(meta)) {
@@ -323,24 +329,8 @@ object IcebergLog {
             footerCached(spark.sessionState.newHadoopConf(), files.head)._2.toSet
           identityCols.filterNot(firstNames.contains)
         }
-      if (missing.isEmpty)
-        return sel(spark.read.schema(schema).parquet(paths: _*))
-      val readSchema = StructType(schema.fields.filterNot(f => missing.contains(f.name)))
-      val types = schema.fields.map(f => f.name -> f.dataType).toMap
-      val groups = files.groupBy(f => missing.map(c => f.partitionValues.get(c).orNull))
-      return groups.map { case (values, gf) =>
-        val base = spark.read.schema(readSchema).parquet(gf.map(_.path): _*)
-        val cols = schema.fieldNames.toIndexedSeq.map { n =>
-          val i = missing.indexOf(n)
-          if (i < 0) col(n)
-          else {
-            val v = values(i)
-            val vv = if (v == null || v == "__HIVE_DEFAULT_PARTITION__") null else v
-            org.apache.spark.sql.functions.lit(vv).cast(types(n)).as(n)
-          }
-        }
-        base.select(cols ++ metaSel: _*)
-      }.reduce(_.unionAll(_))
+      val (parts, data) = schema.fields.partition(f => missing.contains(f.name))
+      return sel(relation(files, StructType(data), StructType(parts)))
     }
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
     val idSchema = schemaWithFieldIds(currentSchemaJson(meta))
@@ -350,7 +340,7 @@ object IcebergLog {
     // the cluster (defaultParallelism tasks, not a fixed cap of 64 —
     // footer reads are tiny metadata IOs and scale with executors)
     val keyOf = files.map(f => f.path -> footerKey(f)).toMap
-    val todo = paths.filter(p => !footerCache.containsKey(keyOf(p)))
+    val todo = files.map(_.path).filter(p => !footerCache.containsKey(keyOf(p)))
     val sniffed =
       if (todo.isEmpty) Seq.empty
       else {
@@ -361,28 +351,30 @@ object IcebergLog {
           .map(p => (p, footerTopLevel(hconf.value, p))).collect().toSeq
       }
     sniffed.foreach { case (p, v) => footerCache.put(keyOf(p), v) }
-    val info = paths.map(p => p -> footerCache.get(keyOf(p)))
+    val info = files.map(f => f -> footerCache.get(keyOf(f.path)))
     val (withIds, idless) = info.partition(_._2._1)
     val mapping = nameMapping(meta)
     val fields = topFields(meta)
     val parts = Seq.newBuilder[DataFrame]
     if (withIds.nonEmpty)
-      parts += sel(spark.read.schema(idSchema).parquet(withIds.map(_._1): _*))
+      parts += sel(relation(withIds.map(_._1), idSchema))
     // id-less files group by their resolved historical-name vector (one
-    // read per rename era, not per file)
+    // relation per rename era, not per file)
     idless.groupBy { case (_, (_, names)) =>
       fields.map { case (id, cur, _) =>
         mapping.getOrElse(id, Seq(cur)).find(names.contains).orNull
       }
-    }.foreach { case (vector, files) =>
-      val readFields = fields.zip(vector).collect {
-        case ((_, _, dt), src) if src != null => StructField(src, dt)
+    }.foreach { case (vector, eraFiles) =>
+      val read = fields.zip(vector).collect {
+        case ((_, cur, dt), src) if src != null => (src, cur, dt)
       }
-      val base = spark.read.schema(StructType(readFields)).parquet(files.map(_._1): _*)
+      val base = relation(eraFiles.map(_._1),
+        StructType(read.map { case (src, _, dt) => StructField(src, dt) }),
+        names = read.map { case (src, cur, _) => src -> cur }.toMap)
       val cols = fields.zip(vector).map {
         case ((_, cur, dt), src) =>
           if (src == null) org.apache.spark.sql.functions.lit(null).cast(dt).as(cur)
-          else col(src).as(cur)
+          else col(s"`$src`").as(cur)
       }
       parts += base.select(cols ++ metaSel: _*)
     }
@@ -892,8 +884,7 @@ object IcebergLog {
     * JSON document without re-walking manifests). Plan size is bounded:
     * beyond [[ChangelogUnionFanoutMax]] append commits, the per-commit
     * literal-tagged branches collapse into ONE scan of every appended
-    * file plus a broadcast (file path → version, timestamp) lookup —
-    * the same hybrid CommitLog.PartitionLookup uses for clone reads, so
+    * file plus a broadcast (file path → version, timestamp) lookup, so
     * a 1,000-commit feed costs one plan, not 1,000 branches.
     */
   def tableChanges(spark: SparkSession, location: String, fromVersion: Long,
@@ -1079,38 +1070,28 @@ object IcebergLog {
       asOfSnapshotId: Option[Long] = None): DataFrame =
     dfFor(spark, state(spark, location, asOfSnapshotId))
 
-  /** Predicate scan with manifest-level pruning: identity partition values
-    * and decoded lower/upper bounds drop files through the shared
-    * FileStats pruner before Spark's row-group pruning sees the survivors
-    * — the same two-level skip the Delta paths get.
+  /** Predicate scan: `toDF.filter(predicate)`; the read's LogFileIndex
+    * prunes files on identity partition values, decoded lower/upper
+    * bounds and hidden-partition transform values.
     */
-  def scan(spark: SparkSession, location: String, predicate: String): DataFrame = {
-    val st = state(spark, location)
-    val surviving = transformSurvivors(spark, st,
-      FileStats.survivingFiles(spark, pruneView(st), predicate), predicate)
-    dfFor(spark, st.copy(files = surviving)).filter(expr(predicate))
-  }
+  def scan(spark: SparkSession, location: String, predicate: String): DataFrame =
+    toDF(spark, location).filter(expr(predicate))
 
   /** Files the pruner would read for a predicate (tests/inspection). */
-  def filesAfterPruning(spark: SparkSession, location: String, predicate: String): Int = {
-    val st = state(spark, location)
-    transformSurvivors(spark, st,
-      FileStats.survivingFiles(spark, pruneView(st), predicate), predicate).size
-  }
+  def filesAfterPruning(spark: SparkSession, location: String, predicate: String): Int =
+    LogFileIndex.filesScanned(scan(spark, location, predicate))
 
   /** Hidden-partitioning pruning: project each prunable conjunct through
     * every transform whose SOURCE column it constrains, against the file's
     * stored transformed partition value. Composes with (runs after) the
     * identity/stats pruning FileStats does.
     */
-  private[tables] def transformSurvivors(spark: SparkSession, st: IceState,
-      files: Seq[TxLog.AddFile], predicate: String): Seq[TxLog.AddFile] = {
-    if (st.transformFields.isEmpty) return files
-    val conjuncts = FileStats.prunableConjuncts(
-      spark.sessionState.sqlParser.parseExpression(predicate))
-    if (conjuncts.isEmpty) return files
-    val bySource = st.transformFields.groupBy(_._3)
-    val types = st.schema.fields.map(f => f.name -> f.dataType).toMap
+  private[tables] def transformSurvivors(schema: StructType,
+      transforms: Seq[(String, IceTransforms.T, String)], files: Seq[TxLog.AddFile],
+      conjuncts: Seq[FileStats.Conjunct]): Seq[TxLog.AddFile] = {
+    if (transforms.isEmpty || conjuncts.isEmpty) return files
+    val bySource = transforms.groupBy(_._3)
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
     files.filter { f =>
       conjuncts.forall { c =>
         bySource.getOrElse(c.colName, Seq.empty).forall { case (specName, t, src) =>
@@ -1121,8 +1102,9 @@ object IcebergLog {
     }
   }
 
+  /** The state as a Snapshot: the pruning context of its reads. */
   private def pruneView(st: IceState): TxLog.Snapshot =
-    TxLog.Snapshot(0L, st.schema, st.partitionColumns, st.files, Map.empty)
+    TxLog.Snapshot(0L, st.schema, st.partitionColumns, st.files, propertiesOf(st.meta))
 
   private[tables] def dfFor(spark: SparkSession, st: IceState,
       withMeta: Boolean = false): DataFrame = {
@@ -1141,7 +1123,7 @@ object IcebergLog {
       if (needMeta) Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
         col("_metadata.row_index").as(DeltaLog.RowMetaCol))
       else Seq.empty
-    val base = readData(spark, st.meta, st.schema, st.files, metaSel)
+    val base = readData(spark, st.meta, pruneView(st), st.files, metaSel)
     val live = applyEqualityDeletes(spark,
       applyPositionDeletes(spark, base, st), st)
     if (withMeta) live else live.drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
@@ -1212,8 +1194,7 @@ object IcebergLog {
 
   /** Append-commit branch cap for tableChanges plans — beyond this many
     * append commits the per-commit literal branches collapse into one
-    * scan + broadcast lookup (mirrors CommitLog.PartitionLookup's
-    * UnionFanoutMax for clone reads).
+    * scan + broadcast lookup, so plan size stays O(1) in commit count.
     */
   private[tables] val ChangelogUnionFanoutMax = 32
 
@@ -1252,7 +1233,7 @@ object IcebergLog {
     if (candidates.isEmpty)
       return spark.createDataFrame(Seq.empty[(String, Long)])
         .toDF("__np", "__pos")
-    val base = readData(spark, st.meta, st.schema, candidates, metaSel)
+    val base = readData(spark, st.meta, pruneView(st), candidates, metaSel)
     val seqRows = candidates.map(a =>
       (DeletionVectors.normalizedUri(a.path), st.dataSeq.getOrElse(a.path, 0L)))
     val seqDf = spark.createDataFrame(seqRows).toDF("__np", "__dataseq")

@@ -44,15 +44,13 @@ object SnapshotCache {
 
   private final case class Entry(log: CommitLog, sig: Long, snapshot: TxLog.Snapshot) {
     /** Per-SESSION memo of the constructed read DataFrame over this
-      * snapshot. Building the read plan is O(files) driver work — at
-      * 2,920 files `spark.read.parquet(paths…)` pays ~4s of listing +
-      * partition inference PER QUERY, which dominated every query on
-      * high-file-count tables even with the snapshot itself cached. A
-      * DataFrame over a pinned, immutable file set is deterministic, so
-      * it is built once per (location, version, session) and reused —
-      * the same reuse Delta's own DeltaLog.createDataFrame provides.
-      * Keyed by session (plans embed session state); tiny bound, and
-      * the whole memo dies with the entry on any commit.
+      * snapshot, so a query over an unchanged table skips building and
+      * re-analyzing the read plan. A DataFrame over a pinned, immutable
+      * file set is deterministic, so it is built once per (location,
+      * version, session) and reused — the same reuse Delta's own
+      * DeltaLog.createDataFrame provides. Keyed by session (plans embed
+      * session state); tiny bound, and the whole memo dies with the
+      * entry on any commit.
       */
     val planMemo = new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
       org.apache.spark.sql.DataFrame](2)
@@ -142,11 +140,9 @@ object SnapshotCache {
     }
 
   /** The latest snapshot AND its memoized read DataFrame. On a cache
-    * hit the per-(version, session) plan memo makes this O(1): the
-    * O(files) plan construction (path listing, partition inference) is
-    * paid once per commit, not once per query — the fixed per-query
-    * cost that still dominated high-file-count tables after the
-    * snapshot replay itself was cached.
+    * hit the per-(version, session) plan memo makes this O(1): plan
+    * construction and analysis are paid once per commit, not once per
+    * query.
     */
   def latestDF(spark: SparkSession, location: String)
       : (TxTable, TxLog.Snapshot, org.apache.spark.sql.DataFrame) =

@@ -246,34 +246,6 @@ object TxLog {
       transactions = txns.toMap)
   }
 
-  /** Run `f` (a read-plan construction over an explicit manifest-driven
-    * path list) with Spark's parallel partition-discovery DISABLED when
-    * the table lives on a LOCAL filesystem. Building a DataFrame over N
-    * explicit paths makes InMemoryFileIndex list them; above the
-    * discovery threshold (default 32) Spark launches a listing JOB whose
-    * scheduling overhead dwarfs local listStatus calls — measured 5.1s
-    * job vs 0.31s driver-serial at 2,920 local files. Object-store
-    * locations keep the parallel job (serial remote HEADs would be
-    * worse); the real fix at any scale is a FileIndex that serves
-    * listings straight from the commit log's (path, size) metadata —
-    * Delta's TahoeFileIndex approach — which removes the listing
-    * entirely and is the planned follow-up. Conf is restored on exit;
-    * a concurrent query mid-bracket merely gets serial listing too
-    * (choice of lister, never a different result).
-    */
-  private[tables] def withLocalSerialListing[T](spark: SparkSession,
-      location: String, nFiles: Int)(f: => T): T = {
-    val scheme = new Path(location).toUri.getScheme
-    val local = scheme == null || scheme == "file"
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    if (!local || nFiles <= 32) f
-    else {
-      val prev = spark.conf.get(key)
-      spark.conf.set(key, Int.MaxValue.toString)
-      try f finally spark.conf.set(key, prev)
-    }
-  }
-
   def latestVersion(spark: SparkSession, location: String): Option[Long] = {
     val f = fs(spark, location)
     listCommitFiles(f, location).lastOption.map(_._1)

@@ -29,8 +29,8 @@ final class TxTable(val spark: SparkSession, val location: String,
   def history: Seq[Long] = log.latestVersion(spark, location).map(v => 0L to v).getOrElse(Seq.empty[Long]).toSeq
 
   /** Current table contents as a DataFrame. Reads only the active file set
-    * from the log (no directory listing), with partition columns resolved
-    * from hive paths — filters on them prune at planning time.
+    * from the log (no directory listing), with partition values from the
+    * log; every filter on it prunes files at planning time (LogFileIndex).
     */
   def toDF: DataFrame = dfFor(snapshot)
 
@@ -186,8 +186,7 @@ final class TxTable(val spark: SparkSession, val location: String,
     } }
   }
 
-  private def dfFor(s: Snapshot): DataFrame = TxLog.withLocalSerialListing(
-      spark, location, s.files.size) {
+  private def dfFor(s: Snapshot): DataFrame = {
     val df = log.dfForSnapshot(spark, location, s)
     // while an ANALYZE stamp is fresh (fingerprint match — maintained
     // across appends AND provable deletes by ColumnStats.foldAppend/
@@ -867,10 +866,7 @@ final class TxTable(val spark: SparkSession, val location: String,
       if (snap.files.isEmpty) { outcome = true; None } // nothing to delete
       else {
         val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
-        // Iceberg manifests record typed partition values (nulls are
-        // real nulls — IcebergLog normalizes the sentinel on read)
-        FileStats.partitionTrueEvaluator(spark, parsed, snap,
-            sentinelIsNull = true) match {
+        FileStats.partitionTrueEvaluator(spark, parsed, snap) match {
           case None => None
           case Some(ev) =>
             val decided = snap.files.map(f => f -> ev(f))
@@ -1014,8 +1010,7 @@ final class TxTable(val spark: SparkSession, val location: String,
         // semantics are exactly the scan's.
         val decide: TxLog.AddFile => Option[Boolean] =
           if (op != "DELETE" || cdcOf.isDefined && cdfOn(snap.properties)) _ => None
-          else FileStats.partitionTrueEvaluator(spark, parsed, snap,
-              sentinelIsNull = log != ForeignDeltaCommitLog)
+          else FileStats.partitionTrueEvaluator(spark, parsed, snap)
             .getOrElse((_: TxLog.AddFile) => None)
         val dropped = Seq.newBuilder[TxLog.AddFile]
         val toRewrite = Seq.newBuilder[TxLog.AddFile]
@@ -1055,30 +1050,16 @@ final class TxTable(val spark: SparkSession, val location: String,
     } }
   }
 
-  /** Filtered scan with manifest-level data skipping: files whose
-    * partition values or min/max column stats provably cannot satisfy the
-    * predicate are dropped before the parquet reader ever sees them
-    * (Delta-style file pruning on top of Spark's own row-group pruning),
-    * then — when the table carries a bloom file-skipping index — files
-    * whose per-file Bloom filter PROVES an equality/IN key absent are
-    * subtracted too (BloomIndex). The full predicate is still applied to
-    * the surviving rows.
+  /** Filtered scan: `toDF.filter(predicate)`. Manifest-level data
+    * skipping (partition values, min/max stats, the bloom file-skipping
+    * index) happens in the read's LogFileIndex, as for any filter.
     */
-  def scan(predicate: String): DataFrame = {
-    val snap = snapshot
-    val surviving = BloomIndex.prune(spark, location, snap,
-      FileStats.survivingFiles(spark, snap, predicate), predicate)
-    dfFor(snap.copy(files = surviving)).filter(expr(predicate))
-  }
+  def scan(predicate: String): DataFrame = toDF.filter(expr(predicate))
 
   /** Number of files the manifest-level pruner (stats + bloom index)
     * would read for a predicate (for tests/inspection).
     */
-  def filesAfterPruning(predicate: String): Int = {
-    val snap = snapshot
-    BloomIndex.prune(spark, location, snap,
-      FileStats.survivingFiles(spark, snap, predicate), predicate).size
-  }
+  def filesAfterPruning(predicate: String): Int = LogFileIndex.filesScanned(scan(predicate))
 
   /** O(metadata) row count: Σ per-file record counts − Σ deletion-vector
     * cardinalities, straight from the log — at 100 TB a `count(*)` must

@@ -11,6 +11,11 @@ object GraftColumnBridge {
   def toExpr(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toCol(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** `schema` with every field, element and value nullable — the shape
+    * Spark gives a file source's user-specified schema. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

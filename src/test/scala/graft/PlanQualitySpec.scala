@@ -197,6 +197,50 @@ class PlanQualitySpec extends AnyFunSuite {
       s"dying-rows semi-join must extract hash keys\n$ch")
   }
 
+  test("log-backed reads prune files for toDF, SQL and scan on all three logs") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions.col
+    object Plans extends AdaptiveSparkPlanHelper
+    val client = new graft.client.LakehouseClient(spark)
+    client.createCatalog("pqprune")
+    client.createSchema("pqprune", "s")
+    // 10 files with disjoint id ranges: file i holds ids [100i, 100i + 99]
+    val data = spark.range(0L, 1000L, 1L, 10).toDF("id")
+      .withColumn("v", col("id") * 2)
+    /** Files the executed scans read, from their numFiles metrics. */
+    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+      assert(df.collect().map(_.getLong(0)).toSeq == Seq(150L))
+      val plan = df.queryExecution.executedPlan
+      assert(!plan.toString.contains("InMemoryFileIndex"), s"log read listed files\n$plan")
+      val scans = Plans.collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty, s"no file scan\n$plan")
+      scans.map(_.metrics("numFiles").value).sum
+    }
+    Seq(
+      ("native", graft.catalog.FileType.DELTA,
+        (loc: String) => graft.tables.TxTable.forLocation(spark, loc)),
+      ("delta", graft.catalog.FileType.DELTA,
+        (loc: String) => graft.tables.TxTable.forForeignDelta(spark, loc)),
+      ("iceberg", graft.catalog.FileType.ICEBERG,
+        (loc: String) => graft.tables.TxTable.forIceberg(spark, loc))
+    ).foreach { case (name, fileType, open) =>
+      val loc = graft.TestSpark.tmpDir(s"pq-prune-$name") + "/t"
+      val t = open(loc)
+      t.create(data)
+      assert(t.snapshot.files.size == 10, name)
+      client.registerAsTable("pqprune", "s", name, fileType, loc)
+      val reads = Seq(
+        "toDF" -> t.toDF.filter("id = 150").select("id"),
+        "SQL" -> spark.sql(s"SELECT id FROM pqprune.s.$name WHERE id = 150"),
+        "scan" -> t.scan("id = 150").select("id"))
+      reads.foreach { case (how, df) =>
+        assert(filesRead(df) == 1L, s"$name $how read more than the one matching file")
+      }
+      assert(t.filesAfterPruning("id = 150") == 1, name)
+    }
+  }
+
   test("dedup-index batch filtering is equi-join only: no cartesian, no nested loop") {
     import spark.implicits._
     val loc = graft.TestSpark.tmpDir("pq-dedupidx")

@@ -54,12 +54,18 @@ class CloneSpec extends AnyFunSuite {
   test("native shallow clone of a hive-partitioned table keeps partition values and pruning") {
     val src = TestSpark.tmpDir("clone-part-src")
     val t = new TxTable(spark, src)
-    t.create(Seq((0L, "x", "p1"), (1L, "y", "p2")).toDF("id", "tag", "pt"),
-      partitionColumns = Seq("pt"))
+    // values hive paths escape, and a null partition, come back exactly
+    val rows = Seq((0L, "x", "p1"), (1L, "y", "p2"), (2L, "z", "a b"),
+      (3L, "w", "x%y"), (4L, "v", "a=b"), (5L, "u", null))
+    t.create(rows.toDF("id", "tag", "pt"), partitionColumns = Seq("pt"))
     val c = t.cloneTo(TestSpark.tmpDir("clone-part-tgt"))
     assert(c.toDF.orderBy("id").collect().map(r => (r.getLong(0), r.getString(2))).toSeq ==
-      Seq((0L, "p1"), (1L, "p2")))
+      rows.map(r => (r._1, r._3)))
     assert(ids(c.toDF.filter("pt = 'p2'")) == Seq(1L))
+    assert(ids(c.toDF.filter("pt = 'a b'")) == Seq(2L))
+    assert(ids(c.toDF.filter("pt = 'x%y'")) == Seq(3L))
+    assert(ids(c.toDF.filter("pt = 'a=b'")) == Seq(4L))
+    assert(ids(c.toDF.filter("pt IS NULL")) == Seq(5L))
   }
 
   test("native deep clone is self-contained: survives deleting the source") {
@@ -158,12 +164,12 @@ class CloneSpec extends AnyFunSuite {
     val c = t.cloneTo(TestSpark.tmpDir("clone-prune-tgt"), shallow = true)
     val filtered = c.toDF.filter("pt = 'p2'")
     assert(filtered.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    // with few tuples the read is a union of literal-valued branches:
-    // Catalyst constant-folds the filter and DROPS the other partitions'
-    // scans — the plan must reference only p2's file
+    // the partition filter prunes in the read's file index: the plan
+    // references only p2's file
     val scanned = filtered.queryExecution.executedPlan.toString
     assert(!scanned.contains("pt=p1") && !scanned.contains("pt=p3"),
       s"non-matching partitions still scanned\n${scanned.take(3000)}")
+    assert(c.filesAfterPruning("pt = 'p2'") == 1)
   }
 
   test("shallow-clone paths are fully qualified URIs (scheme survives)") {

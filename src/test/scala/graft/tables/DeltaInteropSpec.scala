@@ -119,14 +119,14 @@ class DeltaInteropSpec extends AnyFunSuite {
     val data = StructType(Seq(StructField("id", LongType)))
     val dfa = spark.createDataFrame(java.util.List.of(Row(1L), Row(2L)), data)
     val dfb = spark.createDataFrame(java.util.List.of(Row(3L)), data)
-    oneParquetFile(dfa, loc, "file a.parquet") // space → %20 in the log
-    oneParquetFile(dfb, loc, "fileb.parquet")
+    val szA = oneParquetFile(dfa, loc, "file a.parquet") // space → %20 in the log
+    val szB = oneParquetFile(dfb, loc, "fileb.parquet")
     val schemaJ = StructType(Seq(StructField("id", LongType), StructField("p", StringType))).json
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       metaAction(schemaJ, Seq("p")),
-      """{"add":{"path":"file%20a.parquet","partitionValues":{"p":"x"},"size":1,"modificationTime":1,"dataChange":true}}""",
-      """{"add":{"path":"fileb.parquet","partitionValues":{"p":"y"},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"file%20a.parquet","partitionValues":{"p":"x"},"size":$szA,"modificationTime":1,"dataChange":true}}""",
+      s"""{"add":{"path":"fileb.parquet","partitionValues":{"p":"y"},"size":$szB,"modificationTime":1,"dataChange":true}}"""))
     val out = DeltaLog.toDF(spark, loc)
     assert(out.schema.fieldNames.toSeq == Seq("id", "p"))
     assert(out.filter(col("p") === "x").orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
@@ -139,29 +139,29 @@ class DeltaInteropSpec extends AnyFunSuite {
     // as the example (deletionVectors, typeWidening, variantType) ended up
     // implemented and broke the fixture
     val loc = TestSpark.tmpDir("delta-gate")
-    oneParquetFile(df1, loc, "f.parquet")
+    val szF = oneParquetFile(df1, loc, "f.parquet")
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["someFutureFeature"]}}""",
       metaAction(),
-      """{"add":{"path":"f.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f.parquet","partitionValues":{},"size":$szF,"modificationTime":1,"dataChange":true}}"""))
     intercept[UnsupportedOperationError](DeltaLog.snapshot(spark, loc))
 
     val loc2 = TestSpark.tmpDir("delta-gate2")
-    oneParquetFile(df1, loc2, "f.parquet")
+    val szF2 = oneParquetFile(df1, loc2, "f.parquet")
     writeLine(loc2, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"]}}""",
       metaAction(),
-      """{"add":{"path":"f.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f.parquet","partitionValues":{},"size":$szF2,"modificationTime":1,"dataChange":true}}"""))
     assert(DeltaLog.toDF(spark, loc2).count() == 4)
 
     // name-mode column mapping with a mapping-free schema reads fine
     // (full mapped-read coverage in the dedicated column-mapping test)
     val loc3 = TestSpark.tmpDir("delta-gate3")
-    oneParquetFile(df1, loc3, "f.parquet")
+    val szF3 = oneParquetFile(df1, loc3, "f.parquet")
     writeLine(loc3, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       metaAction(conf = Map("delta.columnMapping.mode" -> "name")),
-      """{"add":{"path":"f.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f.parquet","partitionValues":{},"size":$szF3,"modificationTime":1,"dataChange":true}}"""))
     assert(DeltaLog.toDF(spark, loc3).count() == 4)
   }
 
@@ -307,11 +307,11 @@ class DeltaInteropSpec extends AnyFunSuite {
 
   test("checkpoints preserve the table's real protocol and metaData id") {
     val loc = TestSpark.tmpDir("delta-proto-ckpt")
-    oneParquetFile(df1, loc, "f0.parquet")
+    val szF0 = oneParquetFile(df1, loc, "f0.parquet")
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["timestampNtz"],"writerFeatures":["timestampNtz"]}}""",
       metaAction().replace("\"id\":\"fixture\"", "\"id\":\"stable-table-id\""),
-      """{"add":{"path":"f0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$szF0,"modificationTime":1,"dataChange":true}}"""))
     (1 to 10).foreach(_ => DeltaLogWriter.append(spark, loc, df2)) // checkpoint at v10
     // replay purely from the checkpoint: protocol + id must survive
     val log = Paths.get(loc, "_delta_log")
@@ -326,19 +326,19 @@ class DeltaInteropSpec extends AnyFunSuite {
 
   test("writer gating: unsupported writer features refused; append-only tables reject overwrite") {
     val loc = TestSpark.tmpDir("delta-wgate")
-    oneParquetFile(df1, loc, "f0.parquet")
+    val szF0 = oneParquetFile(df1, loc, "f0.parquet")
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["icebergCompatV2"]}}""",
       metaAction(),
-      """{"add":{"path":"f0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$szF0,"modificationTime":1,"dataChange":true}}"""))
     intercept[UnsupportedOperationError] { DeltaLogWriter.append(spark, loc, df2) }
 
     val loc2 = TestSpark.tmpDir("delta-wgate2")
-    oneParquetFile(df1, loc2, "f0.parquet")
+    val szF02 = oneParquetFile(df1, loc2, "f0.parquet")
     writeLine(loc2, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       metaAction(conf = Map("delta.appendOnly" -> "true")),
-      """{"add":{"path":"f0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$szF02,"modificationTime":1,"dataChange":true}}"""))
     DeltaLogWriter.append(spark, loc2, df2) // appends still allowed
     intercept[UnsupportedOperationError] { DeltaLogWriter.overwrite(spark, loc2, df1) }
   }
@@ -365,12 +365,12 @@ class DeltaInteropSpec extends AnyFunSuite {
     // version. Deterministic seed -> reproducible failures.
     val rnd = new scala.util.Random(42)
     val loc = TestSpark.tmpDir("delta-model")
-    oneParquetFile(df1, loc, "seed.parquet")
+    val szSeed = oneParquetFile(df1, loc, "seed.parquet")
     val model = scala.collection.mutable.LinkedHashMap[String, Long]("seed.parquet" -> 1L)
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       metaAction(),
-      """{"add":{"path":"seed.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"seed.parquet","partitionValues":{},"size":$szSeed,"modificationTime":1,"dataChange":true}}"""))
     var version = 0L
     val history = scala.collection.mutable.Map[Long, Set[String]](0L -> model.keySet.toSet)
     (1 to 40).foreach { i =>
@@ -507,13 +507,13 @@ class DeltaInteropSpec extends AnyFunSuite {
     val locP = TestSpark.tmpDir("delta-cmap-part")
     val p1 = spark.createDataFrame(java.util.List.of(Row(1L), Row(2L)), dataOnly)
     val p2 = spark.createDataFrame(java.util.List.of(Row(9L)), dataOnly)
-    oneParquetFile(p1, locP, "col-ppp=x/f1.parquet")
-    oneParquetFile(p2, locP, "col-ppp=y/f2.parquet")
+    val szP1 = oneParquetFile(p1, locP, "col-ppp=x/f1.parquet")
+    val szP2 = oneParquetFile(p2, locP, "col-ppp=y/f2.parquet")
     writeLine(locP, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       metaAction(logicalP.json, Seq("p"), Map("delta.columnMapping.mode" -> "name")),
-      s"""{"add":{"path":"col-ppp=x/f1.parquet","partitionValues":{"col-ppp":"x"},"size":1,"modificationTime":1,"dataChange":true}}""",
-      s"""{"add":{"path":"col-ppp=y/f2.parquet","partitionValues":{"col-ppp":"y"},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"col-ppp=x/f1.parquet","partitionValues":{"col-ppp":"x"},"size":$szP1,"modificationTime":1,"dataChange":true}}""",
+      s"""{"add":{"path":"col-ppp=y/f2.parquet","partitionValues":{"col-ppp":"y"},"size":$szP2,"modificationTime":1,"dataChange":true}}"""))
     val outP = DeltaLog.toDF(spark, locP)
     assert(outP.schema.fieldNames.toSeq == Seq("id", "p"))
     assert(outP.filter(col("p") === "x").orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
@@ -539,12 +539,12 @@ class DeltaInteropSpec extends AnyFunSuite {
     val locId = TestSpark.tmpDir("delta-cmap-id")
     val idDf = spark.createDataFrame(
       java.util.List.of(Row(10L, "ten"), Row(20L, "twenty")), fileSchema)
-    oneParquetFile(idDf, locId, "f1.parquet")
+    val szId = oneParquetFile(idDf, locId, "f1.parquet")
     writeLine(locId, "00000000000000000000.json", Seq(
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       metaAction(logicalId.json, Seq.empty, Map("delta.columnMapping.mode" -> "id",
         "delta.columnMapping.maxColumnId" -> "2")),
-      """{"add":{"path":"f1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f1.parquet","partitionValues":{},"size":$szId,"modificationTime":1,"dataChange":true}}"""))
     val outId = DeltaLog.toDF(spark, locId)
     assert(outId.schema.fieldNames.toSeq == Seq("id", "v"))
     assert(outId.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==

@@ -161,24 +161,24 @@ class ForeignDeltaWriteSpec extends AnyFunSuite {
     val schemaJ = StructType(Seq(StructField("id", LongType))).json
     val metaJ = org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(org.json4s.JString(schemaJ)))
-    def one(df: DataFrame, name: String): Unit = {
+    def one(df: DataFrame, name: String): Long = {
       val tmp = TestSpark.tmpDir("fd-ts-stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[java.nio.file.Path])
         .find(_.getFileName.toString.endsWith(".parquet")).get
-      Files.move(part, Paths.get(loc, name))
+      Files.size(Files.move(part, Paths.get(loc, name)))
     }
     val data = StructType(Seq(StructField("id", LongType)))
-    one(spark.createDataFrame(java.util.List.of(Row(1L)), data), "f0.parquet")
-    one(spark.createDataFrame(java.util.List.of(Row(2L)), data), "f1.parquet")
+    val sz0 = one(spark.createDataFrame(java.util.List.of(Row(1L)), data), "f0.parquet")
+    val sz1 = one(spark.createDataFrame(java.util.List.of(Row(2L)), data), "f1.parquet")
     writeLine(loc, "00000000000000000000.json", Seq(
       """{"commitInfo":{"timestamp":1000,"operation":"WRITE"}}""",
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"id":"fx","format":{"provider":"parquet","options":{}},"schemaString":$metaJ,"partitionColumns":[],"configuration":{}}}""",
-      """{"add":{"path":"f0.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f0.parquet","partitionValues":{},"size":$sz0,"modificationTime":1,"dataChange":true}}"""))
     writeLine(loc, "00000000000000000001.json", Seq(
       """{"commitInfo":{"timestamp":5000,"operation":"WRITE"}}""",
-      """{"add":{"path":"f1.parquet","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+      s"""{"add":{"path":"f1.parquet","partitionValues":{},"size":$sz1,"modificationTime":1,"dataChange":true}}"""))
 
     assert(DeltaLog.versionAtTimestamp(spark, loc, 1000L) == 0L)
     assert(DeltaLog.versionAtTimestamp(spark, loc, 4999L) == 0L)

@@ -149,6 +149,18 @@ class TxTableSpec extends AnyFunSuite {
     assert(t.toDF.filter("p = 1").count() == 3)
   }
 
+  test("partition values read back exactly from the log: escaped and null values") {
+    val t = new TxTable(spark, TestSpark.tmpDir("tx"))
+    val rows = Seq((0L, "p1"), (1L, "a b"), (2L, "x%y"), (3L, "a=b"), (4L, null))
+    t.create(rows.toDF("id", "p").repartition(1), partitionColumns = Seq("p"))
+    assert(t.toDF.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq == rows)
+    rows.foreach { case (id, p) =>
+      val pred = if (p == null) "p IS NULL" else s"p = '$p'"
+      assert(t.toDF.filter(pred).collect().map(_.getLong(0)).toSeq == Seq(id), pred)
+      assert(t.filesAfterPruning(pred) == 1, pred)
+    }
+  }
+
   test("dynamic partition overwrite replaces exactly the partitions present in new data") {
     val loc = TestSpark.tmpDir("tx")
     val t = new TxTable(spark, loc)
