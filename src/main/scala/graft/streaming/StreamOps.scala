@@ -2,11 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.queries.Tables
 import graft.tables.TxTable
 
 /** Structured Streaming operators over event streams — the streaming face
@@ -41,16 +44,17 @@ object StreamOps {
     * column has shipped as both epoch-ns long and TIMESTAMP(MICROS) across
     * fixture generations (see Tables.events); a streaming schema is fixed up
     * front, so sniff the already-dropped files once at stream construction
-    * (a batch-metadata read — no data scan) and declare the matching schema.
-    * Directories with no files yet default to the ns-long shape.
+    * (through Tables' memoized schema helper — no data scan) and declare
+    * the matching schema. Directories with no files yet default to the
+    * ns-long shape.
     */
   def eventFileStream(spark: SparkSession, dir: String): DataFrame = {
     // declare the SNIFFED type itself — hardcoding e.g. TimestampNTZType
     // would make the reader reject fixtures whose µs column is
     // UTC-adjusted (inferred TimestampType)
     val tsType: DataType =
-      try spark.read.parquet(dir).schema("ts").dataType
-      catch { case _: Throwable => LongType }
+      try Tables.schemaOf(spark, dir)("ts").dataType
+      catch { case NonFatal(_) => LongType }
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),

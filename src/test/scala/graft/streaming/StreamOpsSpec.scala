@@ -97,6 +97,22 @@ class StreamOpsSpec extends AnyFunSuite {
       Seq("click", "view"))
   }
 
+  test("eventFileStream sniffs ts from the current drops: none yet, ns longs, then µs timestamps") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{LongType, TimestampType}
+    val srcDir = TestSpark.tmpDir("stream-sniff")
+    def tsType = StreamOps.eventFileStream(spark, srcDir + "/*").schema("ts").dataType
+    assert(tsType == LongType) // no drop yet: the ns-long default, not remembered
+    val drop = Seq((1L, 1000000000L * 60, 10L, "click", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    drop.write.parquet(srcDir + "/b1")
+    assert(tsType == LongType)
+    // the drop is rewritten with µs timestamps: sniffed again, not served stale
+    drop.withColumn("ts", timestamp_micros((col("ts") / 1000).cast("long")))
+      .write.mode("overwrite").parquet(srcDir + "/b1")
+    assert(tsType == TimestampType)
+  }
+
   test("TxTableSource: readStream over the transaction log delivers commits as micro-batches") {
     import spark.implicits._
     val loc = TestSpark.tmpDir("txsrc") + "/t"

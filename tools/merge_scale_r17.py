@@ -67,7 +67,8 @@ record = {
     "metric": "scale_check_x10",
     "protocol": (
         "Recorded at the round-17 FINAL OPTIMIZED HEAD (after the "
-        "OPTIMIZATION_r17.md changes: exact prefix-filtered Jaccard pair "
+        "round-17 commits 62932cf, 7040f84 and a4912c3: exact "
+        "prefix-filtered Jaccard pair "
         "join behind q99/q100, redundant pair-dedup exchanges removed from "
         "the minhash/simhash/dedup-index paths, fused native span-cut "
         "generator for q92, embedding-array-free dedup exchanges, one "
