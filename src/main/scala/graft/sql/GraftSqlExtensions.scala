@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession, Dataset => ClassicDataset}
 
+import scala.util.control.NonFatal
+
 import graft.client.LakehouseClient
 
 /** SQL integration for 3-level names: resolves
@@ -275,12 +277,11 @@ object GraftSqlExtensions {
         // `VERSION AS OF <latest>` (the common "pin what I see" shape)
         // serves snapshot AND plan from the cache; genuine history
         // replays and builds fresh
-        val plan = graft.tables.SnapshotCache.dfAt(session, loc, v)
-          .queryExecution.analyzed
-        // time-traveled COUNT(*)/MIN/MAX are metadata-only too, pinned at v
-        plan.setTagValue(GraftSqlExtensions.ExactCountTag,
-          () => GraftSqlExtensions.exactRowCount(session, loc, Some(v)))
-        plan.setTagValue(GraftSqlExtensions.StatsRefTag, (loc, Some(v)))
+        val (snap, df) = graft.tables.SnapshotCache.dfAt(session, loc, v)
+        val plan = df.queryExecution.analyzed
+        // time-traveled aggregates are metadata-only too, served from
+        // the snapshot at v this read was built on
+        plan.setTagValue(GraftSqlExtensions.ReadSnapshotTag, (loc, snap))
         Some(plan)
       } catch {
         case _: graft.catalog.DoesNotExistError => None
@@ -293,23 +294,18 @@ object GraftSqlExtensions {
         if ((info.fileType == FileType.DELTA || info.fileType == FileType.ICEBERG)
             && info.storageLocation.isDefined) {
           // transactional formats: build the read PINNED at the current
-          // version and tag the plan with a deferred count AT THAT
-          // VERSION — a DataFrame held across a later commit must keep
-          // answering from the snapshot its file list was planned
-          // against (df.count() and df.collect() have to agree), exactly
-          // like the time-travel path below. Tagging a latest-version
-          // closure here would re-resolve at count() time and break
-          // snapshot consistency.
+          // snapshot and tag the plan with THAT snapshot instance — a
+          // DataFrame held across a later commit must keep answering
+          // from the snapshot its file list was planned against
+          // (df.count() and df.collect() have to agree), exactly like
+          // the time-travel path above
           val loc = graft.io.TableIO.normalize(info.storageLocation.get)
-          // cross-query cached: an unchanged table resolves its pinned
-          // version AND reuses its constructed read plan — no log
-          // replay, no O(files) plan rebuild per query
+          // cross-query cached: an unchanged table resolves its snapshot
+          // AND reuses its constructed read plan — no log replay, no
+          // O(files) plan rebuild per query
           val (_, snap, df) = graft.tables.SnapshotCache.latestDF(session, loc)
-          val v = snap.version
           val plan = df.queryExecution.analyzed
-          plan.setTagValue(GraftSqlExtensions.ExactCountTag,
-            () => GraftSqlExtensions.exactRowCount(session, loc, Some(v)))
-          plan.setTagValue(GraftSqlExtensions.StatsRefTag, (loc, Some(v)))
+          plan.setTagValue(GraftSqlExtensions.ReadSnapshotTag, (loc, snap))
           Some(plan)
         } else Some(client.readTable(cat, sch, tbl).queryExecution.analyzed)
       } catch {
@@ -317,164 +313,52 @@ object GraftSqlExtensions {
       }
   }
 
-  /** Deferred exact-count tag left by ResolveGraftRelations on the read
-    * plans of transactional catalog tables.
+  /** (location, snapshot) of the read a ResolveGraftRelations plan was
+    * built on — the exact instance its LogFileIndex lists. Every
+    * MetadataOnlyCount serve answers from this snapshot, so a held
+    * DataFrame or a time-travel read counts what its scan would read,
+    * and all aggregates of one SELECT answer from ONE snapshot without
+    * a second lookup. Tags ride the analyzed relation node only: a
+    * DataFrame-API read carries none and is never served.
     */
-  private[sql] val ExactCountTag =
-    org.apache.spark.sql.catalyst.trees.TreeNodeTag[() => Long]("graft.exactRowCount")
-
-  /** (location, pinned version) of the snapshot a tagged read plan was
-    * built from — the handle MetadataOnlyCount's MIN/MAX arm resolves
-    * file stats through.
-    */
-  private[sql] val StatsRefTag =
-    org.apache.spark.sql.catalyst.trees.TreeNodeTag[(String, Option[Long])]("graft.statsRef")
-
-  /** Per-rewrite-pass memo of `(location, pinned version) → (table
-    * handle, snapshot)`. Every stamped serve resolves its snapshot
-    * through [[resolveTableSnapshot]]; within one [[withSnapshotMemo]]
-    * scope (one rule application) the log is replayed ONCE per table,
-    * not once per aggregate — a dashboard `SELECT` with six stamped
-    * aggregates over a 100k-file table was doing six snapshot loads and
-    * ~600k path-hashes at plan time. The memo is THREAD-LOCAL and lives
-    * only for the duration of one rule application: caching any longer
-    * would serve a pre-DML snapshot to a post-DML query — stale results,
-    * not a perf bug. (All aggregates of one SELECT also now provably
-    * read the SAME snapshot even if a concurrent writer commits
-    * mid-rewrite.)
-    */
-  private val snapMemo = new ThreadLocal[scala.collection.mutable.HashMap[
-    (String, Option[Long]), Option[(graft.tables.TxTable, graft.tables.TxLog.Snapshot)]]]
-
-  /** Genuine (non-memoized) snapshot loads — test-visible so a spec can
-    * pin "a 6-aggregate SELECT resolves its snapshot once". */
-  private[sql] val snapshotLoadCount = new java.util.concurrent.atomic.AtomicLong
-
-  private[sql] def withSnapshotMemo[T](f: => T): T = {
-    val prev = snapMemo.get()
-    snapMemo.set(new scala.collection.mutable.HashMap)
-    try f finally { if (prev == null) snapMemo.remove() else snapMemo.set(prev) }
-  }
-
-  private[sql] def resolveTableSnapshot(session: ClassicSparkSession,
-      loc: String, version: Option[Long])
-      : Option[(graft.tables.TxTable, graft.tables.TxLog.Snapshot)] = {
-    def load(): Option[(graft.tables.TxTable, graft.tables.TxLog.Snapshot)] =
-      try {
-        snapshotLoadCount.incrementAndGet()
-        // through the cross-QUERY SnapshotCache: an unchanged table costs
-        // one log-dir signature probe here, not a full log replay. The
-        // cached snapshot is the RAW one: a sidecar-stored partition
-        // layer is NOT inlined — table-wide serves (COUNT(*), SUM, NDV,
-        // AVG, percentile: all inline properties or the file list) must
-        // not pay a multi-MB sidecar read they never look at. The one
-        // consumer of per-tuple cells (survivingTuples) layers its own
-        // copy, through the parsed-sidecar cache.
-        Some(graft.tables.SnapshotCache.at(session, loc, version))
-      } catch { case _: Throwable => None }
-    val memo = snapMemo.get()
-    if (memo == null) load()
-    else memo.getOrElseUpdate((loc, version), load())
-  }
-
-  private[sql] def exactRowCount(session: ClassicSparkSession, loc: String,
-      version: Option[Long] = None): Long =
-    try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return -1L)
-      if (snap.files.exists(_.rows < 0)) -1L
-      else snap.files.iterator.map(f =>
-        f.rows - f.deletionVector.map(_.cardinality).getOrElse(0L)).sum
-    } catch { case _: Throwable => -1L }
-
-  /** Exact ungrouped MIN/MAX of `colName` from per-file log stats — or
-    * None when the log cannot PROVE the answer, in which case the plan
-    * falls back to the scan (always safe). Provable requires, per file:
-    * a recorded min/max (or exact partition value) of an
-    * exactly-representable ordering type (integral, date, timestamp —
-    * see FileStats.orderedStatValue for why floats and strings bail),
-    * OR a null count proving the column is all-null in that file; plus
-    * NO live deletion vector anywhere (a DV row could be the extreme)
-    * and known row counts. An empty or all-null column answers SQL NULL
-    * (Some(null)).
-    */
-  private[sql] def exactMinMax(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String, isMin: Boolean): Option[Any] =
-    try {
-      val (t, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-      val field = snap.schema.fields.find(_.name == colName).getOrElse(return None)
-      if (snap.files.exists(_.deletionVector.exists(_.cardinality > 0))) return None
-      val isPart = snap.partitionColumns.contains(colName)
-      var acc: Option[Long] = None
-      snap.files.foreach { f =>
-        if (f.rows != 0L) {
-          if (f.rows < 0L) return None
-          // a NULL partition value (JSON null or the hive path sentinel
-          // `__HIVE_DEFAULT_PARTITION__`) proves the partition column
-          // all-null in this file — ignorable without a null count
-          if (isPart && rawPartValue(f, colName).contains(null)) ()
-          else {
-          val stat =
-            if (isPart) rawPartValue(f, colName)
-            else (if (isMin) f.minValues else f.maxValues).flatMap(_.get(colName))
-          stat.filter(_ != null)
-            .flatMap(s => graft.tables.FileStats.orderedStatValue(field.dataType, s)) match {
-            case Some(v) =>
-              acc = Some(acc.fold(v)(a => if (isMin) math.min(a, v) else math.max(a, v)))
-            case None =>
-              // a file without a usable extreme is ignorable ONLY when
-              // its null count proves the column holds no values there
-              if (!f.nullCounts.flatMap(_.get(colName)).contains(f.rows)) return None
-          }
-          }
-        }
-      }
-      Some(acc.map(v =>
-        graft.tables.FileStats.orderedValueToCatalyst(field.dataType, v)).orNull)
-    } catch { case _: Throwable => None }
+  private[sql] val ReadSnapshotTag = org.apache.spark.sql.catalyst.trees
+    .TreeNodeTag[(String, graft.tables.TxLog.Snapshot)]("graft.readSnapshot")
 
   /** ANALYZE-stamped exact MIN/MAX while the fingerprint is fresh —
-    * the fallback when [[exactMinMax]] bails (strings truncate in
-    * footer stats, floats have NaN/-0.0 hazards, live DVs hide
-    * extremes — but the ANALYZE scan computed the TRUE extreme with
-    * Spark's own ordering, and appends fold it forward exactly).
-    * Outer None = not servable; inner null = SQL NULL. */
-  private[sql] def statsMinMax(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String, isMin: Boolean): Option[Any] =
-    try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-      graft.tables.ColumnStats.currentMinMax(snap, colName, isMin).map(_.orNull)
-    } catch { case _: Throwable => None }
+    * the fallback when the per-file extremes of [[exactGroupedAgg]]
+    * bail (strings truncate in footer stats, floats have NaN/-0.0
+    * hazards, live DVs hide extremes — but the ANALYZE scan computed
+    * the TRUE extreme with Spark's own ordering, and appends fold it
+    * forward exactly). Outer None = not servable; inner null = SQL NULL. */
+  private[sql] def statsMinMax(snap: graft.tables.TxLog.Snapshot,
+      colName: String, isMin: Boolean): Option[Any] =
+    try graft.tables.ColumnStats.currentMinMax(snap, colName, isMin).map(_.orNull)
+    catch { case NonFatal(_) => None }
 
   /** ANALYZE-time NDV of `colName` IF the stamped stats still describe
     * the snapshot (ColumnStats fingerprint match), else None → scan.
     */
-  private[sql] def statsNdv(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String): Option[Any] =
-    try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-      graft.tables.ColumnStats.currentNdv(snap, colName).map(identity[Any])
-    } catch { case _: Throwable => None }
+  private[sql] def statsNdv(snap: graft.tables.TxLog.Snapshot,
+      colName: String): Option[Any] =
+    try graft.tables.ColumnStats.currentNdv(snap, colName).map(identity[Any])
+    catch { case NonFatal(_) => None }
 
   /** ANALYZE-time exact SUM while fresh: outer None = not servable
     * (stale/absent/overflow), inner None = SQL NULL. */
-  private[sql] def statsSum(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String): Option[Option[Long]] =
-    try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-      graft.tables.ColumnStats.currentSum(snap, colName)
-    } catch { case _: Throwable => None }
+  private[sql] def statsSum(snap: graft.tables.TxLog.Snapshot,
+      colName: String): Option[Option[Long]] =
+    try graft.tables.ColumnStats.currentSum(snap, colName)
+    catch { case NonFatal(_) => None }
 
   /** ANALYZE-stamped exact non-null `COUNT(col)` while fresh — the
     * route that keeps COUNT(col) scan-free when live deletion vectors
     * block the per-file null-count arithmetic (a MoR delete hides rows
     * whose nullness metadata can't see; the folded stamp counted them
     * exactly). */
-  private[sql] def statsCount(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String): Option[Any] =
-    try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-      graft.tables.ColumnStats.currentCount(snap, colName).map(identity[Any])
-    } catch { case _: Throwable => None }
+  private[sql] def statsCount(snap: graft.tables.TxLog.Snapshot,
+      colName: String): Option[Any] =
+    try graft.tables.ColumnStats.currentCount(snap, colName).map(identity[Any])
+    catch { case NonFatal(_) => None }
 
   /** `APPROX_COUNT_DISTINCT(col)` under an absorbed partition-only
     * WHERE, answered by exact-merging the ANALYZE-stamped PER-PARTITION
@@ -494,13 +378,14 @@ object GraftSqlExtensions {
     * stamped-layer serve below.
     */
   private def survivingTuples(session: ClassicSparkSession, loc: String,
-      version: Option[Long], preds: Seq[PartPred])
+      readSnap: graft.tables.TxLog.Snapshot, preds: Seq[PartPred])
       : Option[(graft.tables.TxLog.Snapshot, Seq[Seq[String]], Seq[Int])] = {
-    val (_, raw) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
-    // per-tuple cells may live in a sidecar: inline them HERE, the one
-    // place the layer is read (write-once files through the parsed
-    // cache, so repeated serves re-merge a map, not re-read a file)
-    val snap = graft.tables.ColumnStats.withLayer(session, loc, raw)
+    // the read's snapshot is the RAW one: a sidecar-stored partition
+    // layer is not inlined, so table-wide serves never pay a sidecar
+    // read. Inline the per-tuple cells HERE, the one place the layer is
+    // read (write-once files through the parsed cache, so repeated
+    // serves re-merge a map, not re-read a file)
+    val snap = graft.tables.ColumnStats.withLayer(session, loc, readSnap)
     val pcols = snap.partitionColumns
     if (pcols.isEmpty) return None
     if (!preds.forall(p => pcols.contains(p.col))) return None
@@ -584,13 +469,13 @@ object GraftSqlExtensions {
     * the surviving tuples' cells folded per [[stampedCellValue]].
     * None = unprovable → scan. */
   private[sql] def statsPartitionServe(session: ClassicSparkSession,
-      loc: String, version: Option[Long], out: StampedOut,
+      loc: String, readSnap: graft.tables.TxLog.Snapshot, out: StampedOut,
       preds: Seq[PartPred]): Option[Any] =
     try {
       val (snap, tuples, keep) =
-        survivingTuples(session, loc, version, preds).getOrElse(return None)
+        survivingTuples(session, loc, readSnap, preds).getOrElse(return None)
       stampedCellValue(snap, tuples, out, keep)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** A stamped-layer output `... GROUP BY pcol`: each group's surviving
     * tuples folded per [[stampedCellValue]] — the per-day dashboard
@@ -598,24 +483,23 @@ object GraftSqlExtensions {
     * (comparable with exactGroupedAgg's keys, so mixed exact+stamped
     * outputs join on them). None = unprovable → scan. */
   private[sql] def statsGroupedPartitionServe(session: ClassicSparkSession,
-      loc: String, version: Option[Long], out: StampedOut,
+      loc: String, readSnap: graft.tables.TxLog.Snapshot, out: StampedOut,
       groupCols: Seq[String], preds: Seq[PartPred]): Option[Map[Seq[Any], Any]] =
     try {
       val (snap, tuples, groups) =
-        groupedSurviving(session, loc, version, groupCols, preds).getOrElse(return None)
+        groupedSurviving(session, loc, readSnap, groupCols, preds).getOrElse(return None)
       Some(groups.map { case (k, idxs) =>
         k -> stampedCellValue(snap, tuples, out, idxs).getOrElse(return None)
       }.toMap)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** Exact `AVG(col)` from the table-wide stamped moments while fresh:
     * exact-BigInt sum ÷ non-null count, rounded once — the engine's own
     * davg determinism contract served as metadata. Some(null) = SQL
     * NULL (zero non-null values); None = scan. */
-  private[sql] def statsAvg(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String): Option[Any] =
+  private[sql] def statsAvg(snap: graft.tables.TxLog.Snapshot,
+      colName: String): Option[Any] =
     try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
       val cnt = graft.tables.ColumnStats.currentCount(snap, colName)
         .getOrElse(return None)
       if (cnt == 0L) return Some(null) // zero non-null values: SQL NULL
@@ -623,14 +507,13 @@ object GraftSqlExtensions {
         .getOrElse(return None)
         .map(s => java.lang.Double.valueOf(s.toDouble / cnt.toDouble): Any)
         .orElse(return None) // cnt>0 but sum "null": stamp out of shape
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** `VAR`/`STDDEV` forms of `(col)` from the table-wide stamped moments while
     * fresh (see [[momentValue]] for the SQL shape). None = scan. */
-  private[sql] def statsVar(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String, mk: MomentKind): Option[Any] =
+  private[sql] def statsVar(snap: graft.tables.TxLog.Snapshot,
+      colName: String, mk: MomentKind): Option[Any] =
     try {
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
       val cnt = graft.tables.ColumnStats.currentCount(snap, colName)
         .getOrElse(return None)
       if (cnt == 0L) return Some(null)
@@ -639,7 +522,7 @@ object GraftSqlExtensions {
       val q = graft.tables.ColumnStats.currentSumSqBig(snap, colName)
         .getOrElse(return None).getOrElse(return None)
       Some(momentValue(BigInt(cnt), s, q, mk))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** `APPROX_PERCENTILE(col, p[, accuracy])` from the ANALYZE-stamped
     * quantile sketch while fresh — served ONLY when the call's rank
@@ -650,18 +533,17 @@ object GraftSqlExtensions {
     * answer is the SAME GK summary Spark's own approx_percentile
     * builds, folded forward across appends by the same compress+merge
     * step its partial-aggregate tree runs. */
-  private[sql] def statsPercentile(session: ClassicSparkSession, loc: String,
-      version: Option[Long], colName: String, percentages: Array[Double],
+  private[sql] def statsPercentile(snap: graft.tables.TxLog.Snapshot,
+      colName: String, percentages: Array[Double],
       accuracy: Long): Option[Seq[Double]] =
     try {
       if (accuracy <= 0 || percentages.exists(p => p < 0.0 || p > 1.0)) return None
-      val (_, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
       val d = graft.tables.ColumnStats.currentQuantileDigest(snap, colName)
         .getOrElse(return None)
       if (1.0 / accuracy.toDouble < d.quantileSummaries.relativeError) return None
       if (graft.functions.QuantileDigest.count(d) == 0L) return Some(Seq.empty)
       Some(graft.functions.QuantileDigest.percentiles(d, percentages).toSeq)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** The percentile serve's doubles converted back to the matched
     * aggregate's RESULT representation (mirrors Spark's own
@@ -708,12 +590,12 @@ object GraftSqlExtensions {
     * value falls to the scan, consistent with [[exactGroupedAgg]].
     */
   private def groupedSurviving(session: ClassicSparkSession, loc: String,
-      version: Option[Long], groupCols: Seq[String], preds: Seq[PartPred])
+      readSnap: graft.tables.TxLog.Snapshot, groupCols: Seq[String], preds: Seq[PartPred])
       : Option[(graft.tables.TxLog.Snapshot, Seq[Seq[String]],
         scala.collection.mutable.LinkedHashMap[Seq[Any], Vector[Int]])] =
     try {
       val (snap, tuples, keepIdx) =
-        survivingTuples(session, loc, version, preds).getOrElse(return None)
+        survivingTuples(session, loc, readSnap, preds).getOrElse(return None)
       val pcols = snap.partitionColumns
       if (!groupCols.forall(pcols.contains)) return None
       val fieldType = snap.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -730,12 +612,12 @@ object GraftSqlExtensions {
         groups(key) = groups.getOrElse(key, Vector.empty) :+ i
       }
       Some((snap, tuples, groups))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** A partition-value STRING to the column's Catalyst-internal value.
     * Unlike min/max stats, partition values are exact (never truncated),
-    * so strings are convertible here even though exactMinMax excludes
-    * them; floats still bail (their partition-string round-trip is
+    * so strings are convertible here even though the per-file extremes
+    * exclude them; floats still bail (their partition-string round-trip is
     * writer-dependent).
     */
   private def partitionValueToCatalyst(dt: org.apache.spark.sql.types.DataType,
@@ -899,20 +781,24 @@ object GraftSqlExtensions {
     * from the LOG when every group key is a PARTITION column: files
     * already carry exact partition values, so the whole answer is one
     * grouping of the snapshot's file list — per group, counts are
-    * Σ(rows − DV cardinality) and extremes fold per-file stats under the
-    * same provability rules as [[exactMinMax]]. Returns one value row
-    * per partition group with ≥1 live row (SQL GROUP BY emits no row
-    * for a group whose every row is deleted), or None when anything is
+    * Σ(rows − DV cardinality) and extremes fold per-file stats. An
+    * extreme is provable when every file in scope has a recorded
+    * min/max (or exact partition value) of an exactly-representable
+    * ordering type (integral, date, timestamp — see
+    * FileStats.orderedStatValue for why floats and strings bail) or a
+    * null count proving the column all-null there. With no group keys
+    * (the ungrouped COUNT(*)/MIN/MAX shapes) it returns exactly ONE row,
+    * an empty or all-null scope answering SQL NULL; grouped, one value
+    * row per partition group with ≥1 live row (SQL GROUP BY emits no
+    * row for a group whose every row is deleted). None when anything is
     * unprovable — non-partition group key, missing/null partition
     * value, unknown row counts, any live DV while extremes are asked
     * for, a file without a usable extreme that isn't provably all-null.
     */
-  private[sql] def exactGroupedAgg(session: ClassicSparkSession, loc: String,
-      version: Option[Long], groupCols: Seq[String],
-      outputs: Seq[GroupedOut],
+  private[sql] def exactGroupedAgg(snap: graft.tables.TxLog.Snapshot,
+      groupCols: Seq[String], outputs: Seq[GroupedOut],
       partFilter: Seq[PartPred] = Seq.empty): Option[Seq[Seq[Any]]] =
     try {
-      val (t, snap) = resolveTableSnapshot(session, loc, version).getOrElse(return None)
       val partSet = snap.partitionColumns.toSet
       if (!groupCols.forall(partSet.contains)) return None
       val fieldType = snap.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -948,21 +834,6 @@ object GraftSqlExtensions {
       // an excluded partition is irrelevant
       if (needsExtremes &&
           inScope.exists(_.deletionVector.exists(_.cardinality > 0))) return None
-      val groups = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[String], scala.collection.mutable.ArrayBuffer[graft.tables.TxLog.AddFile]]
-      inScope.foreach { f =>
-        val key = groupCols.map { c =>
-          rawPartValue(f, c) match {
-            case Some(v) if v != null => v
-            // null (incl. the hive path sentinel) or missing group key:
-            // SQL would emit a NULL-keyed group — fall to scan rather
-            // than emit the sentinel string as a key
-            case _ => return None
-          }
-        }
-        groups.getOrElseUpdate(key,
-          scala.collection.mutable.ArrayBuffer.empty) += f
-      }
       // None = unprovable -> scan. Null-sensitive COUNT(col):
       // Σ(rows − nullCount); a partition column's nullness is decided
       // whole-file by its partition value.
@@ -1038,8 +909,8 @@ object GraftSqlExtensions {
           graft.tables.FileStats.orderedValueToCatalyst(dt, v)).orNull))
       }
       if (groupCols.isEmpty) {
-        // ungrouped-with-filter: SQL emits exactly ONE row even over an
-        // empty scope (COUNT 0, extremes NULL)
+        // ungrouped: SQL emits exactly ONE row even over an empty scope
+        // (COUNT 0, extremes NULL)
         val files = inScope
         val live = files.iterator.map(f =>
           f.rows - f.deletionVector.map(_.cardinality).getOrElse(0L)).sum
@@ -1054,6 +925,21 @@ object GraftSqlExtensions {
               .asInstanceOf[Option[Any]].orNull
         }
         return Some(Seq(row))
+      }
+      val groups = scala.collection.mutable.LinkedHashMap
+        .empty[Seq[String], scala.collection.mutable.ArrayBuffer[graft.tables.TxLog.AddFile]]
+      inScope.foreach { f =>
+        val key = groupCols.map { c =>
+          rawPartValue(f, c) match {
+            case Some(v) if v != null => v
+            // null (incl. the hive path sentinel) or missing group key:
+            // SQL would emit a NULL-keyed group — fall to scan rather
+            // than emit the sentinel string as a key
+            case _ => return None
+          }
+        }
+        groups.getOrElseUpdate(key,
+          scala.collection.mutable.ArrayBuffer.empty) += f
       }
       val rows = groups.iterator.flatMap { case (key, files) =>
         val live = files.iterator.map(f =>
@@ -1077,7 +963,7 @@ object GraftSqlExtensions {
         }
       }.toSeq
       Some(rows)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
 
   /** `SELECT COUNT(*), MIN(x), MAX(x) FROM cat.sch.t` answered from the
     * LOG — the metadata-only aggregates every lakehouse engine
@@ -1096,7 +982,9 @@ object GraftSqlExtensions {
     * per-file row counts minus deletion-vector cardinalities (the same
     * arithmetic DESCRIBE DETAIL reports, q140-oracled); extremes from
     * per-file min/max stats or exact partition values under the
-    * provability rules of exactMinMax. Anything unprovable (unknown
+    * provability rules of exactGroupedAgg. Every serve answers from the
+    * snapshot the tagged read was built on ([[ReadSnapshotTag]]).
+    * Anything unprovable (unknown
     * rows, live DVs, float/string extremes, missing stats without an
     * all-null proof) keeps the scan.
     */
@@ -1110,15 +998,19 @@ object GraftSqlExtensions {
       * (partition-only equality/IN — see [[partitionEqFilter]]); any
       * other node shape still bails.
       */
-    private def taggedNodeF(plan: LogicalPlan): Option[(LogicalPlan, Seq[Expression])] =
-      if (plan.getTagValue(GraftSqlExtensions.ExactCountTag).isDefined ||
-          plan.getTagValue(GraftSqlExtensions.StatsRefTag).isDefined) Some((plan, Nil))
-      else plan match {
-        case Project(_, child) => taggedNodeF(child)
-        case SubqueryAlias(_, child) => taggedNodeF(child)
-        case Filter(cond, child) =>
-          taggedNodeF(child).map { case (n, cs) => (n, splitAnd(cond) ++ cs) }
-        case _ => None
+    private def taggedNodeF(plan: LogicalPlan): Option[(LogicalPlan, String,
+        graft.tables.TxLog.Snapshot, Seq[Expression])] =
+      plan.getTagValue(GraftSqlExtensions.ReadSnapshotTag) match {
+        case Some((loc, snap)) => Some((plan, loc, snap, Nil))
+        case None => plan match {
+          case Project(_, child) => taggedNodeF(child)
+          case SubqueryAlias(_, child) => taggedNodeF(child)
+          case Filter(cond, child) =>
+            taggedNodeF(child).map { case (n, loc, snap, cs) =>
+              (n, loc, snap, splitAnd(cond) ++ cs)
+            }
+          case _ => None
+        }
       }
 
     private def splitAnd(e: Expression): Seq[Expression] = e match {
@@ -1170,7 +1062,7 @@ object GraftSqlExtensions {
           case l: Literal => Some(l)
           case _ if e.foldable && e.deterministic =>
             try Some(Literal.create(e.eval(null), e.dataType))
-            catch { case scala.util.control.NonFatal(_) => None }
+            catch { case NonFatal(_) => None }
           case _ => None
         }
       }
@@ -1431,21 +1323,14 @@ object GraftSqlExtensions {
       case _ => None
     }
 
-    // ONE snapshot resolution + fingerprint per (location, version) for
-    // the whole pass: every serve below shares the memo, so a
-    // six-aggregate SELECT plans with one log replay, and all its
-    // aggregates provably answer from the SAME snapshot
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      GraftSqlExtensions.withSnapshotMemo { applyInner(plan) }
-
-    private def applyInner(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
       case agg @ Aggregate(Nil, exprs, child, _)
           if exprs.nonEmpty && exprs.forall(e => isCountStar(e) ||
             minMaxOf(e).isDefined || countColOf(e).isDefined ||
             sumOf(e).isDefined || approxDistinctOf(e).isDefined ||
             avgOf(e).isDefined || momentOf(e).isDefined ||
             percentileOf(e).isDefined || countDistinctOf(e).isDefined) =>
-        taggedNodeF(child).flatMap { case (node, conjuncts) =>
+        taggedNodeF(child).flatMap { case (node, loc, snap, conjuncts) =>
           def ownAttr(a: AttributeReference): Boolean = node.outputSet.contains(a)
           if (conjuncts.nonEmpty) {
             // `SELECT COUNT(*), MIN(x) FROM t WHERE part = 'x'` — a
@@ -1493,155 +1378,107 @@ object GraftSqlExtensions {
                   })
                 }
               if (outs.exists(_.isEmpty)) None
-              else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                case (loc, v) =>
-                  def stampedValue(s: StampedOut): Option[Any] =
-                    GraftSqlExtensions.statsPartitionServe(session, loc, v, s, pf)
-                  def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
-                      : Option[Seq[Any]] = {
-                    val stampedOuts = flat.collect { case Right(s) => s }.distinct
-                    val pairs = stampedOuts.map(s => stampedValue(s).map(s -> _))
-                    if (pairs.exists(_.isEmpty)) return None
-                    val stamped = pairs.flatten.toMap
-                    val grouped = flat.collect { case Left(o) => o }
-                    val gv: Seq[Any] =
-                      if (grouped.isEmpty) Seq.empty
-                      else GraftSqlExtensions.exactGroupedAgg(session, loc, v, Nil,
-                        grouped, pf).flatMap(_.headOption).getOrElse(return None)
-                    val it = gv.iterator
-                    Some(flat.map {
-                      case Left(_) => it.next()
-                      case Right(s) => stamped(s)
-                    })
+              else {
+                def stampedValue(s: StampedOut): Option[Any] =
+                  GraftSqlExtensions.statsPartitionServe(session, loc, snap, s, pf)
+                def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
+                    : Option[Seq[Any]] = {
+                  val stampedOuts = flat.collect { case Right(s) => s }.distinct
+                  val pairs = stampedOuts.map(s => stampedValue(s).map(s -> _))
+                  if (pairs.exists(_.isEmpty)) return None
+                  val stamped = pairs.flatten.toMap
+                  val grouped = flat.collect { case Left(o) => o }
+                  val gv: Seq[Any] =
+                    if (grouped.isEmpty) Seq.empty
+                    else GraftSqlExtensions.exactGroupedAgg(snap, Nil, grouped, pf)
+                      .flatMap(_.headOption).getOrElse(return None)
+                  val it = gv.iterator
+                  Some(flat.map {
+                    case Left(_) => it.next()
+                    case Right(s) => stamped(s)
+                  })
+                }
+                val flat = outs.map(_.get)
+                attempt(flat).orElse {
+                  // the exact arm refused (a string/float extreme, a
+                  // live DV blocking per-file arithmetic): retry with
+                  // MIN/MAX and COUNT(col) moved to the stamped layer
+                  val flat2 = flat.map {
+                    case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
+                      Right(StampedMinMax(c, isMin)): Either[
+                        GraftSqlExtensions.GroupedOut, StampedOut]
+                    case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
+                      Right(GraftSqlExtensions.StampedCntCol(c)): Either[
+                        GraftSqlExtensions.GroupedOut, StampedOut]
+                    case other => other
                   }
-                  val flat = outs.map(_.get)
-                  attempt(flat).orElse {
-                    // the exact arm refused (a string/float extreme, a
-                    // live DV blocking per-file arithmetic): retry with
-                    // MIN/MAX and COUNT(col) moved to the stamped layer
-                    val flat2 = flat.map {
-                      case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
-                        Right(StampedMinMax(c, isMin)): Either[
-                          GraftSqlExtensions.GroupedOut, StampedOut]
-                      case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
-                        Right(GraftSqlExtensions.StampedCntCol(c)): Either[
-                          GraftSqlExtensions.GroupedOut, StampedOut]
-                      case other => other
-                    }
-                    if (flat2 == flat) None else attempt(flat2)
-                  }
+                  if (flat2 == flat) None else attempt(flat2)
+                }
               }.map { row =>
                 LocalRelation(agg.output,
                   Seq(org.apache.spark.sql.catalyst.InternalRow(row: _*)))
               }
             }
           } else {
-          val values: Seq[Option[Any]] = exprs.map { e =>
-            if (isCountStar(e))
-              node.getTagValue(GraftSqlExtensions.ExactCountTag)
-                .map(_()).filter(_ >= 0L).map(identity[Any])
-            else minMaxOf(e) match {
-              case Some((a, isMin)) =>
-                // by exprId: the attribute must be the relation's own
-                // column, not a Project alias over something computed
-                if (!ownAttr(a)) None
-                else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                  case (loc, v) =>
-                    // footer-stat extremes first; where they honestly
-                    // bail (strings/floats/DVs), a fresh ANALYZE stamp
-                    // still answers exactly
-                    GraftSqlExtensions.exactMinMax(session, loc, v, a.name, isMin)
-                      .orElse(GraftSqlExtensions.statsMinMax(session, loc, v, a.name, isMin))
-                }
-              case None => countColOf(e) match {
-                case Some(a) =>
-                  // null-sensitive COUNT(col) from per-file null counts;
-                  // live DVs block that arithmetic — the ANALYZE-stamped
-                  // exact cnt (folded across deletes) still answers
-                  if (!ownAttr(a)) None
-                  else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                    case (loc, v) =>
-                      GraftSqlExtensions.exactGroupedAgg(session, loc, v, Nil,
-                        Seq(GraftSqlExtensions.GroupedCountCol(a.name)))
-                        .flatMap(_.headOption).flatMap(_.headOption)
-                        .orElse(GraftSqlExtensions.statsCount(session, loc, v, a.name))
-                  }
-                case None => sumOf(e) match {
-                  case Some(a) =>
-                    // exact ANALYZE-stamped sum, fingerprint-fresh only;
-                    // the stamped "null" marker serves SQL NULL (empty /
-                    // all-null column)
-                    if (!ownAttr(a)) None
-                    else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                      case (loc, v) =>
-                        GraftSqlExtensions.statsSum(session, loc, v, a.name)
-                          .map(_.map(identity[Any]).orNull)
-                    }
-                  case None if countDistinctOf(e).exists(ownAttr) =>
-                    // exact COUNT(DISTINCT partition_col) from the file
-                    // list — no stamp needed, DV-aware
-                    node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                      case (loc, v) =>
-                        GraftSqlExtensions.exactGroupedAgg(session, loc, v, Nil,
-                          Seq(GraftSqlExtensions.GroupedCountDistinct(
-                            countDistinctOf(e).get.name)))
-                          .flatMap(_.headOption).flatMap(_.headOption)
-                    }
-                  case None => approxDistinctOf(e) match {
-                    case Some(a) =>
-                    // ANALYZE-time NDV, served ONLY while the stamped
-                    // fingerprint matches the snapshot's (path, DV) set —
-                    // any data-changing commit invalidates silently.
-                    // After a pure partition-drop delete the table-wide
-                    // sketch is honestly gone but the per-partition layer
-                    // survives: merging ALL stamped tuples' sketches (an
-                    // empty predicate keeps every tuple) serves the
-                    // unfiltered answer too.
-                    if (!ownAttr(a)) None
-                    else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                      case (loc, v) => GraftSqlExtensions.statsNdv(session, loc, v, a.name)
-                        .orElse(GraftSqlExtensions.statsPartitionServe(
-                          session, loc, v, GraftSqlExtensions.StampedApprox(a.name),
-                          Seq.empty))
-                    }
-                    case None => avgOf(e) match {
-                      // exact AVG / central moments from the stamped
-                      // (n, Σx, Σx²) — one division over exact integers
-                      case Some(a) =>
-                        if (!ownAttr(a)) None
-                        else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                          case (loc, v) =>
-                            GraftSqlExtensions.statsAvg(session, loc, v, a.name)
-                        }
-                      case None => momentOf(e) match {
-                        case Some((a, mk)) =>
-                          if (!ownAttr(a)) None
-                          else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-                            case (loc, v) =>
-                              GraftSqlExtensions.statsVar(session, loc, v, a.name, mk)
-                          }
-                        case None => percentileOf(e).flatMap {
-                          case (a, pcts, isArray, acc) =>
-                            // stamped quantile sketch, gated on the
-                            // call's tolerance covering the stamp's ε
-                            if (!ownAttr(a)) None
-                            else node.getTagValue(GraftSqlExtensions.StatsRefTag)
-                              .flatMap { case (loc, v) =>
-                                GraftSqlExtensions.statsPercentile(
-                                  session, loc, v, a.name, pcts, acc)
-                              }.map(vals =>
-                                percentileResult(vals, a.dataType, isArray))
-                        }
-                      }
-                    }
-                  }
-                }
-              }
+            import GraftSqlExtensions.{GroupedCount, GroupedCountCol,
+              GroupedCountDistinct, GroupedMinMax, GroupedOut}
+            def exact(o: GroupedOut): Option[Any] =
+              GraftSqlExtensions.exactGroupedAgg(snap, Nil, Seq(o))
+                .flatMap(_.headOption).flatMap(_.headOption)
+            // every argument must be the relation's own column (by exprId,
+            // not a Project alias over something computed); the matchers
+            // are disjoint, so the first that matches decides
+            val values: Seq[Option[Any]] = exprs.map { e =>
+              if (isCountStar(e)) exact(GroupedCount)
+              else minMaxOf(e).filter(m => ownAttr(m._1)).flatMap { case (a, isMin) =>
+                // footer-stat extremes first; where they honestly bail
+                // (strings/floats/DVs), a fresh ANALYZE stamp still
+                // answers exactly
+                exact(GroupedMinMax(a.name, isMin))
+                  .orElse(GraftSqlExtensions.statsMinMax(snap, a.name, isMin))
+              }.orElse(countColOf(e).filter(ownAttr).flatMap { a =>
+                // null-sensitive COUNT(col) from per-file null counts;
+                // live DVs block that arithmetic — the ANALYZE-stamped
+                // exact cnt (folded across deletes) still answers
+                exact(GroupedCountCol(a.name))
+                  .orElse(GraftSqlExtensions.statsCount(snap, a.name))
+              }).orElse(sumOf(e).filter(ownAttr).flatMap { a =>
+                // exact ANALYZE-stamped sum, fingerprint-fresh only; the
+                // stamped "null" marker serves SQL NULL (empty / all-null
+                // column)
+                GraftSqlExtensions.statsSum(snap, a.name).map(_.map(identity[Any]).orNull)
+              }).orElse(countDistinctOf(e).filter(ownAttr).flatMap { a =>
+                // exact COUNT(DISTINCT partition_col) from the file list
+                // — no stamp needed, DV-aware
+                exact(GroupedCountDistinct(a.name))
+              }).orElse(approxDistinctOf(e).filter(ownAttr).flatMap { a =>
+                // ANALYZE-time NDV, served ONLY while the stamped
+                // fingerprint matches the snapshot's (path, DV) set — any
+                // data-changing commit invalidates silently. After a pure
+                // partition-drop delete the table-wide sketch is honestly
+                // gone but the per-partition layer survives: merging ALL
+                // stamped tuples' sketches (an empty predicate keeps every
+                // tuple) serves the unfiltered answer too.
+                GraftSqlExtensions.statsNdv(snap, a.name)
+                  .orElse(GraftSqlExtensions.statsPartitionServe(session, loc, snap,
+                    GraftSqlExtensions.StampedApprox(a.name), Seq.empty))
+              }).orElse(avgOf(e).filter(ownAttr).flatMap { a =>
+                // exact AVG / central moments from the stamped (n, Σx, Σx²)
+                // — one division over exact integers
+                GraftSqlExtensions.statsAvg(snap, a.name)
+              }).orElse(momentOf(e).filter(m => ownAttr(m._1)).flatMap { case (a, mk) =>
+                GraftSqlExtensions.statsVar(snap, a.name, mk)
+              }).orElse(percentileOf(e).filter(p => ownAttr(p._1)).flatMap {
+                case (a, pcts, isArray, acc) =>
+                  // stamped quantile sketch, gated on the call's
+                  // tolerance covering the stamp's ε
+                  GraftSqlExtensions.statsPercentile(snap, a.name, pcts, acc)
+                    .map(vals => percentileResult(vals, a.dataType, isArray))
+              })
             }
-          }
-          if (values.exists(_.isEmpty)) None
-          else Some(LocalRelation(agg.output,
-            Seq(org.apache.spark.sql.catalyst.InternalRow(values.map(_.get): _*))))
+            if (values.exists(_.isEmpty)) None
+            else Some(LocalRelation(agg.output,
+              Seq(org.apache.spark.sql.catalyst.InternalRow(values.map(_.get): _*))))
           }
         }.getOrElse(agg)
 
@@ -1653,15 +1490,12 @@ object GraftSqlExtensions {
       // column. "Which days exist" on a day-partitioned 100 TB table is
       // one snapshot read.
       case d @ Distinct(child) if child.output.nonEmpty =>
-        taggedNodeF(child).flatMap { case (node, conjuncts) =>
+        taggedNodeF(child).flatMap { case (node, _, snap, conjuncts) =>
           if (!child.output.forall(a => node.outputSet.contains(a))) None
           else partitionEqFilter(conjuncts, node).flatMap { pf =>
-            node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-              case (loc, v) =>
-                val names = child.output.map(_.name)
-                GraftSqlExtensions.exactGroupedAgg(session, loc, v, names,
-                  names.map(GraftSqlExtensions.GroupedKey), pf)
-            }
+            val names = child.output.map(_.name)
+            GraftSqlExtensions.exactGroupedAgg(snap, names,
+              names.map(GraftSqlExtensions.GroupedKey), pf)
           }.map { rows =>
             LocalRelation(d.output, rows.map(r =>
               org.apache.spark.sql.catalyst.InternalRow(r: _*)))
@@ -1681,7 +1515,7 @@ object GraftSqlExtensions {
           if groupExprs.nonEmpty &&
             groupExprs.forall(_.isInstanceOf[AttributeReference]) =>
         val groupSet = groupExprs.map(_.asInstanceOf[AttributeReference].exprId).toSet
-        taggedNodeF(child).flatMap { case (node, conjuncts) =>
+        taggedNodeF(child).flatMap { case (node, loc, snap, conjuncts) =>
           val relAttrs = node.outputSet
           if (!groupExprs.forall(g =>
               relAttrs.contains(g.asInstanceOf[AttributeReference]))) None
@@ -1725,65 +1559,64 @@ object GraftSqlExtensions {
                 }
               }
             if (outs.exists(_.isEmpty)) None
-            else node.getTagValue(GraftSqlExtensions.StatsRefTag).flatMap {
-              case (loc, v) =>
-                val groupNames =
-                  groupExprs.map(_.asInstanceOf[AttributeReference].name)
-                def stampedMap(s: StampedOut): Option[Map[Seq[Any], Any]] =
-                  GraftSqlExtensions.statsGroupedPartitionServe(
-                    session, loc, v, s, groupNames, pf)
-                def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
-                    : Option[Seq[Seq[Any]]] = {
-                  val stampedOuts = flat.collect { case Right(s) => s }.distinct
-                  val maps = stampedOuts.map(s => stampedMap(s).map(s -> _))
-                  if (maps.exists(_.isEmpty)) return None
-                  val byOut = maps.flatten.toMap
-                  // hidden trailing group-key slots so each exact row can
-                  // join the layer-served per-group maps on its full key
-                  val exactOuts = flat.collect { case Left(o) => o } ++
-                    (if (stampedOuts.nonEmpty)
-                      groupNames.map(GraftSqlExtensions.GroupedKey) else Nil)
-                  GraftSqlExtensions.exactGroupedAgg(session, loc, v,
-                    groupNames, exactOuts, pf).flatMap { rows =>
-                    if (stampedOuts.isEmpty) Some(rows)
-                    else {
-                      val nExact = flat.count(_.isLeft)
-                      val built: Seq[Option[Seq[Any]]] = rows.map { r =>
-                        val key = r.drop(nExact)
-                        val it = r.iterator
-                        val cells: Seq[Option[Any]] = flat.map {
-                          case Left(_) => Some(it.next())
-                          // a live group the layer doesn't know would be
-                          // an inconsistency — scan. A legitimately NULL
-                          // cell (e.g. an all-null group SUM) rides as a
-                          // null VALUE inside the map, not a missing key.
-                          case Right(s) => byOut(s).get(key)
-                        }
-                        if (cells.exists(_.isEmpty)) None
-                        else Some(cells.map(_.get))
+            else {
+              val groupNames =
+                groupExprs.map(_.asInstanceOf[AttributeReference].name)
+              def stampedMap(s: StampedOut): Option[Map[Seq[Any], Any]] =
+                GraftSqlExtensions.statsGroupedPartitionServe(
+                  session, loc, snap, s, groupNames, pf)
+              def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
+                  : Option[Seq[Seq[Any]]] = {
+                val stampedOuts = flat.collect { case Right(s) => s }.distinct
+                val maps = stampedOuts.map(s => stampedMap(s).map(s -> _))
+                if (maps.exists(_.isEmpty)) return None
+                val byOut = maps.flatten.toMap
+                // hidden trailing group-key slots so each exact row can
+                // join the layer-served per-group maps on its full key
+                val exactOuts = flat.collect { case Left(o) => o } ++
+                  (if (stampedOuts.nonEmpty)
+                    groupNames.map(GraftSqlExtensions.GroupedKey) else Nil)
+                GraftSqlExtensions.exactGroupedAgg(snap, groupNames,
+                  exactOuts, pf).flatMap { rows =>
+                  if (stampedOuts.isEmpty) Some(rows)
+                  else {
+                    val nExact = flat.count(_.isLeft)
+                    val built: Seq[Option[Seq[Any]]] = rows.map { r =>
+                      val key = r.drop(nExact)
+                      val it = r.iterator
+                      val cells: Seq[Option[Any]] = flat.map {
+                        case Left(_) => Some(it.next())
+                        // a live group the layer doesn't know would be
+                        // an inconsistency — scan. A legitimately NULL
+                        // cell (e.g. an all-null group SUM) rides as a
+                        // null VALUE inside the map, not a missing key.
+                        case Right(s) => byOut(s).get(key)
                       }
-                      // both sides must see the SAME groups — a layer
-                      // group the files don't show (or vice versa) means
-                      // the stamp is out of shape
-                      if (built.exists(_.isEmpty) ||
-                          byOut.valuesIterator.exists(_.size != rows.size)) None
-                      else Some(built.map(_.get))
+                      if (cells.exists(_.isEmpty)) None
+                      else Some(cells.map(_.get))
                     }
+                    // both sides must see the SAME groups — a layer
+                    // group the files don't show (or vice versa) means
+                    // the stamp is out of shape
+                    if (built.exists(_.isEmpty) ||
+                        byOut.valuesIterator.exists(_.size != rows.size)) None
+                    else Some(built.map(_.get))
                   }
                 }
-                val flat = outs.map(_.get)
-                attempt(flat).orElse {
-                  val flat2 = flat.map {
-                    case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
-                      Right(StampedMinMax(c, isMin)): Either[
-                        GraftSqlExtensions.GroupedOut, StampedOut]
-                    case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
-                      Right(GraftSqlExtensions.StampedCntCol(c)): Either[
-                        GraftSqlExtensions.GroupedOut, StampedOut]
-                    case other => other
-                  }
-                  if (flat2 == flat) None else attempt(flat2)
+              }
+              val flat = outs.map(_.get)
+              attempt(flat).orElse {
+                val flat2 = flat.map {
+                  case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
+                    Right(StampedMinMax(c, isMin)): Either[
+                      GraftSqlExtensions.GroupedOut, StampedOut]
+                  case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
+                    Right(GraftSqlExtensions.StampedCntCol(c)): Either[
+                      GraftSqlExtensions.GroupedOut, StampedOut]
+                  case other => other
                 }
+                if (flat2 == flat) None else attempt(flat2)
+              }
             }.map { rows =>
               LocalRelation(agg.output, rows.map(r =>
                 org.apache.spark.sql.catalyst.InternalRow(r: _*)))
@@ -1802,10 +1635,10 @@ object GraftSqlExtensions {
     // would otherwise throw REQUIRES_SINGLE_PART_NAMESPACE on 3-part names
     // it cannot map to a registered catalog plugin
     extensions.injectHintResolutionRule(s => ResolveGraftRelations(s.asInstanceOf[ClassicSparkSession]))
-    // COUNT(*) on a transactional catalog table answers from the log.
-    // Post-hoc resolution (not the optimizer): the deferred-count tag
-    // rides the analyzed relation node, and optimizer column pruning
-    // re-creates relations via case-class copy, which drops tags.
+    // metadata-only aggregates on a transactional catalog table answer
+    // from the log. Post-hoc resolution (not the optimizer): the read's
+    // snapshot tag rides the analyzed relation node, and optimizer column
+    // pruning re-creates relations via case-class copy, which drops tags.
     extensions.injectPostHocResolutionRule(s => MetadataOnlyCount(s.asInstanceOf[ClassicSparkSession]))
     // custom physical operators (SURVEY preference tier c)
     extensions.injectPlannerStrategy(_ => graft.plans.TopKStrategy)

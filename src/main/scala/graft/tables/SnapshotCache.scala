@@ -2,8 +2,10 @@ package graft.tables
 
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Cross-QUERY snapshot cache: `location → (log-dir signature, parsed
   * latest snapshot)`.
@@ -27,12 +29,14 @@ import org.apache.spark.sql.SparkSession
   * Consistency layering: this cache only ever serves the LATEST snapshot
   * (or a pinned version that IS the cached latest — pinned history is
   * immutable, so equality by version suffices once the signature proves
-  * the location wasn't recreated). WITHIN one rewrite pass the
-  * thread-local memo in GraftSqlExtensions still pins all aggregates of
-  * one SELECT to one snapshot instance; this layer amortizes ACROSS
-  * queries, where "latest at probe time" is exactly the contract a new
-  * query gets anyway. Returning the SAME Snapshot instance across
-  * queries also amortizes its lazily memoized statsFingerprint.
+  * the location wasn't recreated). Within one query, metadata-only
+  * serves read the snapshot instance the read was planned on (the
+  * GraftSqlExtensions read-snapshot tag), so all aggregates of one
+  * SELECT answer from one snapshot with no second probe; this layer
+  * amortizes ACROSS queries, where "latest at probe time" is exactly the
+  * contract a new query gets anyway. Returning the SAME Snapshot
+  * instance across queries also amortizes its lazily memoized
+  * statsFingerprint.
   *
   * Entries hold plain immutable data (Snapshot) plus the dispatched
   * [[CommitLog]] singleton — never a SparkSession — so the cache is safe
@@ -53,7 +57,7 @@ object SnapshotCache {
       * entry on any commit.
       */
     val planMemo = new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.DataFrame](2)
+      DataFrame](2)
   }
 
   private val MaxLocations = 64
@@ -100,7 +104,7 @@ object SnapshotCache {
         i += 1
       }
       Some(h ^ it.length.toLong)
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   private def get(location: String): Option[Entry] =
@@ -145,7 +149,7 @@ object SnapshotCache {
     * query.
     */
   def latestDF(spark: SparkSession, location: String)
-      : (TxTable, TxLog.Snapshot, org.apache.spark.sql.DataFrame) =
+      : (TxTable, TxLog.Snapshot, DataFrame) =
     get(location) match {
       case Some(e) if signature(spark, location, e.log).contains(e.sig) =>
         val t = new TxTable(spark, location, e.log)
@@ -161,55 +165,41 @@ object SnapshotCache {
         (t, snap, df)
     }
 
-  /** Read DataFrame pinned at `version`, riding the plan memo only when
-    * the pin IS the cached latest (same rule as [[at]]).
+  /** Snapshot pinned at `version` and its read DataFrame: served from
+    * cache (snapshot and plan memo) only when the signature matches AND
+    * the cached latest IS that version (committed history is immutable,
+    * and the signature rules out a recreate); any other pinned version
+    * replays directly — uncached, time travel into history is not the
+    * hot path.
     */
   def dfAt(spark: SparkSession, location: String, version: Long)
-      : org.apache.spark.sql.DataFrame =
+      : (TxLog.Snapshot, DataFrame) =
     get(location) match {
       case Some(e) if e.snapshot.version == version &&
           signature(spark, location, e.log).contains(e.sig) =>
-        memoizedDF(e, new TxTable(spark, location, e.log))
+        (e.snapshot, memoizedDF(e, new TxTable(spark, location, e.log)))
+      case Some(e) if e.snapshot.version > version =>
+        // pinned history: immutable once the location provably wasn't
+        // recreated — but proving that needs the sig match above, so
+        // an older pin replays (and leaves the latest entry alone)
+        history(TxTable.forAnyLocation(spark, location), version)
       case _ =>
-        val (t, snap) = at(spark, location, Some(version))
-        t.toDF(snap)
+        // miss or future version: resolve latest through the cache
+        // first — if v IS the new latest this both serves and primes
+        val (t, snap, df) = latestDF(spark, location)
+        if (snap.version == version) (snap, df) else history(t, version)
     }
 
-  private def memoizedDF(e: Entry, t: TxTable): org.apache.spark.sql.DataFrame = {
+  private def memoizedDF(e: Entry, t: TxTable): DataFrame = {
     // tiny session bound: entries outlive test sessions; don't pin more
     // than a handful of session-tied plans per table version
     if (e.planMemo.size > 4) e.planMemo.clear()
     e.planMemo.computeIfAbsent(t.spark, _ => t.toDF(e.snapshot))
   }
 
-  /** Snapshot pinned at `version`: served from cache only when the
-    * signature matches AND the cached latest IS that version (committed
-    * history is immutable, and the signature rules out a recreate); any
-    * other pinned version replays directly — uncached, time travel into
-    * history is not the hot path.
-    */
-  def at(spark: SparkSession, location: String, version: Option[Long])
-      : (TxTable, TxLog.Snapshot) =
-    version match {
-      case None => latest(spark, location)
-      case Some(v) =>
-        get(location) match {
-          case Some(e) if e.snapshot.version == v &&
-              signature(spark, location, e.log).contains(e.sig) =>
-            (new TxTable(spark, location, e.log), e.snapshot)
-          case Some(e) if e.snapshot.version > v =>
-            // pinned history: immutable once the location provably wasn't
-            // recreated — but proving that needs the sig match above, so
-            // an older pin replays (and leaves the latest entry alone)
-            replayCount.incrementAndGet()
-            val t = TxTable.forAnyLocation(spark, location)
-            (t, t.snapshotAt(v))
-          case _ =>
-            // miss or future version: resolve latest through the cache
-            // first — if v IS the new latest this both serves and primes
-            val (t, snap) = latest(spark, location)
-            if (snap.version == v) (t, snap)
-            else { replayCount.incrementAndGet(); (t, t.snapshotAt(v)) }
-        }
-    }
+  private def history(t: TxTable, version: Long): (TxLog.Snapshot, DataFrame) = {
+    replayCount.incrementAndGet()
+    val snap = t.snapshotAt(version)
+    (snap, t.toDF(snap))
+  }
 }

@@ -94,8 +94,9 @@ object TxLog {
     // memoized per INSTANCE (lazy val, not part of case equality): the
     // stats serve layer checks the fingerprint once per stamped
     // aggregate, and a 6-aggregate SELECT over a 100k-file table must
-    // not hash 600k paths at plan time. The rewrite pass resolves ONE
-    // snapshot instance per (location, version), so this computes once.
+    // not hash 600k paths at plan time. Every serve of one SELECT reads
+    // the snapshot instance its read was planned on, so this computes
+    // once per instance.
     @transient private[graft] lazy val statsFingerprint: Long =
       ColumnStats.computeFingerprint(this)
   }

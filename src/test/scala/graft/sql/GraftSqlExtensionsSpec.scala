@@ -269,7 +269,10 @@ class GraftSqlExtensionsSpec extends AnyFunSuite {
     // (which may answer metadata-only) and collect() must AGREE on the
     // pinned snapshot, not leak the concurrent commit's rows into one
     // of them
+    val r0 = graft.tables.SnapshotCache.replayCount.get()
     assert(held.count() == 40L, "held df count must reflect the pinned snapshot")
+    assert(graft.tables.SnapshotCache.replayCount.get() == r0,
+      "the held read's count serves from its own snapshot, replaying nothing")
     assert(held.collect().length == 40)
     // a fresh resolution sees the new commit, still metadata-only
     val fresh = spark.sql("SELECT COUNT(*) FROM lakesnap.core.t")
@@ -1096,10 +1099,9 @@ class GraftSqlExtensionsSpec extends AnyFunSuite {
   }
 
   test("a multi-aggregate SELECT resolves its snapshot ONCE (memoized rewrite pass)") {
-    // before the per-pass memo, every stamped serve independently
-    // re-loaded the snapshot and re-hashed the fingerprint — a dashboard
-    // SELECT with six stamped aggregates over a 100k-file table did
-    // ~600k path-hashes at plan time
+    // every served aggregate reads the snapshot the read was planned on:
+    // resolving the read is the ONE log-directory probe, no serve looks
+    // the snapshot up again, and the fingerprint hashes once per instance
     val client = new LakehouseClient(spark)
     client.createCatalog("lakememo")
     client.createSchema("lakememo", "core")
@@ -1108,15 +1110,19 @@ class GraftSqlExtensionsSpec extends AnyFunSuite {
       (1 until 500).map(i => (i.toLong, s"u${i % 60}")).toDF("id", "u"),
       "lakememo", "core", "t", FileType.DELTA, s"$dir/t")
     spark.sql("ANALYZE TABLE lakememo.core.t COMPUTE STATISTICS FOR COLUMNS id, u")
-    val before = GraftSqlExtensions.snapshotLoadCount.get()
+    // warm the snapshot cache on the post-ANALYZE version
+    spark.sql("SELECT * FROM lakememo.core.t").queryExecution.analyzed
+    val cache = graft.tables.SnapshotCache
+    val (p0, r0) = (cache.probeCount.get(), cache.replayCount.get())
     val q = spark.sql("""SELECT COUNT(*) AS n, COUNT(id) AS nc, SUM(id) AS s,
         AVG(id) AS a, VAR_POP(id) AS v, STDDEV(id) AS sd, MIN(id) AS mn,
         MAX(id) AS mx, APPROX_COUNT_DISTINCT(u) AS du FROM lakememo.core.t""")
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("FileScan"), s"all nine aggregates must serve\n$plan")
-    val loads = GraftSqlExtensions.snapshotLoadCount.get() - before
-    assert(loads == 1L,
-      s"nine served aggregates must share ONE snapshot resolution, did $loads")
+    val (probes, replays) = (cache.probeCount.get() - p0, cache.replayCount.get() - r0)
+    assert(probes == 1L && replays == 0L,
+      s"nine served aggregates must share ONE snapshot resolution, " +
+        s"did $probes probes and $replays replays")
     val r = q.collect()(0)
     assert(r.getLong(0) == 499L && r.getLong(2) == (1L until 500L).sum)
     assert(math.abs(r.getDouble(3) - 250.0) < 1e-9)

@@ -137,6 +137,7 @@ class SnapshotCacheSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT COUNT(*) AS n FROM snapc4.core.t VERSION AS OF ${vLatest - 1}")
       .collect()(0).getLong(0) == 1L)
     assert(replays > r0, "genuine history is not cached")
+    assert(replays == r0 + 1, "a served history read replays once, for its read plan")
     // and the history read did not poison the latest entry
     val r1 = replays
     assert(spark.sql("SELECT SUM(v) AS s FROM snapc4.core.t").collect()(0).getDouble(0) == 3.0)
