@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries against
@@ -54,7 +56,7 @@ object Bench {
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case NonFatal(_) => return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import org.json4s._
 
 import graft.catalog._
@@ -42,7 +44,7 @@ final class RestCatalogStore(baseUrl: String) extends CatalogStore {
   /** Reference error mapping (uc_api_wrapper.py:24-56). */
   private def check(r: HttpResponse[String]): HttpResponse[String] = {
     if (r.statusCode() / 100 == 2) return r
-    val parsed = try UcJson.parse(r.body()) catch { case _: Throwable => JNothing }
+    val parsed = try UcJson.parse(r.body()) catch { case NonFatal(_) => JNothing }
     val code = (parsed \ "error_code") match { case JString(s) => s.toUpperCase; case _ => "" }
     val msg = (parsed \ "message") match { case JString(s) => s; case _ => r.body() }
     code match {
@@ -184,7 +186,7 @@ final class RestCatalogStore(baseUrl: String) extends CatalogStore {
     deleteTable(t.catalogName, t.schemaName, t.name)
     try createTable(t)
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         createTable(original)
         throw UnsupportedOperationError(s"Creating new table failed: ${e.getMessage}")
     }
@@ -196,5 +198,5 @@ final class RestCatalogStore(baseUrl: String) extends CatalogStore {
         HttpRequest.newBuilder(URI.create(baseUrl)).GET().build(),
         HttpResponse.BodyHandlers.ofString())
       r.statusCode() / 100 == 2 && r.body().contains("Hello, Unity Catalog!")
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 }

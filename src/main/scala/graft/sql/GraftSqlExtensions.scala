@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession, Dataset => ClassicDataset}
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 import scala.util.control.NonFatal
 
@@ -1323,6 +1324,102 @@ object GraftSqlExtensions {
       case _ => None
     }
 
+    /** Left = exact per-file arithmetic, Right = served from the stamped
+      * per-partition layer (sketches + scalars). */
+    private type MixedOut = Either[GroupedOut, StampedOut]
+
+    /** One aggregate output under an absorbed partition-only WHERE or a
+      * partition GROUP BY. SUM has no per-file footer stat, so it is
+      * ALWAYS layer-served; MIN/MAX and COUNT(col) start on the exact
+      * file route ([[serveMixed]] retries them from the layer). Every
+      * argument must be the relation's own column (`own`); None = scan.
+      */
+    private def mixedOutOf(e: Expression,
+        own: AttributeReference => Boolean): Option[MixedOut] =
+      if (isCountStar(e)) Some(Left(GroupedCount))
+      else minMaxOf(e).collect {
+        case (a, isMin) if own(a) => Left(GroupedMinMax(a.name, isMin))
+      }.orElse(countColOf(e).collect {
+        case a if own(a) => Left(GroupedCountCol(a.name))
+      }).orElse(sumOf(e).collect {
+        case a if own(a) => Right(StampedSum(a.name))
+      }).orElse(countDistinctOf(e).collect {
+        case a if own(a) => Left(GroupedCountDistinct(a.name))
+      }).orElse(approxDistinctOf(e).collect {
+        case a if own(a) => Right(StampedApprox(a.name))
+      }).orElse(avgOf(e).collect {
+        case a if own(a) => Right(StampedAvg(a.name))
+      }).orElse(momentOf(e).collect {
+        case (a, mk) if own(a) => Right(StampedMoment(a.name, mk))
+      }).orElse(percentileOf(e).collect {
+        case (a, pcts, isArray, acc) if own(a) =>
+          Right(StampedPercentile(a.name, pcts.toSeq, isArray, acc, a.dataType))
+      })
+
+    /** Rows for `flat` under the partition predicate `pf`: ONE row when
+      * `groupNames` is empty, else one per live partition group. The
+      * exact outputs come from the file list, the stamped ones from the
+      * layer, joined on the group key. When the exact arm refuses (a
+      * string/float extreme, a live DV blocking per-file arithmetic),
+      * it retries once with MIN/MAX and COUNT(col) moved to the stamped
+      * layer. None = unprovable → scan.
+      */
+    private def serveMixed(loc: String, snap: graft.tables.TxLog.Snapshot,
+        groupNames: Seq[String], pf: Seq[PartPred],
+        flat: Seq[MixedOut]): Option[Seq[Seq[Any]]] = {
+      def stampedMap(s: StampedOut): Option[Map[Seq[Any], Any]] =
+        if (groupNames.isEmpty)
+          statsPartitionServe(session, loc, snap, s, pf).map(v => Map(Seq.empty[Any] -> v))
+        else statsGroupedPartitionServe(session, loc, snap, s, groupNames, pf)
+      def attempt(flat: Seq[MixedOut]): Option[Seq[Seq[Any]]] = {
+        val stampedOuts = flat.collect { case Right(s) => s }.distinct
+        val maps = stampedOuts.map(s => stampedMap(s).map(s -> _))
+        if (maps.exists(_.isEmpty)) return None
+        val byOut = maps.flatten.toMap
+        // hidden trailing group-key slots so each exact row can join the
+        // layer-served per-group maps on its full key
+        val exactOuts = flat.collect { case Left(o) => o } ++
+          (if (stampedOuts.nonEmpty) groupNames.map(GroupedKey) else Nil)
+        val exactRows =
+          if (exactOuts.isEmpty && groupNames.isEmpty) Some(Seq(Seq.empty[Any]))
+          else exactGroupedAgg(snap, groupNames, exactOuts, pf)
+        exactRows.flatMap { rows =>
+          if (stampedOuts.isEmpty) Some(rows)
+          else {
+            val nExact = flat.count(_.isLeft)
+            val built: Seq[Option[Seq[Any]]] = rows.map { r =>
+              val key = r.drop(nExact)
+              val it = r.iterator
+              val cells: Seq[Option[Any]] = flat.map {
+                case Left(_) => Some(it.next())
+                // a live group the layer doesn't know would be an
+                // inconsistency — scan. A legitimately NULL cell (e.g. an
+                // all-null group SUM) rides as a null VALUE inside the
+                // map, not a missing key.
+                case Right(s) => byOut(s).get(key)
+              }
+              if (cells.exists(_.isEmpty)) None
+              else Some(cells.map(_.get))
+            }
+            // both sides must see the SAME groups — a layer group the
+            // files don't show (or vice versa) means the stamp is out of
+            // shape
+            if (built.exists(_.isEmpty) ||
+                byOut.valuesIterator.exists(_.size != rows.size)) None
+            else Some(built.map(_.get))
+          }
+        }
+      }
+      attempt(flat).orElse {
+        val flat2 = flat.map {
+          case Left(GroupedMinMax(c, isMin)) => Right(StampedMinMax(c, isMin)): MixedOut
+          case Left(GroupedCountCol(c)) => Right(StampedCntCol(c)): MixedOut
+          case other => other
+        }
+        if (flat2 == flat) None else attempt(flat2)
+      }
+    }
+
     override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
       case agg @ Aggregate(Nil, exprs, child, _)
           if exprs.nonEmpty && exprs.forall(e => isCountStar(e) ||
@@ -1342,82 +1439,12 @@ object GraftSqlExtensions {
             // exactly the surviving partitions); a table without that
             // layer keeps the scan.
             partitionEqFilter(conjuncts, node).flatMap { pf =>
-              // Left = exact per-file arithmetic, Right = served from
-              // the stamped per-partition layer (sketches + scalars).
-              // SUM has no per-file footer stat, so it is ALWAYS
-              // layer-served under a WHERE; MIN/MAX prefer the exact
-              // file route and fall back to the stamped extremes when
-              // the footers honestly refuse (strings, floats, DVs).
-              import GraftSqlExtensions.{StampedApprox, StampedAvg,
-                StampedMinMax, StampedMoment, StampedOut, StampedPercentile,
-                StampedSum}
-              val outs: Seq[Option[Either[GraftSqlExtensions.GroupedOut, StampedOut]]] =
-                exprs.map { e =>
-                  if (isCountStar(e)) Some(Left(GraftSqlExtensions.GroupedCount))
-                  else minMaxOf(e).collect {
-                    case (a, isMin) if ownAttr(a) =>
-                      Left(GraftSqlExtensions.GroupedMinMax(a.name, isMin))
-                  }.orElse(countColOf(e).collect {
-                    case a if ownAttr(a) =>
-                      Left(GraftSqlExtensions.GroupedCountCol(a.name))
-                  }).orElse(sumOf(e).collect {
-                    case a if ownAttr(a) => Right(StampedSum(a.name))
-                  }).orElse(countDistinctOf(e).collect {
-                    case a if ownAttr(a) =>
-                      Left(GraftSqlExtensions.GroupedCountDistinct(a.name))
-                  }).orElse(approxDistinctOf(e).collect {
-                    case a if ownAttr(a) => Right(StampedApprox(a.name))
-                  }).orElse(avgOf(e).collect {
-                    case a if ownAttr(a) => Right(StampedAvg(a.name))
-                  }).orElse(momentOf(e).collect {
-                    case (a, mk) if ownAttr(a) => Right(StampedMoment(a.name, mk))
-                  }).orElse(percentileOf(e).collect {
-                    case (a, pcts, isArray, acc) if ownAttr(a) =>
-                      Right(StampedPercentile(a.name, pcts.toSeq, isArray, acc,
-                        a.dataType))
-                  })
-                }
+              val outs = exprs.map(mixedOutOf(_, ownAttr))
               if (outs.exists(_.isEmpty)) None
-              else {
-                def stampedValue(s: StampedOut): Option[Any] =
-                  GraftSqlExtensions.statsPartitionServe(session, loc, snap, s, pf)
-                def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
-                    : Option[Seq[Any]] = {
-                  val stampedOuts = flat.collect { case Right(s) => s }.distinct
-                  val pairs = stampedOuts.map(s => stampedValue(s).map(s -> _))
-                  if (pairs.exists(_.isEmpty)) return None
-                  val stamped = pairs.flatten.toMap
-                  val grouped = flat.collect { case Left(o) => o }
-                  val gv: Seq[Any] =
-                    if (grouped.isEmpty) Seq.empty
-                    else GraftSqlExtensions.exactGroupedAgg(snap, Nil, grouped, pf)
-                      .flatMap(_.headOption).getOrElse(return None)
-                  val it = gv.iterator
-                  Some(flat.map {
-                    case Left(_) => it.next()
-                    case Right(s) => stamped(s)
-                  })
-                }
-                val flat = outs.map(_.get)
-                attempt(flat).orElse {
-                  // the exact arm refused (a string/float extreme, a
-                  // live DV blocking per-file arithmetic): retry with
-                  // MIN/MAX and COUNT(col) moved to the stamped layer
-                  val flat2 = flat.map {
-                    case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
-                      Right(StampedMinMax(c, isMin)): Either[
-                        GraftSqlExtensions.GroupedOut, StampedOut]
-                    case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
-                      Right(GraftSqlExtensions.StampedCntCol(c)): Either[
-                        GraftSqlExtensions.GroupedOut, StampedOut]
-                    case other => other
-                  }
-                  if (flat2 == flat) None else attempt(flat2)
-                }
-              }.map { row =>
-                LocalRelation(agg.output,
-                  Seq(org.apache.spark.sql.catalyst.InternalRow(row: _*)))
-              }
+              else serveMixed(loc, snap, Nil, pf, outs.map(_.get))
+            }.map { rows =>
+              LocalRelation(agg.output, rows.map(r =>
+                org.apache.spark.sql.catalyst.InternalRow(r: _*)))
             }
           } else {
             import GraftSqlExtensions.{GroupedCount, GroupedCountCol,
@@ -1520,121 +1547,65 @@ object GraftSqlExtensions {
           if (!groupExprs.forall(g =>
               relAttrs.contains(g.asInstanceOf[AttributeReference]))) None
           else partitionEqFilter(conjuncts, node).flatMap { pf =>
-            // Left = exact per-file arithmetic, Right = served from the
-            // stamped per-partition layer. SUM is always layer-served;
-            // MIN/MAX prefer the exact file route, falling back to the
-            // stamped per-partition extremes (strings, floats).
-            import GraftSqlExtensions.{StampedApprox, StampedAvg,
-              StampedMinMax, StampedMoment, StampedOut, StampedPercentile,
-              StampedSum}
-            val outs: Seq[Option[Either[GraftSqlExtensions.GroupedOut, StampedOut]]] =
-              exprs.map { e =>
-                groupKeyOf(e, groupSet) match {
-                  case Some(a) => Some(Left(GraftSqlExtensions.GroupedKey(a.name)))
-                  case None if isCountStar(e) =>
-                    Some(Left(GraftSqlExtensions.GroupedCount))
-                  case None => minMaxOf(e).collect {
-                    case (a, isMin) if relAttrs.contains(a) =>
-                      Left(GraftSqlExtensions.GroupedMinMax(a.name, isMin))
-                  }.orElse(countColOf(e).collect {
-                    case a if relAttrs.contains(a) =>
-                      Left(GraftSqlExtensions.GroupedCountCol(a.name))
-                  }).orElse(sumOf(e).collect {
-                    case a if relAttrs.contains(a) => Right(StampedSum(a.name))
-                  }).orElse(countDistinctOf(e).collect {
-                    case a if relAttrs.contains(a) =>
-                      Left(GraftSqlExtensions.GroupedCountDistinct(a.name))
-                  }).orElse(approxDistinctOf(e).collect {
-                    case a if relAttrs.contains(a) => Right(StampedApprox(a.name))
-                  }).orElse(avgOf(e).collect {
-                    case a if relAttrs.contains(a) => Right(StampedAvg(a.name))
-                  }).orElse(momentOf(e).collect {
-                    case (a, mk) if relAttrs.contains(a) =>
-                      Right(StampedMoment(a.name, mk))
-                  }).orElse(percentileOf(e).collect {
-                    case (a, pcts, isArray, acc) if relAttrs.contains(a) =>
-                      Right(StampedPercentile(a.name, pcts.toSeq, isArray, acc,
-                        a.dataType))
-                  })
-                }
+            val outs: Seq[Option[MixedOut]] = exprs.map { e =>
+              groupKeyOf(e, groupSet) match {
+                case Some(a) => Some(Left(GroupedKey(a.name)))
+                case None => mixedOutOf(e, relAttrs.contains)
               }
-            if (outs.exists(_.isEmpty)) None
-            else {
-              val groupNames =
-                groupExprs.map(_.asInstanceOf[AttributeReference].name)
-              def stampedMap(s: StampedOut): Option[Map[Seq[Any], Any]] =
-                GraftSqlExtensions.statsGroupedPartitionServe(
-                  session, loc, snap, s, groupNames, pf)
-              def attempt(flat: Seq[Either[GraftSqlExtensions.GroupedOut, StampedOut]])
-                  : Option[Seq[Seq[Any]]] = {
-                val stampedOuts = flat.collect { case Right(s) => s }.distinct
-                val maps = stampedOuts.map(s => stampedMap(s).map(s -> _))
-                if (maps.exists(_.isEmpty)) return None
-                val byOut = maps.flatten.toMap
-                // hidden trailing group-key slots so each exact row can
-                // join the layer-served per-group maps on its full key
-                val exactOuts = flat.collect { case Left(o) => o } ++
-                  (if (stampedOuts.nonEmpty)
-                    groupNames.map(GraftSqlExtensions.GroupedKey) else Nil)
-                GraftSqlExtensions.exactGroupedAgg(snap, groupNames,
-                  exactOuts, pf).flatMap { rows =>
-                  if (stampedOuts.isEmpty) Some(rows)
-                  else {
-                    val nExact = flat.count(_.isLeft)
-                    val built: Seq[Option[Seq[Any]]] = rows.map { r =>
-                      val key = r.drop(nExact)
-                      val it = r.iterator
-                      val cells: Seq[Option[Any]] = flat.map {
-                        case Left(_) => Some(it.next())
-                        // a live group the layer doesn't know would be
-                        // an inconsistency — scan. A legitimately NULL
-                        // cell (e.g. an all-null group SUM) rides as a
-                        // null VALUE inside the map, not a missing key.
-                        case Right(s) => byOut(s).get(key)
-                      }
-                      if (cells.exists(_.isEmpty)) None
-                      else Some(cells.map(_.get))
-                    }
-                    // both sides must see the SAME groups — a layer
-                    // group the files don't show (or vice versa) means
-                    // the stamp is out of shape
-                    if (built.exists(_.isEmpty) ||
-                        byOut.valuesIterator.exists(_.size != rows.size)) None
-                    else Some(built.map(_.get))
-                  }
-                }
-              }
-              val flat = outs.map(_.get)
-              attempt(flat).orElse {
-                val flat2 = flat.map {
-                  case Left(GraftSqlExtensions.GroupedMinMax(c, isMin)) =>
-                    Right(StampedMinMax(c, isMin)): Either[
-                      GraftSqlExtensions.GroupedOut, StampedOut]
-                  case Left(GraftSqlExtensions.GroupedCountCol(c)) =>
-                    Right(GraftSqlExtensions.StampedCntCol(c)): Either[
-                      GraftSqlExtensions.GroupedOut, StampedOut]
-                  case other => other
-                }
-                if (flat2 == flat) None else attempt(flat2)
-              }
-            }.map { rows =>
-              LocalRelation(agg.output, rows.map(r =>
-                org.apache.spark.sql.catalyst.InternalRow(r: _*)))
             }
+            if (outs.exists(_.isEmpty)) None
+            else serveMixed(loc, snap,
+              groupExprs.map(_.asInstanceOf[AttributeReference].name), pf,
+              outs.map(_.get))
+          }.map { rows =>
+            LocalRelation(agg.output, rows.map(r =>
+              org.apache.spark.sql.catalyst.InternalRow(r: _*)))
           }
         }.getOrElse(agg)
     }
   }
 
+  /** Entries for Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). One
+    * pass of the 16 headline queries generates ~244 distinct classes,
+    * and the cache is an LRU: a cyclic pass over more classes than it
+    * holds evicts each before its next use, so at the default every
+    * pass recompiles all of them. 512 is ~2x that working set; a
+    * retained class costs ~30-40 KB of heap, so a full cache holds
+    * ~20 MB.
+    */
+  private[sql] val CodegenCacheEntries = 512
+
+  /** Sizes the generated-class cache in `conf` unless the key is
+    * already set there, so a value the user set wins. */
+  private[sql] def sizeCodegenCache(conf: SQLConf): Unit =
+    if (!conf.contains(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key))
+      conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
+
   /** Install into a builder: SparkSession.builder()
     * .withExtensions(GraftSqlExtensions.install). Clients register
     * themselves on construction (LakehouseClient does this).
+    *
+    * Each session that installs graft gets
+    * `spark.sql.codegen.cache.maxEntries` = 512 when that key is unset;
+    * a value set on the builder wins. The cache is JVM-wide: Spark
+    * sizes it once, from the first session in the JVM that generates
+    * code. The key is set when the session first analyzes a query;
+    * encoding a local collection before that generates code at
+    * Spark's default size.
     */
   def install(extensions: SparkSessionExtensions): Unit = {
     // the Hints batch runs before Spark's own relation resolution, which
     // would otherwise throw REQUIRES_SINGLE_PART_NAMESPACE on 3-part names
     // it cannot map to a registered catalog plugin
-    extensions.injectHintResolutionRule(s => ResolveGraftRelations(s.asInstanceOf[ClassicSparkSession]))
+    extensions.injectHintResolutionRule { s =>
+      val session = s.asInstanceOf[ClassicSparkSession]
+      // sized here, not in install: withExtensions calls install before
+      // any SparkContext exists, and a session builds its analyzer before
+      // it plans or generates any code
+      sizeCodegenCache(session.sessionState.conf)
+      ResolveGraftRelations(session)
+    }
     // metadata-only aggregates on a transactional catalog table answer
     // from the log. Post-hoc resolution (not the optimizer): the read's
     // snapshot tag rides the analyzed relation node, and optimizer column
