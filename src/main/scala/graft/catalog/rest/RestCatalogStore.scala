@@ -20,7 +20,7 @@ import graft.catalog._
   * uc_api_wrapper.py:470-515), same page_token loop with the ""-token
   * server-bug tolerance (uc_api_wrapper.py:151-153).
   */
-final class RestCatalogStore(baseUrl: String) extends CatalogStore {
+class RestCatalogStore(baseUrl: String) extends CatalogStore {
 
   private val ApiPath = "/api/2.1/unity-catalog"
   private val http = HttpClient.newHttpClient()
@@ -189,6 +189,9 @@ final class RestCatalogStore(baseUrl: String) extends CatalogStore {
       case NonFatal(e) =>
         createTable(original)
         throw UnsupportedOperationError(s"Creating new table failed: ${e.getMessage}")
+      case e: Throwable => // an interrupt or fatal error still restores, then propagates
+        createTable(original)
+        throw e
     }
   }
 

@@ -1601,8 +1601,9 @@ object GraftSqlExtensions {
     extensions.injectHintResolutionRule { s =>
       val session = s.asInstanceOf[ClassicSparkSession]
       // sized here, not in install: withExtensions calls install before
-      // any SparkContext exists, and a session builds its analyzer before
-      // it plans or generates any code
+      // any SparkContext exists, and this is the earliest per-session hook
+      // that reaches the session's SQLConf. A local collection encoded
+      // before the first analysis still creates the cache at Spark's default
       sizeCodegenCache(session.sessionState.conf)
       ResolveGraftRelations(session)
     }

@@ -39,6 +39,24 @@ class UcRestWireSpec extends org.scalatest.funsuite.AnyFunSuite with BeforeAndAf
     assert(!new RestCatalogStore("http://127.0.0.1:1").healthCheck())
   }
 
+  test("overwriteTable restores the original when an interrupt stops the re-create") {
+    val interrupting = new RestCatalogStore(server.address) {
+      override def createTable(t: TableInfo): TableInfo =
+        if (t.comment.contains("new")) throw new InterruptedException("stopped")
+        else super.createTable(t)
+    }
+    interrupting.createCatalog(CatalogInfo("c_int"))
+    interrupting.createSchema(SchemaInfo("s_int", "c_int"))
+    val original = interrupting.createTable(TableInfo("t", "c_int", "s_int", TableType.EXTERNAL,
+      FileType.DELTA, Seq(ColumnInfo("id", UcType.LongT, 0)), storageLocation = Some("/tmp/t_int"),
+      comment = Some("old")))
+    val e = intercept[InterruptedException] {
+      interrupting.overwriteTable(original.copy(comment = Some("new")))
+    }
+    assert(e.getMessage == "stopped")
+    assert(store.getTable("c_int", "s_int", "t").comment.contains("old"))
+  }
+
   test("column types survive the wire losslessly (decimal, interval, nested, partition index)") {
     store.createCatalog(CatalogInfo("c1", comment = Some("a catalog")))
     store.createSchema(SchemaInfo("s1", "c1"))

@@ -23,6 +23,10 @@ class CodegenCacheSpec extends AnyFunSuite {
     }
   }
 
+  // TestSpark analyzes once at start-up, so the cache is sized before any
+  // spec encodes a local Seq. No spec covers an application whose first
+  // action is `Seq(...).toDF`: that encode generates code before the
+  // analyzer exists and creates the JVM-wide cache at Spark's 100 entries.
   test("a second cycle over more classes than Spark's default cache compiles none") {
     val spark = TestSpark.spark
     // 60 distinct queries of 2 generated classes each: 120 classes, more
