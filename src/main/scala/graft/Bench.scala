@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Timing.timed
+
 /** Benchmark main: runs the headline queries against
   * sys.env("SPARK_GRAFT_SF_DIR") and prints one JSON line.
   *
@@ -258,9 +260,6 @@ object Bench {
     def opsDemoRun(pass: Int): Seq[(String, Double)] = {
       val grpCat = s"benchgrp$pass"
       import org.apache.spark.sql.functions.{col, lit}
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       def line(label: String, v: Double): Unit =
         System.err.println(f"[bench] ops_demo $label $v%.2fs")
       val (mvInit, mvIncr) = {

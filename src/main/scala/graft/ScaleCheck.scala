@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Timing.timed
+
 /** Scale-posture probe beyond the driver's sf0.1: times the operators
   * whose cost model is most at risk of going superlinear — the
   * distributed prefix sum (q103), the one-gram-shuffle span dedup (q91),
@@ -76,9 +78,6 @@ object ScaleCheck {
         .select(col("l_returnflag"), col("l_quantity").cast("double").as("l_quantity"))
       val src = new graft.tables.TxTable(spark, s"$loc/src")
       src.create(li)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed(graft.tables.IncrementalView.refresh(
         src, s"$loc/mv", Seq("l_returnflag"), Seq("l_quantity")))
       src.append(li.limit(10000))
@@ -122,9 +121,6 @@ object ScaleCheck {
       graft.tables.DeltaLogWriter.create(spark, loc, li,
         properties = Map("delta.enableDeletionVectors" -> "true"))
       val t = graft.tables.TxTable.forForeignDelta(spark, loc)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val d = timed(t.delete("l_orderkey % 97 = 0"))
       val p = timed(t.reorgPurge())
       System.err.println(f"[scalecheck] reorg_mor_delete $d%.2fs reorg_purge $p%.2fs")
@@ -148,9 +144,6 @@ object ScaleCheck {
         li.repartitionByRange(nFiles, col("l_orderkey")),
         properties = Map("delta.enableDeletionVectors" -> "true"))
       val t = graft.tables.TxTable.forForeignDelta(spark, loc)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val d = timed(t.delete("l_orderkey <= 2000"))
       val touched = t.snapshot.files.count(_.deletionVector.exists(_.cardinality > 0))
       val p = timed(t.reorgPurge())
@@ -170,9 +163,6 @@ object ScaleCheck {
       val t = graft.tables.TxTable.forIceberg(spark, loc)
       t.create(li)
       t.delete("l_orderkey % 97 = 0")
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val c = timed(graft.tables.IcebergLog.tableChanges(spark, loc, t.version, Some(t.version))
         .write.format("noop").mode("overwrite").save())
       System.err.println(f"[scalecheck] iceberg_changelog_delete $c%.2fs")
@@ -216,9 +206,6 @@ object ScaleCheck {
       t.create(li)
       graft.tables.IcebergWriter.equalityDelete(spark, loc, Seq("l_orderkey"),
         li.filter(col("l_orderkey") % 97 === 0).select("l_orderkey").distinct())
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val v = t.history.last
       val a = timed(graft.tables.IcebergLog.tableChanges(spark, loc, v, Some(v))
         .write.format("noop").mode("overwrite").save())
@@ -257,9 +244,6 @@ object ScaleCheck {
       val t = new graft.tables.TxTable(spark, loc)
       t.create(li.repartition(nFiles))
       val key = li.select(col("l_partkey")).head().getLong(0)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed(t.scan(s"l_partkey = $key")
         .write.format("noop").mode("overwrite").save())
       val b = timed(graft.tables.BloomIndex.enable(t, Seq("l_partkey")))
@@ -294,9 +278,6 @@ object ScaleCheck {
         partitionColumns = Seq("l_returnflag"))
       client.registerAsTable("scalegrp", "s", "t",
         graft.catalog.FileType.DELTA, s"$loc/t")
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed(spark.sql("""SELECT l_returnflag, COUNT(*) AS n,
           MIN(l_orderkey) AS lo, MAX(l_orderkey) AS hi
         FROM scalegrp.s.t GROUP BY l_returnflag""").collect())
@@ -321,9 +302,6 @@ object ScaleCheck {
       val t = graft.tables.TxTable.forIceberg(spark, loc)
       t.create(li)
       t.delete("l_orderkey % 5 != 0") // dense: ~80% of every file
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       spark.conf.set(graft.tables.IcebergCommitLog.InlineFoldMaxDeleteBytesConf, "1")
       val d = try timed(graft.tables.IcebergLog.toDF(spark, loc)
           .write.format("noop").mode("overwrite").save())
@@ -344,9 +322,6 @@ object ScaleCheck {
       li.repartition(16).write.mode("append").parquet(s"$root/drop")
       val t = new graft.tables.TxTable(spark, s"$root/t")
       t.create(li.limit(0))
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed(graft.tables.CopyInto.run(t, s"$root/drop"))
       val b = timed(graft.tables.CopyInto.run(t, s"$root/drop"))
       System.err.println(f"[scalecheck] copy_into_initial $a%.2fs copy_into_noop $b%.2fs")
@@ -377,9 +352,6 @@ object ScaleCheck {
         .select(col("l_orderkey"), col("l_suppkey"))
       val t = new graft.tables.TxTable(spark, s"$loc/t")
       t.create(li)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val client = new graft.client.LakehouseClient(spark)
       client.createCatalog("scalestats")
       client.createSchema("scalestats", "s")
@@ -452,9 +424,6 @@ object ScaleCheck {
       client2.createSchema("scaledf", "s")
       client2.registerAsTable("scaledf", "s", "t",
         graft.catalog.FileType.DELTA, s"$loc/t")
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val d = timed(t.delete("l_orderkey <= 2000"))
       require(graft.tables.ColumnStats.currentSum(t.snapshot, "l_suppkey").isDefined,
         "the delete fold must keep SUM servable")
@@ -502,9 +471,6 @@ object ScaleCheck {
         graft.catalog.FileType.DELTA, s"$loc/t")
       spark.sql("""ANALYZE TABLE scalendv.s.t COMPUTE STATISTICS
           FOR COLUMNS l_orderkey, l_quantity""").collect()
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val v = timed {
         val got = spark.sql("""SELECT APPROX_COUNT_DISTINCT(l_orderkey) AS d
           FROM scalendv.s.t WHERE l_returnflag = 'A'""").collect()
@@ -561,9 +527,6 @@ object ScaleCheck {
         partitionColumns = Seq("day"))
       client4.registerAsTable("scaleside", "s", "t",
         graft.catalog.FileType.DELTA, s"$loc/t")
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed {
         spark.sql("""ANALYZE TABLE scaleside.s.t COMPUTE STATISTICS
           FOR COLUMNS l_orderkey, l_quantity""").collect()
@@ -646,9 +609,6 @@ object ScaleCheck {
         .create(li.repartition(8), partitionColumns = Seq("day"))
       client5.registerAsTable("scaleiceside", "s", "t",
         graft.catalog.FileType.ICEBERG, s"$loc/t")
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed {
         spark.sql("""ANALYZE TABLE scaleiceside.s.t COMPUTE STATISTICS
           FOR COLUMNS l_orderkey, l_quantity""").collect()
@@ -722,9 +682,6 @@ object ScaleCheck {
           col("ts_us").as("w_start"), (col("ts_us") + lit(86400000000L)).as("w_end"))
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id").as("p_id"), col("user_id"), col("ts_us").as("p_ts"))
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       val a = timed {
         graft.ext.RangeJoin.pointInInterval(purchases, clicks,
             pointCol = "p_ts", startCol = "w_start", endCol = "w_end",

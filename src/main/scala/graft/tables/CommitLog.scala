@@ -622,22 +622,25 @@ private[graft] object IcebergCommitLog extends CommitLog {
       toInclusive: Option[Long]): Seq[(Long, Seq[AddFile])] = {
     val latest = IcebergLog.latestMetadataVersion(spark, location).getOrElse(return Seq.empty)
     val to = toInclusive.getOrElse(latest)
-    def filesAt(v: Long): Seq[AddFile] =
-      if (v < 1) Seq.empty
-      else try IcebergLog.stateAt(spark, location, Some(v)).files
-      catch { case _: graft.catalog.DoesNotExistError => Seq.empty }
+    def pathsAt(st: Option[IcebergLog.IceState]): Set[String] =
+      st.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
+    def stateAt(v: Long): Option[IcebergLog.IceState] =
+      if (v < 1) None
+      else try Some(IcebergLog.stateAt(spark, location, Some(v)))
+      catch { case _: graft.catalog.DoesNotExistError => None }
+    // the previous version's paths carry through the fold: one state
+    // derivation per version, not two
+    var prev = pathsAt(stateAt(fromExclusive))
     ((fromExclusive + 1) to to).map { v =>
-      val st = try Some(IcebergLog.stateAt(spark, location, Some(v)))
-        catch { case _: graft.catalog.DoesNotExistError => None }
+      val st = stateAt(v)
       val adds = st match {
         // compaction rearranges bytes, not data — its adds must not
         // re-enter change feeds or streaming sources
         case Some(s) if IcebergLog.currentOperation(s.meta) == "replace" => Seq.empty
-        case Some(s) =>
-          val prev = filesAt(v - 1).map(_.path).toSet
-          s.files.filterNot(a => prev.contains(a.path))
+        case Some(s) => s.files.filterNot(a => prev.contains(a.path))
         case None => Seq.empty
       }
+      prev = pathsAt(st)
       v -> adds
     }
   }

@@ -3,7 +3,7 @@ package graft.tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -20,16 +20,15 @@ import org.json4s.jackson.JsonMethods
   *
   * Scale posture: cdc files are written by the same distributed staging
   * job as data files and sized by |changed rows|, never |table|; the
-  * reader plans one distributed scan per commit over only that commit's
-  * cdc (or derived) files — no log-sized collects beyond the action lists
-  * Delta readers always hold.
+  * reader plans one distributed scan over the range's derived files and
+  * one over its cdc files, tagging rows through partition values — no
+  * log-sized collects beyond the action lists Delta readers always hold.
   */
 private[graft] object DeltaCdf {
   private implicit val formats: Formats = DefaultFormats
 
-  val ChangeTypeCol = "_change_type"
-  val CommitVersionCol = "_commit_version"
-  val CommitTimestampCol = "_commit_timestamp"
+  val ChangeTypeCol = LogFileIndex.ChangeTypeTag.name
+  val CommitVersionCol = LogFileIndex.CommitVersionTag.name
   val ChangeDataDir = "_change_data"
 
   def enabled(props: Map[String, String]): Boolean =
@@ -91,7 +90,8 @@ private[graft] object DeltaCdf {
       timestampMs: Long,
       adds: Seq[TxLog.AddFile],          // dataChange=true only
       removedPaths: Seq[String],         // dataChange=true only
-      cdc: Seq[TxLog.AddFile])
+      cdc: Seq[TxLog.AddFile],
+      actions: Seq[JValue])              // every action, for state replay
 
   /** Parse one commit's JSON for CDF purposes. Unlike state replay, this
     * keeps add/remove/cdc separately and honors the dataChange flag.
@@ -103,12 +103,14 @@ private[graft] object DeltaCdf {
     val adds = Seq.newBuilder[TxLog.AddFile]
     val removes = Seq.newBuilder[String]
     val cdcs = Seq.newBuilder[TxLog.AddFile]
+    val actions = Seq.newBuilder[JValue]
     val in = f.open(p)
     try {
       scala.io.Source.fromInputStream(in, "UTF-8").getLines().foreach { ln =>
         val t = ln.trim
         if (t.nonEmpty) {
           val j = JsonMethods.parse(t)
+          actions += j
           j \ "commitInfo" \ "timestamp" match {
             case JInt(i) => ts = i.toLong
             case JLong(l) => ts = l
@@ -146,7 +148,7 @@ private[graft] object DeltaCdf {
       }
     } finally in.close()
     if (ts == 0L) ts = f.getFileStatus(p).getModificationTime
-    CommitChanges(v, ts, adds.result(), removes.result(), cdcs.result())
+    CommitChanges(v, ts, adds.result(), removes.result(), cdcs.result(), actions.result())
   }
 
   /** Change feed of a real Delta table over commits
@@ -154,62 +156,59 @@ private[graft] object DeltaCdf {
     * `_commit_version`, `_commit_timestamp` — delta-rs `load_cdf` /
     * Delta-Spark `table_changes` shape. Commits with cdc actions use them
     * exclusively; others derive insert/delete from dataChange add/remove
-    * actions (reading removed rows from the prior version's snapshot, DVs
-    * applied). Read with the LATEST schema (older files' missing columns
-    * surface as null).
+    * actions (reading removed rows as the table held them before the
+    * commit, DVs applied). Read with the LATEST schema (older files'
+    * missing columns surface as null).
+    *
+    * Two log reads whatever the commit count: one over every derived
+    * entry (change type, version and timestamp are partition values of
+    * the read) and one over the cdc files (version and timestamp are).
     */
   def tableChanges(spark: SparkSession, location: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
     val snap = DeltaLog.snapshot(spark, location) // protocol gating
-    val physToLogical = DeltaLog.columnMappingOf(snap.schema).map(_.swap)
-    def remapPv(a: TxLog.AddFile): TxLog.AddFile =
-      if (physToLogical.isEmpty) a
-      else a.copy(partitionValues =
-        a.partitionValues.map { case (k, v) => physToLogical.getOrElse(k, k) -> v })
-
+    val logical = DeltaLog.logicalKeys(DeltaLog.columnMappingOf(snap.schema).map(_.swap)) _
     val f = DeltaLog.fs(spark, location)
-    val commits = DeltaLog.listCommitFiles(f, location)
+    val derived = Seq.newBuilder[(TxLog.AddFile, Seq[String])]
+    val cdc = Seq.newBuilder[(TxLog.AddFile, Seq[String])]
+    // the table's entries before each commit, for the rows of removed
+    // files: replayed once, at the first commit that removes any, then
+    // threaded forward through every later commit's actions
+    var prior: Option[DeltaLog.Replay] = None
+    DeltaLog.listCommitFiles(f, location)
       .filter { case (v, _) => v >= fromVersion && toVersion.forall(v <= _) }
-
-    val cdcSchema = StructType(snap.schema.fields :+ StructField(ChangeTypeCol, StringType))
-    val perCommit: Seq[DataFrame] = commits.map { case (v, p) =>
-      val c = parseCommit(spark, location, v, p)
-      val parts: Seq[DataFrame] =
-        if (c.cdc.nonEmpty) {
-          // cdc is authoritative for its commit
-          Seq(DeltaLog.dfForSnapshot(spark, location,
-            snap.copy(schema = cdcSchema, files = c.cdc.map(remapPv))))
-        } else {
-          val inserts =
-            if (c.adds.isEmpty) Seq.empty
-            else Seq(tagged(DeltaLog.dfForSnapshot(spark, location,
-              snap.copy(files = c.adds.map(remapPv))), "insert"))
-          val deletes =
-            if (c.removedPaths.isEmpty) Seq.empty
-            else {
-              // removed rows as they were when last active: prior snapshot
-              // entry (stats, partition values, deletion vector and all)
-              val prior = DeltaLog.snapshot(spark, location, Some(v - 1))
-              val byPath = prior.files.map(a => a.path -> a).toMap
-              val removedFiles = c.removedPaths.flatMap(byPath.get)
-              if (removedFiles.isEmpty) Seq.empty
-              else Seq(tagged(DeltaLog.dfForSnapshot(spark, location,
-                snap.copy(files = removedFiles)), "delete"))
-            }
-          inserts ++ deletes
+      .foreach { case (v, p) =>
+        val c = parseCommit(spark, location, v, p)
+        val tags = Seq(v.toString, LogFileIndex.timestampTag(c.timestampMs))
+        // cdc is authoritative for its commit
+        if (c.cdc.nonEmpty) cdc ++= c.cdc.map(a => logical(a) -> tags)
+        else {
+          derived ++= c.adds.map(a => logical(a) -> ("insert" +: tags))
+          if (c.removedPaths.nonEmpty) {
+            // removed rows as they were when last active: the prior
+            // entry (stats, partition values, deletion vector and all)
+            val state = prior.getOrElse(DeltaLog.replayState(spark, location, Some(v - 1))._1)
+            prior = Some(state)
+            derived ++= c.removedPaths.flatMap(state.active.get)
+              .map(a => logical(a) -> ("delete" +: tags))
+          }
         }
-      parts.map(_
-        .withColumn(CommitVersionCol, lit(v))
-        .withColumn(CommitTimestampCol,
-          lit(new java.sql.Timestamp(c.timestampMs)).cast(TimestampType)))
-        .reduceOption(_ unionByName _)
-    }.collect { case Some(df) => df }
+        prior.foreach(state => c.actions.foreach(DeltaLog.applyJsonAction(state, _)))
+      }
 
-    perCommit.reduceOption(_ unionByName _).getOrElse {
-      val schema = StructType(cdcSchema.fields ++ Seq(
-        StructField(CommitVersionCol, LongType, nullable = false),
-        StructField(CommitTimestampCol, TimestampType, nullable = false)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val commitTags = Seq(LogFileIndex.CommitVersionTag, LogFileIndex.CommitTimestampTag)
+    def read(s: TxLog.Snapshot, tags: Seq[StructField],
+        entries: Seq[(TxLog.AddFile, Seq[String])]): Seq[DataFrame] =
+      LogFileIndex.tagged(s, tags, entries).map(DeltaLog.dfForSnapshot(spark, location, _))
+    val cdcEntries = cdc.result()
+    val derivedEntries = derived.result()
+    val cdcReads =
+      if (cdcEntries.isEmpty) Seq.empty
+      else read(snap.copy(schema = StructType(snap.schema.fields :+
+        StructField(ChangeTypeCol, StringType))), commitTags, cdcEntries)
+    val derivedReads =
+      if (derivedEntries.isEmpty && cdcReads.nonEmpty) Seq.empty
+      else read(snap, LogFileIndex.ChangeTypeTag +: commitTags, derivedEntries)
+    (derivedReads ++ cdcReads).reduce(_ unionByName _)
   }
 }

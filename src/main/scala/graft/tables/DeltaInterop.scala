@@ -380,7 +380,7 @@ object DeltaLog {
       (d \ "cardinality").extract[Long]))
   }
 
-  private def applyJsonAction(state: Replay, line: JValue): Unit = {
+  private[tables] def applyJsonAction(state: Replay, line: JValue): Unit = {
     line \ "metaData" match {
       case JNothing => ()
       case m =>
@@ -613,16 +613,7 @@ object DeltaLog {
     // to logical names so pruning and partition handling work in the same
     // logical terms as unmapped tables. The schema keeps its mapping
     // metadata; dfForSnapshot uses it to read the physical columns.
-    val physToLogical = columnMappingOf(schema).map(_.swap)
-    val files0 = state.active.values.toSeq
-    val files =
-      if (physToLogical.isEmpty) files0
-      else files0.map { a =>
-        def remap[V](m: Map[String, V]) = m.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
-        a.copy(partitionValues = remap(a.partitionValues),
-          minValues = a.minValues.map(remap), maxValues = a.maxValues.map(remap),
-          nullCounts = a.nullCounts.map(remap))
-      }
+    val files = state.active.values.toSeq.map(logicalKeys(columnMappingOf(schema).map(_.swap)))
 
     TxLog.Snapshot(
       version = target,
@@ -632,6 +623,20 @@ object DeltaLog {
       properties = state.props,
       transactions = state.txns.toMap)
   }
+
+  /** `a` with its partition values and stats keyed by logical column
+    * names (`physToLogical` from a column-mapped schema; identity when
+    * empty).
+    */
+  private[tables] def logicalKeys(physToLogical: Map[String, String])(
+      a: TxLog.AddFile): TxLog.AddFile =
+    if (physToLogical.isEmpty) a
+    else {
+      def remap[V](m: Map[String, V]) = m.map { case (k, v) => physToLogical.getOrElse(k, k) -> v }
+      a.copy(partitionValues = remap(a.partitionValues),
+        minValues = a.minValues.map(remap), maxValues = a.maxValues.map(remap),
+        nullCounts = a.nullCounts.map(remap))
+    }
 
   /** Current (or time-traveled) contents of a real Delta table. */
   def toDF(spark: SparkSession, location: String, asOfVersion: Option[Long] = None): DataFrame =
@@ -858,26 +863,6 @@ object DeltaLog {
     // unparseable/unreadable commits cannot prove append-only —
     // conservative false, the consumer re-syncs instead of crashing
     case NonFatal(_) => false
-  }
-
-  /** Incremental change feed: rows ADDED in commits (fromVersion, latest],
-    * each tagged `_commit_version` — the shape of Delta's streaming source
-    * with ignoreDeletes (remove actions are not materialized). Read with
-    * the LATEST schema; older files' missing columns read as null.
-    */
-  def changesSince(spark: SparkSession, location: String, fromVersion: Long): DataFrame = {
-    val snap = snapshot(spark, location) // also runs protocol gating
-    val perCommit = addsBetween(spark, location, fromVersion).filter(_._2.nonEmpty)
-    val out = perCommit.map { case (v, adds) =>
-      dfForSnapshot(spark, location, snap.copy(files = adds))
-        .withColumn("_commit_version", lit(v))
-    }
-    out.reduceOption(_ unionByName _).getOrElse {
-      val schema = org.apache.spark.sql.types.StructType(
-        snap.schema.fields :+ org.apache.spark.sql.types.StructField(
-          "_commit_version", org.apache.spark.sql.types.LongType, nullable = false))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
   }
 
   /** Physical row provenance columns a DV-aware read threads through the

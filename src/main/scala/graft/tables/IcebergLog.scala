@@ -307,6 +307,8 @@ object IcebergLog {
     * files) come from the manifest's partition values, per the spec's
     * Column Projection rule #2: they are the relation's partition
     * columns. Detection costs one driver footer read of the first file.
+    * So are snapshot partition columns the table metadata does not
+    * define (a change feed's commit tags, LogFileIndex.tagged).
     * `snap` supplies the schema and the pruning context.
     */
   private[tables] def readData(spark: SparkSession, meta: JValue, snap: TxLog.Snapshot,
@@ -315,8 +317,11 @@ object IcebergLog {
     val location = (meta \ "location").extract[String]
     val transforms = transformFieldsOf(meta).filter { case (_, _, src) =>
       schema.fieldNames.contains(src) }
+    val tableCols = topFields(meta).map(_._2).toSet
+    val tags = StructType(schema.fields.filter(f =>
+      snap.partitionColumns.contains(f.name) && !tableCols.contains(f.name)))
     def relation(fs: Seq[TxLog.AddFile], data: StructType,
-        parts: StructType = new StructType(), names: Map[String, String] = Map.empty) =
+        parts: StructType = tags, names: Map[String, String] = Map.empty) =
       LogFileIndex.read(spark, location, snap, fs, data, parts, transforms, names)
     def sel(df: DataFrame) =
       df.select(schema.fieldNames.toIndexedSeq.map(col) ++ metaSel: _*)
@@ -329,7 +334,8 @@ object IcebergLog {
             footerCached(spark.sessionState.newHadoopConf(), files.head)._2.toSet
           identityCols.filterNot(firstNames.contains)
         }
-      val (parts, data) = schema.fields.partition(f => missing.contains(f.name))
+      val (parts, data) = schema.fields.partition(f =>
+        missing.contains(f.name) || tags.fieldNames.contains(f.name))
       return sel(relation(files, StructType(data), StructType(parts)))
     }
     spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
@@ -376,7 +382,7 @@ object IcebergLog {
           if (src == null) org.apache.spark.sql.functions.lit(null).cast(dt).as(cur)
           else col(s"`$src`").as(cur)
       }
-      parts += base.select(cols ++ metaSel: _*)
+      parts += base.select(cols ++ tags.fieldNames.map(col) ++ metaSel: _*)
     }
     parts.result().reduce(_.unionAll(_))
   }
@@ -881,16 +887,18 @@ object IcebergLog {
     * Scale shape: ONE state reconstruction per version — each
     * iteration's state carries forward as the next iteration's previous
     * state (metadata-only commits refresh schema/spec from the single
-    * JSON document without re-walking manifests). Plan size is bounded:
-    * beyond [[ChangelogUnionFanoutMax]] append commits, the per-commit
-    * literal-tagged branches collapse into ONE scan of every appended
-    * file plus a broadcast (file path → version, timestamp) lookup, so
-    * a 1,000-commit feed costs one plan, not 1,000 branches.
+    * JSON document without re-walking manifests). Every append's inserts
+    * are ONE read of all appended files at the `to` schema, with change
+    * type, version and timestamp as partition values of the read
+    * (LogFileIndex.tagged), so a 1,000-commit feed plans one scan, not
+    * 1,000 branches. Only inserts under same-commit delete files and
+    * the deletes stay per commit: each needs that version's delete set
+    * and schema era.
     */
   def tableChanges(spark: SparkSession, location: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    import org.apache.spark.sql.functions.{broadcast, lit}
+    import org.apache.spark.sql.functions.lit
     val latest = latestMetadataVersion(spark, location).getOrElse(
       throw graft.catalog.DoesNotExistError(s"no iceberg table at $location"))
     val to = toVersion.getOrElse(latest)
@@ -922,8 +930,7 @@ object IcebergLog {
     // create commit (no previous document → empty table ≡ None)
     var stPrev: Option[IceState] =
       if (start <= 1) None else Some(stateAt(spark, location, Some(start - 1)))
-    val appendGroups =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Seq[TxLog.AddFile], IceState)]
+    val appends = Seq.newBuilder[(TxLog.AddFile, Seq[String])]
     val insertFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val deleteFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     (start to to).foreach { v =>
@@ -967,10 +974,12 @@ object IcebergLog {
             // became visible is not reported — position deletes can hit
             // same-sequence files, equality deletes cannot
             // (strictly-smaller rule), and dfFor enforces both. Such
-            // groups can't join the batched one-scan plan, so they emit
-            // their own frame (rare shape; our writer never produces it).
+            // files can't join the one read of appended files, so they
+            // emit their own frame (rare shape; our writer never
+            // produces it).
             if (added.nonEmpty) {
-              if (newDel.isEmpty) appendGroups += ((v, tsMs, added, st))
+              if (newDel.isEmpty) appends ++= added.map(_ ->
+                Seq("insert", v.toString, LogFileIndex.timestampTag(tsMs)))
               else insertFrames += tag(alignToOut(
                 dfFor(spark, st.copy(files = added, deletes = newDel)),
                 st.meta), "insert", v, tsMs)
@@ -1018,41 +1027,11 @@ object IcebergLog {
         stPrev = Some(st)
       }
     }
-    val appendFrames: Seq[DataFrame] =
-      if (appendGroups.size <= ChangelogUnionFanoutMax)
-        // few commits: literal version/timestamp columns per branch keep
-        // everything constant-foldable
-        appendGroups.toSeq.map { case (v, tsMs, added, st) =>
-          tag(alignToOut(dfFor(spark, st.copy(files = added, deletes = Seq.empty)),
-            st.meta), "insert", v, tsMs)
-        }
-      else {
-        // many commits: one field-id-resolved scan of every appended file
-        // at the `to` schema + a broadcast path→(version, ts) lookup
-        val lookupRows = appendGroups.toSeq.flatMap { case (v, tsMs, added, _) =>
-          added.map(f => (DeletionVectors.normalizedUri(f.path), v,
-            new java.sql.Timestamp(tsMs)))
-        }
-        val lookup = spark.createDataFrame(lookupRows)
-          .toDF("__np", "_commit_version", "_commit_timestamp")
-        val allAdded = appendGroups.toSeq.flatMap(_._3)
-        val scan = dfFor(spark,
-            outState.copy(files = allAdded, deletes = Seq.empty), withMeta = true)
-          .withColumn("__np", toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))))
-        Seq(scan.join(broadcast(lookup), Seq("__np"))
-          .select(outFields.map(f => col(f.name)) ++ Seq(
-            lit("insert").as(DeltaCdf.ChangeTypeCol),
-            col("_commit_version"), col("_commit_timestamp")): _*))
-      }
-    val frames = appendFrames ++ insertFrames ++ deleteFrames
-    frames.reduceOption(_ unionByName _).getOrElse {
-      val schema = org.apache.spark.sql.types.StructType(outFields ++ Seq(
-        org.apache.spark.sql.types.StructField(DeltaCdf.ChangeTypeCol, StringType),
-        org.apache.spark.sql.types.StructField("_commit_version", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("_commit_timestamp",
-          org.apache.spark.sql.types.TimestampType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val inserts = LogFileIndex.tagged(pruneView(outState), Seq(LogFileIndex.ChangeTypeTag,
+        LogFileIndex.CommitVersionTag, LogFileIndex.CommitTimestampTag), appends.result())
+      .map(l => dfFor(spark, outState.copy(schema = l.schema,
+        partitionColumns = l.partitionColumns, files = l.files, deletes = Seq.empty)))
+    (inserts ++ insertFrames ++ deleteFrames).reduce(_ unionByName _)
   }
 
   /** Latest snapshot at or before `tsMs` (snapshot-log order). */
@@ -1192,15 +1171,9 @@ object IcebergLog {
     }
   }
 
-  /** Append-commit branch cap for tableChanges plans — beyond this many
-    * append commits the per-commit literal branches collapse into one
-    * scan + broadcast lookup, so plan size stays O(1) in commit count.
-    */
-  private[tables] val ChangelogUnionFanoutMax = 32
-
   /** Test-visible count of full state reconstructions (manifest-list +
-    * manifest traversals) — pins tableChanges' one-derivation-per-version
-    * contract. Thread-local so concurrently running suites can't skew a
+    * manifest traversals) — pins the change feeds' (tableChanges,
+    * changesSince) one-derivation-per-version contract. Thread-local so concurrently running suites can't skew a
     * measurement (state derivation is always a driver-thread-synchronous
     * call).
     */
@@ -1217,30 +1190,87 @@ object IcebergLog {
     */
   private[tables] def equalityVictimPositions(spark: SparkSession,
       st: IceState): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    import org.apache.spark.sql.functions.{broadcast, lit}
     val eqDel = st.deletes.filter(_.content == 2)
-    val byId = topFields(st.meta).map { case (id, n, _) => id -> n }.toMap
-    val metaSel = Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
-      col("_metadata.row_index").as(DeltaLog.RowMetaCol))
-    // files appended at-or-after every delete's sequence cannot hold
-    // victims (strictly-smaller rule) — prune them from the scan, so on
-    // an upsert-heavy table the cost tracks the OLD files still in
-    // scope, not the whole table
-    val maxDelSeq = eqDel.map(_.seq).max
-    val candidates = st.files.filter(f =>
-      st.dataSeq.getOrElse(f.path, 0L) < maxDelSeq)
-    if (candidates.isEmpty)
+    val scoped = equalityScope(st, eqDel)
+    if (scoped.files.isEmpty)
       return spark.createDataFrame(Seq.empty[(String, Long)])
         .toDF("__np", "__pos")
-    val base = readData(spark, st.meta, pruneView(st), candidates, metaSel)
-    val seqRows = candidates.map(a =>
-      (DeletionVectors.normalizedUri(a.path), st.dataSeq.getOrElse(a.path, 0L)))
-    val seqDf = spark.createDataFrame(seqRows).toDF("__np", "__dataseq")
-    val withSeq = base
+    val metaSel = Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
+      col("_metadata.row_index").as(DeltaLog.RowMetaCol))
+    equalityJoin(spark, scoped,
+        readData(spark, st.meta, pruneView(st), scoped.files, metaSel), eqDel, kill = true)
+      .select(col("__np"), col(DeltaLog.RowMetaCol).as("__pos"))
+      .distinct()
+  }
+
+  /** Rows of `stPrev`'s live state KILLED by the given new
+    * equality-delete files — the reader's anti-join flipped to a
+    * semi-join, deduplicated by (file, pos) so a row matching several
+    * delete groups dies exactly once.
+    */
+  private def equalityDying(spark: SparkSession, stPrev: IceState,
+      eqDel: Seq[IceFile]): DataFrame = {
+    val scoped = equalityScope(stPrev, eqDel)
+    equalityJoin(spark, scoped, dfFor(spark, scoped, withMeta = true), eqDel, kill = true)
+      .dropDuplicates(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+      .drop("__np", DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+  }
+
+  /** Merge-on-read EQUALITY deletes (content=2 — the shape streaming
+    * upsert engines like Flink commit): the rows of `df` no live
+    * equality-delete file of `st` kills.
+    */
+  private def applyEqualityDeletes(spark: SparkSession, df: DataFrame,
+      st: IceState): DataFrame = {
+    val eqDeletes = st.deletes.filter(_.content == 2)
+    if (eqDeletes.isEmpty) df
+    else equalityJoin(spark, st, df, eqDeletes, kill = false).drop("__np")
+  }
+
+  /** `st` narrowed to the files an equality delete of `eqDel` can reach:
+    * files appended at-or-after every delete's sequence cannot hold
+    * victims (strictly-smaller rule), so on an upsert-heavy table the
+    * cost tracks the OLD files still in scope, not the whole table.
+    */
+  private def equalityScope(st: IceState, eqDel: Seq[IceFile]): IceState = {
+    val maxDelSeq = eqDel.map(_.seq).max
+    st.copy(files = st.files.filter(f => st.dataSeq.getOrElse(f.path, 0L) < maxDelSeq))
+  }
+
+  /** The equality-delete match over `rows`, a read of `st`'s files
+    * carrying DeltaLog.FileMetaCol: a data row dies when some row of an
+    * `eqDel` file matches it on that delete's `equality_ids` columns AND
+    * the row's data file has a STRICTLY SMALLER data sequence number than
+    * the delete file (so re-inserts after the delete survive, per spec
+    * "Scan Planning"). Null-safe equality matches null keys, like
+    * Iceberg's own readers. `kill` keeps the rows some delete kills (a
+    * row matching several delete groups appears once per group); else
+    * the rows none kills. Either way the rows gain `__np`, their
+    * normalized file path.
+    *
+    * Plan shape: the per-file sequence number broadcast-joins onto the
+    * scan by file path (metadata-sized, map-side); each distinct
+    * equality-ids set becomes ONE semi- or anti-join against the union
+    * of its delete files. The null-safe key equalities extract as hash
+    * join keys and the sequence predicate rides as a post-join filter,
+    * so the strategy is left to AQE: a Flink-upsert micro-batch is tiny
+    * and broadcasts at runtime, while a bulk equality delete (a
+    * compliance purge, O(table keys) rows in one group) sort-merges
+    * instead of OOMing the driver.
+    */
+  private def equalityJoin(spark: SparkSession, st: IceState, rows: DataFrame,
+      eqDel: Seq[IceFile], kill: Boolean): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
+    import org.apache.spark.sql.functions.lit
+    val byId = topFields(st.meta).map { case (id, n, _) => id -> n }.toMap
+    val seqDf = spark.createDataFrame(st.files.map(a =>
+        (DeletionVectors.normalizedUri(a.path), st.dataSeq.getOrElse(a.path, 0L))))
+      .toDF("__np", "__dataseq")
+    val withSeq = rows
       .withColumn("__np", toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))))
       .join(broadcast(seqDf), Seq("__np"), "left")
-    eqDel.groupBy(_.equalityIds).map { case (ids, files) =>
+    // one (key columns, renamed delete rows tagged `__delseq`) per group
+    val groups = eqDel.groupBy(_.equalityIds).toSeq.map { case (ids, files) =>
       val cols = ids.map(id => byId.getOrElse(id, throw UnsupportedOperationError(
         s"iceberg: equality_ids $ids reference unknown field id $id")))
       val delRows = files.map { d =>
@@ -1248,108 +1278,15 @@ object IcebergLog {
           .select(cols.map(col).toIndexedSeq: _*)
           .withColumn("__delseq", lit(d.seq))
       }.reduce(_ unionByName _)
-      val renamed = cols.foldLeft(delRows)((acc, c) =>
-        acc.withColumnRenamed(c, s"__eq_$c"))
-      val cond = cols.map(c => withSeq(c) <=> renamed(s"__eq_$c"))
-        .reduce(_ && _) && withSeq("__dataseq") < renamed("__delseq")
-      // plain semi-join: the null-safe key equalities extract as hash
-      // join keys and the sequence predicate rides as a post-join filter,
-      // so AQE broadcasts a small delete delta on its own — forcing
-      // broadcast would OOM on a bulk equality delete (a compliance
-      // purge arrives as ONE group with O(table keys) rows), exactly the
-      // trap the position-delete path avoids
-      withSeq.join(renamed, cond, "left_semi")
-    }.reduce(_ unionByName _)
-      .select(col("__np"), col(DeltaLog.RowMetaCol).as("__pos"))
-      .distinct()
-  }
-
-  /** Rows of `stPrev`'s live state KILLED by the given new
-    * equality-delete files — the reader's sequence-scoped anti-join
-    * (applyEqualityDeletes) flipped to a semi-join, deduplicated by
-    * (file, pos) so a row matching several delete groups dies exactly
-    * once. The join is left to AQE (small delete deltas broadcast on
-    * their own; a bulk purge sort-merges instead of OOMing).
-    */
-  private def equalityDying(spark: SparkSession, stPrev: IceState,
-      eqDel: Seq[IceFile]): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    import org.apache.spark.sql.functions.{broadcast, lit}
-    val byId = topFields(stPrev.meta).map { case (id, n, _) => id -> n }.toMap
-    // same sequence-scope pruning as equalityVictimPositions: only files
-    // older than the newest delete can bleed rows
-    val maxDelSeq = eqDel.map(_.seq).max
-    val scoped = stPrev.copy(files = stPrev.files.filter(f =>
-      stPrev.dataSeq.getOrElse(f.path, 0L) < maxDelSeq))
-    val seqRows = scoped.files.map(a =>
-      (DeletionVectors.normalizedUri(a.path), scoped.dataSeq.getOrElse(a.path, 0L)))
-    val seqDf = spark.createDataFrame(seqRows).toDF("__np", "__dataseq")
-    val live = dfFor(spark, scoped, withMeta = true)
-      .withColumn("__np", toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))))
-      .join(broadcast(seqDf), Seq("__np"), "left")
-    val dying = eqDel.groupBy(_.equalityIds).map { case (ids, files) =>
-      val cols = ids.map(id => byId.getOrElse(id, throw UnsupportedOperationError(
-        s"iceberg changelog: equality_ids $ids reference unknown field id $id")))
-      val delRows = files.map { d =>
-        spark.read.parquet(d.path)
-          .select(cols.map(col).toIndexedSeq: _*)
-          .withColumn("__delseq", lit(d.seq))
-      }.reduce(_ unionByName _)
-      val renamed = cols.foldLeft(delRows)((acc, c) =>
-        acc.withColumnRenamed(c, s"__eq_$c"))
-      val cond = cols.map(c => live(c) <=> renamed(s"__eq_$c"))
-        .reduce(_ && _) && live("__dataseq") < renamed("__delseq")
-      live.join(renamed, cond, "left_semi")
-    }.reduce(_ unionByName _)
-    dying.dropDuplicates(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-      .drop("__np", "__dataseq", DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-  }
-
-  /** Merge-on-read EQUALITY deletes (content=2 — the shape streaming
-    * upsert engines like Flink commit): a data row is dead when some
-    * equality-delete row matches it on the delete's `equality_ids`
-    * columns AND the row's data file has a STRICTLY SMALLER data sequence
-    * number than the delete file (so re-inserts after the delete survive,
-    * per spec "Scan Planning").
-    *
-    * Plan shape: the per-file sequence number broadcast-joins onto the
-    * scan by file path (metadata-sized, map-side); each distinct
-    * equality-ids set becomes ONE anti-join against the union of its
-    * delete files, with the strategy left to AQE — a Flink-upsert
-    * micro-batch is tiny and broadcasts at runtime, while a bulk
-    * equality delete (compliance purge, O(table keys) rows in one
-    * group) sort-merges instead of OOMing the driver. Null-safe
-    * equality matches null keys, like Iceberg's own readers.
-    */
-  private def applyEqualityDeletes(spark: SparkSession, df: DataFrame,
-      st: IceState): DataFrame = {
-    val eqDeletes = st.deletes.filter(_.content == 2)
-    if (eqDeletes.isEmpty) return df
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    val byId = topFields(st.meta).map { case (id, n, _) => id -> n }.toMap
-    // per-data-file sequence number, attached map-side by file path
-    val seqRows = st.files.map(a =>
-      (DeletionVectors.normalizedUri(a.path), st.dataSeq.getOrElse(a.path, 0L)))
-    val seqDf = spark.createDataFrame(seqRows).toDF("__np", "__dataseq")
-    val norm = toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol))))
-    var out = df.withColumn("__np", norm)
-      .join(broadcast(seqDf), Seq("__np"), "left")
-      .drop("__np")
-    eqDeletes.groupBy(_.equalityIds).foreach { case (ids, files) =>
-      val cols = ids.map(id => byId.getOrElse(id,
-        throw UnsupportedOperationError(
-          s"iceberg: equality_ids $ids reference unknown field id $id")))
-      // union the group's delete files, each tagged with its sequence
-      val delRows = files.map { d =>
-        spark.read.parquet(d.path)
-          .select(cols.map(col).toIndexedSeq: _*)
-          .withColumn("__delseq", org.apache.spark.sql.functions.lit(d.seq))
-      }.reduce(_ unionByName _)
-      val renamed = cols.foldLeft(delRows) { (acc, c) => acc.withColumnRenamed(c, s"__eq_$c") }
-      val cond = cols.map(c => out(c) <=> renamed(s"__eq_$c"))
-        .reduce(_ && _) && out("__dataseq") < renamed("__delseq")
-      out = out.join(renamed, cond, "left_anti")
+      cols -> cols.foldLeft(delRows)((acc, c) => acc.withColumnRenamed(c, s"__eq_$c"))
     }
+    def join(df: DataFrame, cols: Seq[String], dels: DataFrame, how: String): DataFrame =
+      df.join(dels, cols.map(c => df(c) <=> dels(s"__eq_$c")).reduce(_ && _) &&
+        df("__dataseq") < dels("__delseq"), how)
+    val out =
+      if (kill) groups.map { case (cols, dels) => join(withSeq, cols, dels, "left_semi") }
+        .reduce(_ unionByName _)
+      else groups.foldLeft(withSeq) { case (df, (cols, dels)) => join(df, cols, dels, "left_anti") }
     out.drop("__dataseq")
   }
 }

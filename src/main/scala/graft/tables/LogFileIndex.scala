@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMeta
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** The one read path of all three commit logs: a Spark `FileIndex`
   * whose listing IS the log snapshot (Delta's TahoeFileIndex design,
@@ -26,6 +26,10 @@ import org.apache.spark.sql.types.StructType
   * them after the scan), data filters prune conservatively through
   * the log's min/max/null counts, Iceberg transform values and the
   * Bloom sidecar (Spark re-applies them to the surviving rows).
+  *
+  * Change feeds read the same way: each entry's commit tags are
+  * partition values of its file (`tagged`), so a feed over any number
+  * of commits is one relation.
   *
   * The index holds the snapshot's own AddFile list and builds
   * `FileStatus`es per call, so a memoized plan keeps no second
@@ -146,6 +150,50 @@ private[tables] object LogFileIndex {
     read(spark, location, snap, files, StructType(data), StructType(parts))
       .select(snap.schema.fieldNames.toIndexedSeq.map(n =>
         org.apache.spark.sql.functions.col(s"`$n`")) ++ metaSel: _*)
+  }
+
+  /** Change-feed tags: per-file constants a feed's read serves as
+    * partition columns.
+    */
+  val ChangeTypeTag = StructField("_change_type", StringType)
+  val CommitVersionTag = StructField("_commit_version", LongType)
+  val CommitTimestampTag = StructField("_commit_timestamp", TimestampType)
+
+  /** A commit instant as a tag value: ISO-8601 in UTC with a `Z`, which
+    * the read's string cast resolves to the same instant in every
+    * session time zone.
+    */
+  def timestampTag(ms: Long): String = java.time.Instant.ofEpochMilli(ms).toString
+
+  /** `s` over a change feed's (file, tag values) entries: each AddFile
+    * carries its `tags` values as partition values and the schema and
+    * partition columns end with `tags`, so one read serves the tags like
+    * partition values (and a filter on a tag prunes files). Split into
+    * layers in which no path appears with two different deletion
+    * vectors, because DV lookups key by path and a DV table re-adds the
+    * same file with a new DV on each DELETE; a path repeated with the
+    * same DV (a file inserted, then deleted, in one feed) reads once per
+    * entry in one layer. Usually one layer. Never empty: a feed over no
+    * files reads as one empty relation with the tagged schema.
+    */
+  def tagged(s: TxLog.Snapshot, tags: Seq[StructField],
+      entries: Seq[(TxLog.AddFile, Seq[String])]): Seq[TxLog.Snapshot] = {
+    val names = tags.map(_.name)
+    // path → the DV it carries in layer i, at index i
+    val dvsByPath = scala.collection.mutable.HashMap.empty[String,
+      Vector[Option[DeletionVectors.Descriptor]]]
+    val byLayer = entries.map { case (a, values) =>
+      val dvs = dvsByPath.getOrElse(a.path, Vector.empty)
+      val layer = dvs.indexOf(a.deletionVector) match {
+        case -1 => dvsByPath(a.path) = dvs :+ a.deletionVector; dvs.size
+        case i => i
+      }
+      layer -> a.copy(partitionValues = a.partitionValues ++ names.zip(values))
+    }.groupMap(_._1)(_._2)
+    val layers = if (byLayer.isEmpty) Seq(Seq.empty) else byLayer.keys.toSeq.sorted.map(byLayer)
+    val schema = StructType(s.schema.fields ++ tags)
+    layers.map(fs => s.copy(schema = schema, partitionColumns = s.partitionColumns ++ names,
+      files = fs))
   }
 
   /** Number of files the planned log scans of `df` read, asked through

@@ -58,20 +58,13 @@ final class TxTable(val spark: SparkSession, val location: String,
     * surface only their new files). Read with the LATEST schema, so files
     * written before a MERGE evolution read the new columns as null.
     * Drives incremental pipelines without reprocessing the whole table.
+    * One log read: the version is each added file's partition value.
     */
   def changesSince(fromVersion: Long, toVersion: Option[Long] = None): DataFrame = {
-    val s = snapshot
-    val commits = log.addsBetween(spark, location, fromVersion, toVersion)
-      .filter(_._2.nonEmpty)
-    val out = commits.map { case (v, added) =>
-      dfFor(s.copy(files = added)).withColumn("_commit_version", lit(v))
-    }
-    out.reduceOption(_ unionByName _).getOrElse {
-      val schema = org.apache.spark.sql.types.StructType(s.schema.fields :+
-        org.apache.spark.sql.types.StructField("_commit_version",
-          org.apache.spark.sql.types.LongType, nullable = false))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    val entries = log.addsBetween(spark, location, fromVersion, toVersion)
+      .flatMap { case (v, added) => added.map(_ -> Seq(v.toString)) }
+    LogFileIndex.tagged(snapshot, Seq(LogFileIndex.CommitVersionTag), entries)
+      .map(log.dfForSnapshot(spark, location, _)).reduce(_ unionByName _)
   }
 
   /** True iff every commit in (fromVersion, toVersion∨latest] only ADDED

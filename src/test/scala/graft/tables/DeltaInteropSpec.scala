@@ -229,11 +229,12 @@ class DeltaInteropSpec extends AnyFunSuite {
     val loc = TestSpark.tmpDir("delta-cdc")
     DeltaLogWriter.create(spark, loc, df1)       // v0: ids 0..3
     DeltaLogWriter.append(spark, loc, df2)       // v1: ids 4..5
-    val changes = DeltaLog.changesSince(spark, loc, 0L)
+    val t = TxTable.forForeignDelta(spark, loc)
+    val changes = t.changesSince(0L)
     assert(changes.columns.contains("_commit_version"))
     assert(changes.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(4L, 5L))
     assert(changes.select("_commit_version").distinct().collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(DeltaLog.changesSince(spark, loc, 1L).count() == 0)
+    assert(t.changesSince(1L).count() == 0)
   }
 
   test("writer auto-checkpoints every 10th commit and the reader starts from it") {

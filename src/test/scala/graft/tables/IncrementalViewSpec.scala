@@ -241,12 +241,13 @@ class IncrementalViewSpec extends AnyFunSuite {
     // TWO full manifest traversals per version
     assert(derivs <= top + 2,
       s"$derivs state derivations for a $top-version history")
-    // bounded plan: the 50 append commits collapse into ONE scan plus a
-    // broadcast path→version lookup, not 50 union branches
-    val scans = ch.queryExecution.executedPlan.collect {
+    // bounded plan: the 50 append commits are ONE scan whose commit tags
+    // are partition values, not 50 union branches
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scans = Plans.collect(ch.queryExecution.executedPlan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
     }
-    assert(scans.size <= 2, s"expected a collapsed scan, got ${scans.size}")
+    assert(scans.size == 1, s"expected one scan, got ${scans.size}")
     val rows = ch.select("id", "_commit_version").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows == (0 until 50).map(i => (i.toLong, i.toLong + 1L)).toSet)
