@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Measurement tool (optimization guide §1.1/§7.2): dump
@@ -22,19 +23,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.headlineQueries.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.sql.GraftSparkSessionExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probes.session(defaultCpus = 32)
     new java.io.File(outDir).mkdirs()
     val mode = ExplainMode.fromString("formatted")
     names.foreach { name =>
@@ -47,7 +36,7 @@ object PlanDump {
             Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)
             println(s"[plandump] wrote ${name}_$suffix.txt")
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[plandump] $name failed: ${e.getMessage}")
           }
       }

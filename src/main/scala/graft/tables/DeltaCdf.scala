@@ -124,7 +124,7 @@ private[graft] object DeltaCdf {
                 (a \ "partitionValues").extractOrElse[Map[String, String]](Map.empty)
                   .filter { case (_, x) => x != null },
                 (a \ "size").extractOrElse[Long](0L),
-                (a \ "stats").extractOpt[String], None)
+                (a \ "stats").extractOpt[String], DeltaLog.dvOf(a \ "deletionVector"))
             case _ => ()
           }
           j \ "remove" match {

@@ -370,7 +370,7 @@ object DeltaLog {
   }
 
   /** Parse a deletionVector descriptor (JSON action form). */
-  private def dvOf(v: JValue): Option[DeletionVectors.Descriptor] = v match {
+  private[tables] def dvOf(v: JValue): Option[DeletionVectors.Descriptor] = v match {
     case JNothing | JNull => None
     case d => Some(DeletionVectors.Descriptor(
       (d \ "storageType").extract[String],

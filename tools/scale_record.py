@@ -1,76 +1,122 @@
 #!/usr/bin/env python3
-"""Aggregate the min-of-two Bench + ScaleCheck runs at sf0.1 and the
-ScaleGen x10 fixture into SCALE_r{N}.json (per-entry minimum, ratio map).
+"""Merge the Bench + ScaleCheck logs of one scale round into SCALE_r<round>.json.
 
-Usage: scale_record.py <round> <bench01_1> <bench01_2> <bench1_1> <bench1_2>
-                        <sc01_1> <sc01_2> <sc1_1> <sc1_2>
+Usage: scale_record.py <round> <protocol note>
+
+Reads every pass tools/scale_run.sh left for the round,
+/tmp/{bench,sc}_sf{01,1}_r<round>_<pass>.out, and writes SCALE_r<round>.json
+at the repo root. Every entry at both scales (sf0.1 and the ScaleGen x10
+fixture) is its minimum over the passes that succeeded; a negative entry is
+a failed probe and loses to any pass that succeeded. Bench's totals are
+recomputed over the merged non-negative headline entries. The ratio map
+divides each ScaleCheck entry at x10 by the same entry at sf0.1.
 """
+import glob
 import json
+import os
 import sys
 
+LOG_DIR = "/tmp"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def read_json_line(path, metric):
+
+def last_json(path, metric):
+    """The last parseable `{"metric":<metric>,...}` line of a log; sbt's
+    `[info] ` prefix is stripped."""
+    out = None
     with open(path, errors="replace") as f:
         for line in f:
-            i = line.find('{"metric":"%s"' % metric)
-            if i >= 0:
-                return json.loads(line[i:])
-    raise SystemExit(f"no {metric} JSON line in {path}")
-
-
-def min_merge(a, b):
-    """Per-entry minimum of two bench/scalecheck dicts (recursive over
-    the nested demo blocks)."""
-    out = {}
-    for k, va in a.items():
-        vb = b.get(k, va)
-        if isinstance(va, dict):
-            out[k] = min_merge(va, vb)
-        elif isinstance(va, (int, float)) and isinstance(vb, (int, float)) and k != "sf":
-            out[k] = min(va, vb)
-        else:
-            out[k] = va
+            line = line.strip()
+            if line.startswith("[info] "):
+                line = line[len("[info] "):]
+            if line.startswith("{") and f'"metric":"{metric}"' in line:
+                try:
+                    out = json.loads(line)
+                except json.JSONDecodeError:
+                    pass
+    if out is None:
+        raise SystemExit(f"no {metric} JSON line in {path}")
     return out
 
 
-def flat_queries(bench, sc):
-    q = {}
-    q.update(bench.get("queries", {}))
-    for blk in ("skew_demo", "dv_demo", "iceberg_demo", "ops_demo"):
-        q.update(bench.get(blk, {}))
-    q.update(sc.get("queries", {}))
-    return q
+def min_merge(a, b):
+    """Per-entry minimum of two records of the same shape; a negative
+    number is a failed probe. Keys present in either record are kept."""
+    if isinstance(a, dict) and isinstance(b, dict):
+        return {k: min_merge(a[k], b[k]) if k in a and k in b else a.get(k, b.get(k))
+                for k in {**a, **b}}
+    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
+        if a < 0:
+            return b
+        if b < 0:
+            return a
+        return min(a, b)
+    return a
+
+
+def succeeded_sum(entries):
+    return sum(v for v in entries.values() if v >= 0)
+
+
+def load(prefix, metric):
+    """Min-merge of every `<prefix>_<pass>.out`, in pass order."""
+    paths = sorted(glob.glob(f"{prefix}_*.out"),
+                   key=lambda p: int(p[len(prefix) + 1:-len(".out")]))
+    if not paths:
+        raise SystemExit(f"no {prefix}_<pass>.out logs")
+    m = last_json(paths[0], metric)
+    for p in paths[1:]:
+        m = min_merge(m, last_json(p, metric))
+    if metric == "total":
+        m["value"] = m["total_sec"] = succeeded_sum(m["queries"])
+        if "cbo_ab" in m:
+            m["cbo_ab"]["off_total"] = m["value"]
+            m["cbo_ab"]["on_total"] = succeeded_sum(m["cbo_ab"]["on_queries"])
+    return m
+
+
+def ratios(small, big):
+    """x10 / sf0.1 per entry, for entries that succeeded at both scales."""
+    return {k: round(big[k] / small[k], 3)
+            for k in big if small.get(k, 0) > 0 and big[k] >= 0}
+
+
+def record(rnd, protocol, log_dir=LOG_DIR):
+    def scale(sf):
+        return {"bench": load(f"{log_dir}/bench_sf{sf}_r{rnd}", "total"),
+                "scalecheck": load(f"{log_dir}/sc_sf{sf}_r{rnd}", "scalecheck")}
+    small, big = scale("01"), scale("1")
+    return {
+        "metric": "scale_check_x10",
+        "protocol": protocol,
+        "sf0_1": small,
+        "sf1": big,
+        "wallclock_ratio_10x_data": ratios(small["scalecheck"]["queries"],
+                                           big["scalecheck"]["queries"]),
+        "headline_total_ratio": round(big["bench"]["value"] / small["bench"]["value"], 3),
+    }
 
 
 def main():
-    rnd = sys.argv[1]
-    paths = sys.argv[2:10]
-    b01 = min_merge(read_json_line(paths[0], "total"), read_json_line(paths[1], "total"))
-    b1 = min_merge(read_json_line(paths[2], "total"), read_json_line(paths[3], "total"))
-    s01 = min_merge(read_json_line(paths[4], "scalecheck"), read_json_line(paths[5], "scalecheck"))
-    s1 = min_merge(read_json_line(paths[6], "scalecheck"), read_json_line(paths[7], "scalecheck"))
-    q01 = flat_queries(b01, s01)
-    q1 = flat_queries(b1, s1)
-    ratios = {k: round(q1[k] / q01[k], 3) for k in q01 if k in q1 and q01[k] > 0}
-    out = {
-        "metric": "scale_check_x10",
-        "protocol": ("ScaleGen x10 key-shifted amplification of /root/testdata/sf0.1 -> "
-                     "/tmp/graft-sf1; graft.Bench + graft.ScaleCheck at both scales, "
-                     "local[32]; EVERY entry at BOTH scales is the per-entry minimum of "
-                     "two full runs (per-pass logs /tmp/{bench,sc}_sf{01,1}_r13_{1,2}.out "
-                     "in the round-%s session)" % rnd),
-        "sf0_1": {"bench": b01, "scalecheck": s01},
-        "sf1": {"bench": b1, "scalecheck": s1},
-        "wallclock_ratio_10x_data": ratios,
-        "headline_total_ratio": round(b1["value"] / b01["value"], 3),
-    }
-    dest = f"/root/repo/SCALE_r{rnd}.json"
+    if len(sys.argv) != 3:
+        raise SystemExit(__doc__)
+    rnd, protocol = sys.argv[1], sys.argv[2]
+    out = record(rnd, protocol)
+    dest = os.path.join(REPO, f"SCALE_r{rnd}.json")
     with open(dest, "w") as f:
         json.dump(out, f, indent=1)
     print(dest)
-    worst = sorted(ratios.items(), key=lambda kv: -kv[1])[:8]
-    print("headline_total_ratio:", out["headline_total_ratio"])
-    print("worst ratios:", worst)
+    bench = out["sf0_1"]["bench"]
+    print("headline sf0.1 (cbo off):", round(bench["value"], 3),
+          "cbo on:", bench.get("cbo_ab", {}).get("on_total"))
+    print("headline x10 ratio:", out["headline_total_ratio"])
+    worst = sorted(out["wallclock_ratio_10x_data"].items(), key=lambda kv: -kv[1])[:8]
+    print("worst x10 ratios:", worst)
+    for sf in ("sf0_1", "sf1"):
+        for side in ("bench", "scalecheck"):
+            errors = out[sf][side].get("errors")
+            if errors:
+                print(f"failed probes ({sf} {side}):", errors)
 
 
 if __name__ == "__main__":
