@@ -411,18 +411,21 @@ object ScaleCheck {
   /** Bloom file-skipping index on an unclustered high-cardinality key:
     * the SAME point lookup with stats-only pruning (min/max straddle
     * every file, so it reads all), the sidecar build (one column-pruned
-    * scan + hash agg), then the lookup with bloom pruning (reads the ~1
-    * file that might hold the key).
+    * scan + hash agg), then the lookup with bloom pruning (reads the one
+    * file that holds the key).
     */
   private[graft] def bloomCycle(r: Probes, spark: SparkSession, sfDir: String, dir: String,
       files: DataFrame => Int): Unit = r.group("bloom") {
     val loc = tmp(s"$dir-bloom") + "/t"
+    // every stored key is even except one planted odd key: inside every
+    // file's min/max range, so only the Bloom index can prune, and held
+    // by exactly one row, so a pruned lookup reads 1 file of n
     val li = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"))
+      .select(col("l_orderkey"), (col("l_partkey") * 2).as("l_partkey"), col("l_extendedprice"))
     val n = files(li)
+    val key = li.select(col("l_partkey")).head().getLong(0) + 1
     val t = new TxTable(spark, loc)
-    t.create(li.repartition(n))
-    val key = li.select(col("l_partkey")).head().getLong(0)
+    t.create(li.union(li.limit(1).withColumn("l_partkey", lit(key))).repartition(n))
     r.time("bloom_lookup_stats_only")(noop(t.scan(s"l_partkey = $key")))
     r.time("bloom_index_build")(graft.tables.BloomIndex.enable(t, Seq("l_partkey")))
     r.time("bloom_lookup_pruned")(noop(t.scan(s"l_partkey = $key")))

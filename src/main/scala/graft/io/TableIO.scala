@@ -102,12 +102,8 @@ object TableIO {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p) || fs.getFileStatus(p).isFile) return None
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) return Some(s.getPath.toString)
-    }
-    None
+    graft.tables.TxLog.leafFiles(fs, p).find(_.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath.toString)
   }
 
   // ---- writes (W1-W10, §2.3 matrix) ----

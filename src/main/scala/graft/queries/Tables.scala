@@ -106,19 +106,14 @@ object Tables {
   private def keyOf(s: SparkSession, path: String): SchemaKey = {
     val p = new Path(path)
     val fs = graft.tables.TxLog.fs(s, path)
-    val files = Seq.newBuilder[(String, Long, Long)]
     // glob like the read does (stream sniffs pass `dir/*`); a missing path
     // matches nothing, and the read reports it
-    Option(fs.globStatus(p)).toSeq.flatten.foreach { root =>
-      val it = fs.listFiles(root.getPath, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    }
+    val files = Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(root => graft.tables.TxLog.leafFiles(fs, root.getPath))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     val confs = s.conf.getAll.toSeq.filter { case (k, _) =>
       InferenceConfs(k) || InferencePrefixes.exists(k.startsWith)
     }
-    SchemaKey(fs.makeQualified(p).toString, files.result().sorted, confs.sorted)
+    SchemaKey(fs.makeQualified(p).toString, files.sorted, confs.sorted)
   }
 }

@@ -17,8 +17,9 @@ import TxLog.{AddFile, Snapshot}
   * which is the reference's primary path (its whole write matrix goes
   * through delta-rs on real Delta tables, uchelper/dataframe.py:299-488).
   *
-  * Data staging is shared (TxLog.stageData — a distributed parquet job +
-  * rename publish); only the metadata commit differs per log format.
+  * Data writes are shared (TxLog.stageData — one distributed parquet job
+  * that writes files in place and reads their footer stats; the commit is
+  * the only publish); only the metadata commit differs per log format.
   */
 private[graft] sealed trait CommitLog {
   def snapshot(spark: SparkSession, location: String, asOfVersion: Option[Long] = None): Snapshot

@@ -86,19 +86,14 @@ object CopyInto {
     val ext = "." + format.toLowerCase(java.util.Locale.ROOT)
     val matcher = pattern.map(g => new org.apache.hadoop.fs.GlobPattern(g))
     val baseUri = p.toUri.getPath
-    val out = Seq.newBuilder[(String, Long, Long)]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
-        val hidden = rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
-        val wanted = matcher.forall(_.matches(rel))
-        if (!hidden && wanted && rel.toLowerCase(java.util.Locale.ROOT).endsWith(ext))
-          out += ((st.getPath.toUri.toString, st.getLen, st.getModificationTime))
-      }
-    }
-    out.result()
+    TxLog.leafFiles(fs, p).flatMap { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
+      val hidden = rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
+      val wanted = matcher.forall(_.matches(rel))
+      if (!hidden && wanted && rel.toLowerCase(java.util.Locale.ROOT).endsWith(ext))
+        Some((st.getPath.toUri.toString, st.getLen, st.getModificationTime))
+      else None
+    }.toSeq
   }
 
   /** Split a SELECT projection list on TOP-LEVEL commas (parens and

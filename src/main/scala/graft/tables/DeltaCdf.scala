@@ -18,8 +18,8 @@ import org.json4s.jackson.JsonMethods
   * snapshot) — which is why OPTIMIZE commits must mark their add/remove
   * actions dataChange=false.
   *
-  * Scale posture: cdc files are written by the same distributed staging
-  * job as data files and sized by |changed rows|, never |table|; the
+  * Scale posture: cdc files are written by the same distributed in-place
+  * write job as data files and sized by |changed rows|, never |table|; the
   * reader plans one distributed scan over the range's derived files and
   * one over its cdc files, tagging rows through partition values — no
   * log-sized collects beyond the action lists Delta readers always hold.

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -18,10 +19,10 @@ import org.apache.spark.sql.types._
   * commit time, serialized into the transaction log, and consulted at scan
   * time to drop files that provably cannot match a predicate.
   *
-  * Footer reads are metadata-only (no data pages) and run on EXECUTORS
-  * at commit time (TxLog.stageData parallelizes the just-published file
-  * list), so a commit writing tens of thousands of files never
-  * serializes footer I/O through the driver.
+  * Footer reads are metadata-only (no data pages) and run on EXECUTORS:
+  * each write task reads the footers of the files it just closed
+  * (TxLog.stageData), so a commit writing tens of thousands of files
+  * never serializes footer I/O through the driver.
   */
 object FileStats {
 
@@ -33,7 +34,7 @@ object FileStats {
   def fromParquetFooter(conf: Configuration, file: Path)
       : (Long, Map[String, String], Map[String, String], Map[String, Long]) = {
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val reader = openFooter(conf, file)
       try {
         val footer = reader.getFooter
         val blocks = footer.getBlocks.asScala
@@ -72,6 +73,14 @@ object FileStats {
       case NonFatal(_) => (-1L, Map.empty, Map.empty, Map.empty)
     }
   }
+
+  /** A reader over `file` whose options come from `conf`: the default
+    * options build a fresh `Configuration`, re-parsing Hadoop's XML
+    * defaults for every file.
+    */
+  private[tables] def openFooter(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
 
   private def toComparable(v: Any, t: PrimitiveTypeName): Option[Comparable[Any]] = (v, t) match {
     case (i: java.lang.Integer, _) => Some(i.asInstanceOf[Comparable[Any]])

@@ -247,8 +247,7 @@ object IcebergLog {
     */
   private[tables] def footerTopLevel(conf: org.apache.hadoop.conf.Configuration,
       path: String): (Boolean, Seq[String]) = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = FileStats.openFooter(conf, new Path(path))
     try {
       val fields = r.getFileMetaData.getSchema.getFields.asScala.toSeq
       (fields.nonEmpty && fields.forall(_.getId != null), fields.map(_.getName))

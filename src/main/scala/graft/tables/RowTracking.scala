@@ -32,7 +32,7 @@ private[tables] object RowTracking {
   val MaterializedRowCommitVersionProp = "delta.rowTracking.materializedRowCommitVersionColumnName"
 
   /** In-flight column names rewrite plans carry between the row-id read
-    * and the staging rename (also the public read-surface names).
+    * and the data write (also the public read-surface names).
     */
   val RowIdCol = "_row_id"
   val RowCommitVersionCol = "_row_commit_version"

@@ -79,8 +79,8 @@ object SnapshotCache {
 
   /** The log directory whose listing defines the table's logical state:
     * `_graft_log` / `_delta_log` / `metadata`. All three logs put it
-    * first in reservedPrefixes; staging/bloom/ingest dirs are excluded
-    * so in-flight data staging can't thrash the signature.
+    * first in reservedPrefixes; data, bloom and ingest dirs are excluded
+    * so in-flight data writes can't thrash the signature.
     */
   private def logDirName(log: CommitLog): String = log.reservedPrefixes.head
 

@@ -5,8 +5,16 @@ import java.util.UUID
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.spark.{TaskContext, TaskKilledException}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.FileFormatWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -19,14 +27,16 @@ import org.json4s.jackson.Serialization
   * Delta dependency. Design follows the published Delta protocol shape
   * (Armbrust et al., VLDB 2020): an ordered log of JSON commits, each
   * holding add/remove file actions plus table metadata; readers replay the
-  * log into a snapshot; writers stage data files then atomically publish a
-  * new numbered commit.
+  * log into a snapshot; writers write each data file once, in place under
+  * a unique name, then atomically publish a new numbered commit naming
+  * them — the commit is the only publish.
   *
   * Scale posture:
   *   - All data I/O goes through the Hadoop FileSystem API, so the same
   *     code runs on HDFS/S3A, not just local disk.
   *   - Commits are O(#files touched) metadata operations; data files are
-  *     written by executors via normal Spark parquet jobs (distributed).
+  *     written, and their footer stats read, by executors in one Spark
+  *     job (distributed).
   *   - Atomicity relies on rename-without-overwrite of the commit file —
   *     the same primitive Delta OSS uses on HDFS. Concurrent committers
   *     detect collision by rename failure and retry against the new
@@ -36,6 +46,8 @@ import org.json4s.jackson.Serialization
   */
 object TxLog {
   val LogDirName = "_graft_log"
+  // staging dirs of writers that published by rename: reserved, so VACUUM
+  // never deletes their leftovers as data
   private[tables] val StagingPrefix = "_staging"
 
   /** Serializes the outputTimestampType set/write/restore window in
@@ -334,12 +346,6 @@ object TxLog {
     }
   }
 
-  /** Stage a DataFrame's parquet files under a temp dir inside the table,
-    * then move them into their final location (preserving hive partition
-    * subdirs). Returns the AddFile actions. Data is written by executors
-    * via a normal distributed parquet job; only the (cheap) renames happen
-    * on the driver.
-    */
   /** Table property naming the columns to build parquet-NATIVE bloom
     * filters for on write (format-spec split-block blooms, readable by
     * any parquet engine): point lookups on high-cardinality non-sort
@@ -366,16 +372,36 @@ object TxLog {
     }.toMap
   }
 
+  /** Write `df` as parquet files straight into the table directory (hive
+    * partition dirs for `partitionColumns`) and return their AddFile
+    * actions; the caller's log commit is their only publish. One Spark
+    * job (`FileFormatWriter` under `InPlaceCommit`): each task writes
+    * every file once, at its final path under a unique name, and reads
+    * its just-closed footer for rows, min/max and null counts before it
+    * commits. A failed write deletes the files it wrote. Until the commit
+    * lands, the files are unreferenced and only VACUUM's retention window
+    * keeps them.
+    */
   def stageData(
       spark: SparkSession,
       location: String,
       df: org.apache.spark.sql.DataFrame,
       partitionColumns: Seq[String],
       writerOptions: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val f = fs(spark, location)
-    val stagingDir = new Path(location, s"$StagingPrefix-${UUID.randomUUID()}")
-    val writer0 = df.write.options(writerOptions)
-    val writer = if (partitionColumns.nonEmpty) writer0.partitionBy(partitionColumns: _*) else writer0
+    val session = spark.asInstanceOf[ClassicSparkSession]
+    val qe = df.queryExecution
+    val output = qe.analyzed.output
+    val resolver = session.sessionState.conf.resolver
+    val partAttrs = partitionColumns.map(c => output.find(a => resolver(a.name, c)).getOrElse(
+      throw new IllegalArgumentException(
+        s"partition column $c is not among ${output.map(_.name).mkString(", ")}")))
+    val committer = new InPlaceCommit(location)
+    def write(): Unit = SQLExecution.withNewExecutionId(qe, Some("graft write")) {
+      FileFormatWriter.write(session, qe.executedPlan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(location, Map.empty, output),
+        session.sessionState.newHadoopConfWithOptions(writerOptions), partAttrs,
+        bucketSpec = None, statsTrackers = Seq.empty, options = writerOptions)
+    }
     // Spark's default INT96 timestamps carry no parquet footer statistics,
     // which silences data skipping on timestamp columns; write the modern
     // (and stats-bearing) TIMESTAMP_MICROS physical type instead. The
@@ -384,7 +410,7 @@ object TxLog {
     // concurrent library writers on the same session can no longer
     // interleave set/restore and clobber each other's value. Schemas with
     // no TimestampType skip the conf dance (and the lock) entirely.
-    def hasTimestamp(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+    def hasTimestamp(dt: DataType): Boolean = dt match {
       case org.apache.spark.sql.types.TimestampType => true
       case s: StructType => s.fields.exists(x => hasTimestamp(x.dataType))
       case a: org.apache.spark.sql.types.ArrayType => hasTimestamp(a.elementType)
@@ -392,117 +418,93 @@ object TxLog {
         hasTimestamp(m.keyType) || hasTimestamp(m.valueType)
       case _ => false
     }
-    // the write itself sits inside the try so a failed job (e.g. a CHECK
-    // constraint violation raised mid-write) cleans its staging dir up too
-    try {
-      if (!df.schema.fields.exists(x => hasTimestamp(x.dataType))) {
-        writer.parquet(stagingDir.toString)
-      } else TsConfLock.synchronized {
-        val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-        val prevTsType = spark.conf.getOption(tsTypeKey)
-        spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-        try writer.parquet(stagingDir.toString)
-        finally prevTsType match {
-          case Some(v) => spark.conf.set(tsTypeKey, v)
-          case None => spark.conf.unset(tsTypeKey)
-        }
+    if (!df.schema.fields.exists(x => hasTimestamp(x.dataType))) write()
+    else TsConfLock.synchronized {
+      val tsTypeKey = "spark.sql.parquet.outputTimestampType"
+      val prevTsType = spark.conf.getOption(tsTypeKey)
+      spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
+      try write()
+      finally prevTsType match {
+        case Some(v) => spark.conf.set(tsTypeKey, v)
+        case None => spark.conf.unset(tsTypeKey)
       }
-      val staged = listFilesRecursively(f, stagingDir)
-        .filter(_._1.getName.endsWith(".parquet"))
-      // publish (rename) on the driver, renaming whole DIRECTORIES
-      // wholesale whenever the destination directory does not exist yet —
-      // the create / overwrite / new-partition case. A first commit of a
-      // 600-partition table publishes in O(top-level partition dirs)
-      // renames instead of O(files); only appends into already-existing
-      // directories descend to per-file renames. (Directory rename is an
-      // atomic metadata op on HDFS/posix; object stores without it need a
-      // store-side committer, same as Spark's own output committers.)
-      // Sizes come from the pre-rename staging listing; footer stats are
-      // collected on EXECUTORS below: a commit writing tens of thousands
-      // of files would serialize that many footer reads through the
-      // driver otherwise.
-      val published = staged.map { case (p, size) =>
-        val rel = relativize(stagingDir, p)
-        (rel, new Path(location, rel).toString, size)
+    }
+    committer.added
+  }
+
+  /** stageData's commit protocol. Tasks write each file at its final path
+    * and commit it with its footer stats; the driver gathers the
+    * AddFiles. A failed task deletes its own files, a failed job those of
+    * its committed tasks. A task whose commit races its job's abort can
+    * still leave a file that no snapshot names; VACUUM removes it once
+    * the retention window has passed.
+    */
+  private final class InPlaceCommit(location: String)
+      extends FileCommitProtocol with Serializable {
+    // driver: files of the tasks committed so far, and the job's result
+    @transient private var committed = Vector.empty[String]
+    @transient var added: Seq[AddFile] = Seq.empty
+    // task: location-relative paths this attempt has opened
+    @transient private var written: Vector[String] = _
+
+    override def setupJob(job: JobContext): Unit = ()
+
+    override def setupTask(task: TaskAttemptContext): Unit = written = Vector.empty
+
+    override def newTaskTempFile(task: TaskAttemptContext, dir: Option[String],
+        spec: FileNameSpec): String = {
+      val split = task.getTaskAttemptID.getTaskID.getId
+      val name = f"${spec.prefix}part-$split%05d-${UUID.randomUUID()}${spec.suffix}"
+      val rel = dir.fold(name)(d => s"$d/$name")
+      written :+= rel
+      new Path(location, rel).toString
+    }
+
+    override def newTaskTempFileAbsPath(task: TaskAttemptContext, absoluteDir: String,
+        spec: FileNameSpec): String =
+      throw new UnsupportedOperationException("graft writes no custom partition locations")
+
+    override def commitTask(task: TaskAttemptContext): TaskCommitMessage = {
+      val conf = task.getConfiguration
+      val adds = written.map { rel =>
+        val p = new Path(location, rel)
+        val (rows, mins, maxs, nulls) = FileStats.fromParquetFooter(conf, p)
+        AddFile(rel, partitionValuesOf(rel), rows, p.getFileSystem(conf).getFileStatus(p).getLen,
+          Some(mins).filter(_.nonEmpty), Some(maxs).filter(_.nonEmpty),
+          Some(nulls).filter(_.nonEmpty))
       }
-      def publishChildren(src: Path, dest: Path): Unit = {
-        f.mkdirs(dest)
-        f.listStatus(src).foreach { st =>
-          val d = new Path(dest, st.getPath.getName)
-          if (st.isDirectory) publishTree(st.getPath, d)
-          else if (st.getPath.getName.endsWith(".parquet")) {
-            if (!f.rename(st.getPath, d))
-              throw new java.io.IOException(
-                s"failed to publish staged file ${st.getPath} -> $d")
-          }
-        }
-      }
-      def publishTree(src: Path, dest: Path): Unit = {
-        if (!f.exists(dest) && f.rename(src, dest)) {
-          // Hadoop rename semantics: if a CONCURRENT writer created dest
-          // between the exists probe and the rename, several FileSystems
-          // move src INSIDE dest (dest/<src.name>) instead of failing. A
-          // hive layout never nests a directory under its own name, so
-          // such a child can only be the mis-renamed source — unfold it.
-          val nested = new Path(dest, src.getName)
-          if (f.exists(nested) && f.getFileStatus(nested).isDirectory) {
-            publishChildren(nested, dest)
-            f.delete(nested, true)
-          }
-        } else publishChildren(src, dest)
-      }
-      f.listStatus(stagingDir).foreach { st =>
-        val d = new Path(location, st.getPath.getName)
-        if (st.isDirectory) publishTree(st.getPath, d)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          if (!f.rename(st.getPath, d))
-            throw new java.io.IOException(
-              s"failed to publish staged file ${st.getPath} -> $d")
-        }
-      }
-      val hconf = new org.apache.spark.util.SerializableConfiguration(hadoopConf(spark))
-      val statsByRel: Map[String, (Long, Map[String, String], Map[String, String], Map[String, Long])] =
-        if (published.size <= 4) {
-          // small commits skip the job-launch overhead
-          published.map { case (rel, dest, _) =>
-            rel -> FileStats.fromParquetFooter(hconf.value, new Path(dest))
-          }.toMap
-        } else {
-          spark.sparkContext
-            .parallelize(published.map { case (rel, dest, _) => (rel, dest) },
-              math.max(1, math.min(published.size, 64)))
-            .map { case (rel, dest) =>
-              rel -> FileStats.fromParquetFooter(hconf.value, new Path(dest))
-            }.collect().toMap
-        }
-      published.map { case (rel, _, size) =>
-        val (rows, mins, maxs, nulls) = statsByRel(rel)
-        AddFile(rel, partitionValuesOf(rel), rows, size,
-          if (mins.isEmpty) None else Some(mins),
-          if (maxs.isEmpty) None else Some(maxs),
-          if (nulls.isEmpty) None else Some(nulls))
-      }
-    } finally {
-      f.delete(stagingDir, true)
+      // a task its failed job has killed goes through abortTask instead
+      if (Option(TaskContext.get()).exists(_.isInterrupted()))
+        throw new TaskKilledException("write job aborted")
+      new TaskCommitMessage(adds)
+    }
+
+    override def abortTask(task: TaskAttemptContext): Unit =
+      deleteAll(task.getConfiguration, written)
+
+    override def onTaskCommit(msg: TaskCommitMessage): Unit =
+      committed ++= msg.obj.asInstanceOf[Seq[AddFile]].map(_.path)
+
+    override def commitJob(job: JobContext, msgs: Seq[TaskCommitMessage]): Unit =
+      added = msgs.flatMap(_.obj.asInstanceOf[Seq[AddFile]])
+
+    override def abortJob(job: JobContext): Unit = deleteAll(job.getConfiguration, committed)
+
+    private def deleteAll(conf: Configuration, rels: Seq[String]): Unit = rels.foreach { rel =>
+      val p = new Path(location, rel)
+      try p.getFileSystem(conf).delete(p, false) catch { case NonFatal(_) => () }
     }
   }
 
-  private def listFilesRecursively(f: FileSystem, dir: Path): Seq[(Path, Long)] = {
-    val out = Seq.newBuilder[(Path, Long)]
-    val it = f.listFiles(dir, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile) out += s.getPath -> s.getLen
+  /** Every file under `path` (`path` itself when it is a file), depth
+    * first in listing order, listed lazily. Walks `listStatus`, not
+    * `listFiles`: each `LocatedFileStatus` copies its file's permission,
+    * which the local file system reads by forking a process per file.
+    */
+  private[graft] def leafFiles(f: FileSystem, path: Path): Iterator[FileStatus] =
+    f.listStatus(path).iterator.flatMap { st =>
+      if (st.isDirectory) leafFiles(f, st.getPath) else Iterator.single(st)
     }
-    out.result()
-  }
-
-  private def relativize(base: Path, p: Path): String = {
-    val baseStr = base.toUri.getPath.stripSuffix("/")
-    val pStr = p.toUri.getPath
-    require(pStr.startsWith(baseStr + "/"), s"$p not under $base")
-    pStr.stripPrefix(baseStr + "/")
-  }
 
   /** Parse hive-style partition values from a relative file path. */
   def partitionValuesOf(relPath: String): Map[String, String] = {

@@ -1350,12 +1350,13 @@ final class TxTable(val spark: SparkSession, val location: String,
     * old commits and orphans from failed/retried commits. Time travel to
     * vacuumed versions stops working (as in Delta).
     *
-    * Concurrent-writer safety: a writer stages under `_staging-*` then
-    * renames into place before committing, so (a) staging dirs are never
-    * touched and (b) `retentionMs` (Delta-style modification-time window)
-    * protects files published between a concurrent stageData and its
-    * tryCommit. The default retention is 7 days, like Delta; a shorter
-    * window can delete a concurrent writer's just-published-uncommitted
+    * Concurrent-writer safety: a writer writes its data files in place
+    * and names them only in its commit, so between a concurrent
+    * stageData and its tryCommit its files are unreferenced; the
+    * `retentionMs` window (Delta-style, by modification time) alone
+    * protects them. `_staging-*` dirs left by older writers are never
+    * touched. The default retention is 7 days, like Delta; a shorter
+    * window can delete a concurrent writer's written-but-uncommitted
     * files, so it must be forced explicitly (Delta's
     * retentionDurationCheck.enabled=false equivalent).
     */
@@ -1477,7 +1478,6 @@ final class TxTable(val spark: SparkSession, val location: String,
     val cutoffMs = System.currentTimeMillis() - math.max(0L, retentionMs)
     val deleted = Seq.newBuilder[String]
     val reserved = log.reservedPrefixes
-    val it = f.listFiles(base, true)
     // the stats sidecar the CURRENT stamp points to survives; anything
     // else under _graft_stats past retention is an orphan (a failed
     // stamp, or a layer that migrated back inline and left its last
@@ -1488,21 +1488,18 @@ final class TxTable(val spark: SparkSession, val location: String,
       try Some(log.snapshot(spark, location).properties
         .get(ColumnStats.PsidecarProp).map(n => s"_graft_stats/$n"))
       catch { case scala.util.control.NonFatal(_) => None }
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(baseUri + "/")
-        // data parquet AND deletion-vector .bin files are vacuumable;
-        // everything under the log dir is not
-        val isData = (rel.endsWith(".parquet") || rel.endsWith(".bin")) &&
-          !reserved.exists(rel.startsWith)
-        val isOrphanSidecar = rel.startsWith("_graft_stats/player-") &&
-          rel.endsWith(".json") && pointedSidecar.exists(!_.contains(rel))
-        if ((isData && !keep.contains(rel) || isOrphanSidecar) &&
-            st.getModificationTime < cutoffMs) {
-          if (!dryRun) f.delete(st.getPath, false)
-          deleted += rel
-        }
+    TxLog.leafFiles(f, base).foreach { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(baseUri + "/")
+      // data parquet AND deletion-vector .bin files are vacuumable;
+      // everything under the log dir is not
+      val isData = (rel.endsWith(".parquet") || rel.endsWith(".bin")) &&
+        !reserved.exists(rel.startsWith)
+      val isOrphanSidecar = rel.startsWith("_graft_stats/player-") &&
+        rel.endsWith(".json") && pointedSidecar.exists(!_.contains(rel))
+      if ((isData && !keep.contains(rel) || isOrphanSidecar) &&
+          st.getModificationTime < cutoffMs) {
+        if (!dryRun) f.delete(st.getPath, false)
+        deleted += rel
       }
     }
     deleted.result()
