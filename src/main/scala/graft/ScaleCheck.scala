@@ -516,11 +516,14 @@ object ScaleCheck {
         FOR COLUMNS l_orderkey, l_quantity""").collect())
     val filtered = s"""SELECT SUM(l_quantity) AS s, APPROX_COUNT_DISTINCT(l_orderkey) AS d
         FROM $cat.s.t WHERE day < $serveBelow"""
-    r.time(s"${p}_filtered_serve", check = {
+    // the plan checks run AFTER the timed pass: building the same SQL's
+    // plan first would warm the session's plan memo, and the probe would
+    // time a re-serve instead of the first serve a user pays
+    r.time(s"${p}_filtered_serve", check =
       require(t.snapshot.properties.contains(ColumnStats.PsidecarProp),
-        s"$tuples tuples must stamp the sidecar layer")
-      scanFree(filtered)
-    })(require(spark.sql(filtered).collect().nonEmpty))
+        s"$tuples tuples must stamp the sidecar layer"))(
+      require(spark.sql(filtered).collect().nonEmpty))
+    r.group(s"${p}_filtered_serve")(scanFree(filtered))
     if (twins) {
       // a genuine DATA READ with resolution amortized: snapshot from the
       // cache, but a FRESH untagged plan built outside the timed region —
@@ -547,8 +550,8 @@ object ScaleCheck {
       // the last `serveBelow` partitions the drop left
       val postDrop =
         s"SELECT SUM(l_quantity) AS s FROM $cat.s.t WHERE day >= ${dropFrom - serveBelow}"
-      r.time(s"${p}_post_drop_serve", check = scanFree(postDrop))(
-        require(spark.sql(postDrop).collect().nonEmpty))
+      r.time(s"${p}_post_drop_serve")(require(spark.sql(postDrop).collect().nonEmpty))
+      r.group(s"${p}_post_drop_serve")(scanFree(postDrop))
     }
   }
 

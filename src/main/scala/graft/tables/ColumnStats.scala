@@ -1282,15 +1282,13 @@ object ColumnStats {
     * IS the 100 TB norm: one retention DELETE no longer forces a full
     * re-ANALYZE scan to keep SUM/MIN/MAX scan-free. Any failure or
     * inconsistency leaves the stale stamp — never a wrong answer.
-    * Every delete path folds — Delta copy-on-write (hooked from the
-    * rewrite), Delta merge-on-read deletion vectors (hooked from
-    * DeltaDvWriter, whose commit is pinned at base+1 so the fold can
-    * never mislabel a concurrent commit's state), Iceberg whole-file
-    * drops (pinned by the optimistic tryCommit), and Iceberg MoR
-    * position deletes (hooked from IcebergWriter.delete, pinned at
-    * metadataVersion+1 by the create-exclusive metadata write; the
-    * touched files come from the just-written delete files, O(deleted
-    * rows)). Iceberg EQUALITY deletes fold through
+    * Every delete path folds as the post-commit step of TxTable's one
+    * commit loop, whose tryCommit pins the commit at base+1 so the fold
+    * can never mislabel a concurrent commit's state — Delta copy-on-write,
+    * Delta merge-on-read deletion vectors, Iceberg whole-file drops and
+    * Iceberg MoR position deletes (the touched files come from the
+    * just-written delete files, O(deleted rows)). Iceberg EQUALITY
+    * deletes fold through
     * [[foldEqualityDelete]]: the keys ARE a removable-row
     * specification — the removed rows are the base-visible rows of the
     * touched files matching the delete keys null-safely, exactly the

@@ -7,19 +7,23 @@ import org.json4s.jackson.JsonMethods
 
 import TxLog.{AddFile, Snapshot}
 
-/** The commit-log contract TxTable's write surface runs over. Two
-  * implementations: the native `_graft_log` (TxLog) and the REAL Delta
-  * protocol (`_delta_log`, DeltaLog/DeltaLogWriter). Abstracting the log
-  * lets every table operation — append/overwrite with schema evolution,
-  * replaceWhere, selective partition overwrite, MERGE/DELETE/UPDATE,
-  * OPTIMIZE, time travel by version or timestamp, change feeds — run
-  * unchanged against tables written by delta-rs / Delta-Spark / DuckDB,
-  * which is the reference's primary path (its whole write matrix goes
-  * through delta-rs on real Delta tables, uchelper/dataframe.py:299-488).
+/** The commit-log contract TxTable's write surface runs over. Three
+  * implementations: the native `_graft_log` (TxLog), the REAL Delta
+  * protocol (`_delta_log`, DeltaLog/DeltaLogWriter) and Apache Iceberg
+  * (`metadata/`, IcebergLog/IcebergWriter). Abstracting the log lets
+  * every table operation — append/overwrite with schema evolution,
+  * replaceWhere, selective partition overwrite, MERGE/DELETE/UPDATE
+  * (copy-on-write or merge-on-read), OPTIMIZE, time travel by version or
+  * timestamp, change feeds — run unchanged against tables written by
+  * delta-rs / Delta-Spark / DuckDB / Iceberg engines, which is the
+  * reference's primary path (its whole write matrix goes through
+  * delta-rs on real Delta tables, uchelper/dataframe.py:299-488).
   *
   * Data writes are shared (TxLog.stageData — one distributed parquet job
   * that writes files in place and reads their footer stats; the commit is
   * the only publish); only the metadata commit differs per log format.
+  * Every version after a table's create is written by `tryCommit`, run
+  * from TxTable.commitWithRetryIf's one retry loop.
   */
 private[graft] sealed trait CommitLog {
   def snapshot(spark: SparkSession, location: String, asOfVersion: Option[Long] = None): Snapshot
@@ -32,15 +36,24 @@ private[graft] sealed trait CommitLog {
   def checkWritable(spark: SparkSession, location: String, op: String): Unit
 
   /** Attempt an atomic commit at base.version+1 replacing `removedPaths`
-    * with `added`. Returns false when a concurrent writer won the version
-    * race (caller replans against the new snapshot and retries). `cdc`
-    * carries staged change-data files for CDF tables (Delta log only).
+    * with `added` — the only writer of a version after the create.
+    * Returns false when a concurrent writer won the version race (caller
+    * replans against the new snapshot and retries). `cdc` carries staged
+    * change-data files for CDF tables (Delta log only); `deletes` carries
+    * staged delete files (Iceberg log only).
     */
   def tryCommit(spark: SparkSession, location: String, base: Snapshot, op: String,
       added: Seq[AddFile], removedPaths: Seq[String],
       schema: StructType, partitionColumns: Seq[String],
       properties: Map[String, String], cdc: Seq[AddFile] = Seq.empty,
-      txn: Option[TxLog.SetTxn] = None): Boolean
+      txn: Option[TxLog.SetTxn] = None,
+      deletes: Option[TxTable.DeleteFiles] = None): Boolean
+
+  /** Refuses delete files on a log whose deletes are not separate files. */
+  protected final def refuseDeleteFiles(deletes: Option[TxTable.DeleteFiles]): Unit =
+    if (deletes.nonEmpty)
+      throw graft.catalog.UnsupportedOperationError(
+        "delete files are only supported on Iceberg tables")
 
   /** Periodic checkpointing so snapshot replay stays O(interval). */
   def maybeCheckpoint(spark: SparkSession, location: String, version: Long): Unit
@@ -115,12 +128,14 @@ private[graft] object NativeCommitLog extends CommitLog {
       added: Seq[AddFile], removedPaths: Seq[String],
       schema: StructType, partitionColumns: Seq[String],
       properties: Map[String, String], cdc: Seq[AddFile],
-      txn: Option[TxLog.SetTxn]): Boolean =
+      txn: Option[TxLog.SetTxn], deletes: Option[TxTable.DeleteFiles]): Boolean = {
+    refuseDeleteFiles(deletes)
     // cdc is a Delta-protocol concept; the native log's change feed is the
     // append-oriented changesSince
     TxLog.tryCommit(spark, location, TxLog.Commit(base.version + 1,
       System.currentTimeMillis(), op, schema.json, partitionColumns,
       added, removedPaths, properties, txn))
+  }
 
   def maybeCheckpoint(spark: SparkSession, location: String, version: Long): Unit =
     if (version > 0 && version % TxLog.CheckpointInterval == 0)
@@ -203,7 +218,8 @@ private[graft] object ForeignDeltaCommitLog extends CommitLog {
       added: Seq[AddFile], removedPaths: Seq[String],
       schema: StructType, partitionColumns: Seq[String],
       properties: Map[String, String], cdc: Seq[AddFile],
-      txn: Option[TxLog.SetTxn]): Boolean = {
+      txn: Option[TxLog.SetTxn], deletes: Option[TxTable.DeleteFiles]): Boolean = {
+    refuseDeleteFiles(deletes)
     // in-commit timestamps: when enabled, commitInfo must carry a
     // MONOTONIC inCommitTimestamp (max of the wall clock and prev + 1) and
     // time travel reads it instead of file mtimes
@@ -262,9 +278,12 @@ private[graft] object ForeignDeltaCommitLog extends CommitLog {
     // a commit whose schema or properties newly exercise a feature (CHECK
     // constraint, CDF, ICT, row tracking, generated/identity/NTZ/variant
     // columns) must also oblige OTHER writers to honor it — legacy writer
-    // version bump or table features, per protocolUpgradeFor
+    // version bump or table features, per protocolUpgradeFor — and so
+    // must an add carrying a deletion vector on a table whose protocol
+    // lacks the deletionVectors feature
     val protoLine = DeltaLogWriter.protocolUpgradeFor(spark, location,
-      base.schema, base.properties, schema, properties1)
+      base.schema, base.properties, schema, properties1,
+      writesDvs = added.exists(_.deletionVector.isDefined))
     // row tracking: stamp each add with its id range and advance the
     // watermark in the SAME commit (domainMetadata action)
     val (added1, rtLine) =
@@ -497,11 +516,10 @@ private[graft] object IcebergCommitLog extends CommitLog {
 
   def checkWritable(spark: SparkSession, location: String, op: String): Unit = {
     val st = IcebergLog.stateAt(spark, location, None)
-    // resolves the default spec — refuses unknown transform strings. On a
-    // hidden-partitioned (transformed) spec, TxTable-routed adds commit
-    // with null transform tuples (correct — readers keep such files) and
-    // an IcebergWriter.overwrite re-clusters; survivor rewrites round-trip
-    // their stored tuples untouched.
+    // resolves the default spec — refuses unknown transform strings
+    // before any data is staged (`stage` then clusters every add by the
+    // full spec, transforms included; survivor rewrites round-trip their
+    // stored tuples untouched)
     IcebergWriter.writablePartFields(st)
   }
 
@@ -509,7 +527,7 @@ private[graft] object IcebergCommitLog extends CommitLog {
       added: Seq[AddFile], removedPaths: Seq[String],
       schema: StructType, partitionColumns: Seq[String],
       properties0: Map[String, String], cdc: Seq[AddFile],
-      txn: Option[TxLog.SetTxn]): Boolean = {
+      txn: Option[TxLog.SetTxn], deletes: Option[TxTable.DeleteFiles]): Boolean = {
     if (cdc.nonEmpty)
       throw graft.catalog.UnsupportedOperationError(
         "change data feed is not supported on Iceberg tables")
@@ -582,13 +600,24 @@ private[graft] object IcebergCommitLog extends CommitLog {
           }
         survivorsMl ++ addsMl ++ deletesMl
       }
+    // new delete files: one manifest beside the carried ones. Partition
+    // and bounds stay empty — a delete file's rows are (file_path, pos)
+    // pairs or keys, not table rows, and it applies table-wide
+    val newDeletesMl = deletes.map { d =>
+      val entries = d.files.map(_.copy(partitionValues = Map.empty,
+        minValues = None, maxValues = None))
+      val (p, len, rows) = IcebergWriter.writeManifest(f, location, entrySchema, entries,
+        schema, partFields, topIds, snapId, seq,
+        content = if (d.equalityIds.isEmpty) 1 else 2, equalityIds = d.equalityIds)
+      IcebergWriter.mlRecord(p.toString, len, 1, seq, snapId, entries.size, rows)
+    }
     val operation = op match {
       case "APPEND" | "CREATE" => "append"
       case "DELETE" => "delete"
-      case "OPTIMIZE" | "ZORDER" | "REORG" => "replace"
+      case "OPTIMIZE" | "ZORDER" | "REORG" | "PUBLISH" => "replace"
       case _ => "overwrite" // OVERWRITE, REPLACE_WHERE, MERGE, UPDATE, ...
     }
-    val mlPath = IcebergWriter.writeManifestList(f, location, snapId, mlRecords)
+    val mlPath = IcebergWriter.writeManifestList(f, location, snapId, mlRecords ++ newDeletesMl)
     try {
       IcebergWriter.commitExisting(f, location, st,
         IcebergWriter.snapshotJson(snapId, now, seq, mlPath, operation, st.snapshotId),
@@ -687,7 +716,15 @@ private[graft] object IcebergCommitLog extends CommitLog {
     }
   }
 
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame = {
+  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame =
+    liveRows(spark, location, s, withMeta = false)
+
+  /** The snapshot's live rows; `withMeta` keeps each row's data-file path
+    * and position (DeltaLog.FileMetaCol / RowMetaCol) on a non-empty
+    * snapshot — the position-delete planner's input.
+    */
+  private[tables] def liveRows(spark: SparkSession, location: String, s: Snapshot,
+      withMeta: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (dvFiles, plain) = s.files.partition(_.deletionVector.exists(_.cardinality > 0))
     if (s.files.isEmpty)
@@ -701,7 +738,7 @@ private[graft] object IcebergCommitLog extends CommitLog {
         else Seq.empty
       IcebergLog.readData(spark, metaJson, s, files, metaSel)
     }
-    if (dvFiles.isEmpty) return read(s.files, withMeta = false)
+    if (dvFiles.isEmpty) return read(s.files, withMeta)
     // broadcast DESCRIPTORS, not bitmap bytes: driver and broadcast stay
     // O(files); each executor lazily materializes only the bitmaps of
     // files its tasks scan (inline ones decode in place, sidecar ones
@@ -713,11 +750,11 @@ private[graft] object IcebergCommitLog extends CommitLog {
     val bc = spark.sparkContext.broadcast(new DvDescriptorLookup(location, m,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf())): DvProbe)
     import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    val live = read(dvFiles, withMeta = true)
+    val marked = read(dvFiles, withMeta = true)
       .filter(toCol(DvIsRowLive(
         toExpr(col(DeltaLog.FileMetaCol)), toExpr(col(DeltaLog.RowMetaCol)), bc)))
-      .drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-    if (plain.isEmpty) live else read(plain, withMeta = false).unionAll(live)
+    val live = if (withMeta) marked else marked.drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+    if (plain.isEmpty) live else read(plain, withMeta).unionAll(live)
   }
 
   def stage(spark: SparkSession, location: String, df: DataFrame, snap: Snapshot): Seq[AddFile] = {

@@ -1331,9 +1331,9 @@ object DeltaLogWriter {
     }
     val k = math.max(1, (addRows.size() + maxActionsPerPart - 1) / maxActionsPerPart)
     val tmpDir = new Path(logD, s".v2ckpt-tmp-${UUID.randomUUID()}")
-    spark.createDataFrame(addRows, sidecarSchema).repartition(k).write.parquet(tmpDir.toString)
     val sidecars =
       try {
+        spark.createDataFrame(addRows, sidecarSchema).repartition(k).write.parquet(tmpDir.toString)
         val parts = f.listStatus(tmpDir).map(_.getPath)
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
         if (parts.isEmpty && addRows.size() > 0)
@@ -1490,10 +1490,11 @@ object DeltaLogWriter {
     val tmpDir = new Path(dir, s".ckpt-tmp-${UUID.randomUUID()}")
     val n = rows.size()
     val k = math.max(1, (n + maxActionsPerPart - 1) / maxActionsPerPart)
-    // one distributed write produces all parts; action placement across
-    // parts is arbitrary (readers union every part)
-    spark.createDataFrame(rows, schema).repartition(k).write.parquet(tmpDir.toString)
     try {
+      // one distributed write produces all parts; action placement across
+      // parts is arbitrary (readers union every part). A failed write
+      // leaves no temp dir behind either (the finally below)
+      spark.createDataFrame(rows, schema).repartition(k).write.parquet(tmpDir.toString)
       val parts = f.listStatus(tmpDir).map(_.getPath)
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
       if (parts.isEmpty) throw new java.io.IOException(s"no checkpoint part under $tmpDir")
@@ -1679,14 +1680,20 @@ object DeltaLogWriter {
     * with the matching features. Legacy tables bump minWriterVersion
     * (which implies the feature) when that suffices; otherwise the table
     * moves to the table-features protocol carrying every implied feature
-    * forward (PROTOCOL.md "Table Features"). Empty when nothing new is
-    * needed.
+    * forward (PROTOCOL.md "Table Features"). `writesDvs` (the commit adds
+    * a file with a deletion vector) requires the deletionVectors feature
+    * whatever the properties say — a table whose configuration enables
+    * DVs may still carry a protocol without it. Empty when nothing new
+    * is needed.
     */
   private[tables] def protocolUpgradeFor(spark: SparkSession, location: String,
       baseSchema: StructType, baseProps: Map[String, String],
-      nextSchema: StructType, nextProps: Map[String, String]): Seq[String] = {
-    val before = requiredFeatures(baseSchema, baseProps).map(_._1).toSet
-    val needed = requiredFeatures(nextSchema, nextProps)
+      nextSchema: StructType, nextProps: Map[String, String],
+      writesDvs: Boolean = false): Seq[String] = {
+    val dv: Seq[(String, Option[Int], Boolean)] =
+      if (writesDvs) Seq(("deletionVectors", None, true)) else Nil
+    val before = requiredFeatures(baseSchema, baseProps).map(_._1).toSet -- dv.map(_._1)
+    val needed = (requiredFeatures(nextSchema, nextProps) ++ dv).distinctBy(_._1)
     val fresh = needed.filterNot(f => before.contains(f._1))
     if (fresh.isEmpty) return Seq.empty
     val (state, _) = DeltaLog.replayState(spark, location, None)
@@ -1756,6 +1763,15 @@ object DeltaLogWriter {
   * by the table property `delta.enableDeletionVectors=true`, Delta's own
   * switch; tables without it keep the copy-on-write path.
   *
+  * This object only PLANS: `planMarkDeleted` (TxTable's DELETE/UPDATE)
+  * and `planDvMarks` (shared with TxMerge's merge-on-read MERGE) hand a
+  * TxTable.Planned to TxTable.commitWithRetryIf, and
+  * ForeignDeltaCommitLog.tryCommit writes the version like any other.
+  * A merge-on-read UPDATE marks the matching rows' positions in the
+  * files' deletion vectors and ONE appended file set carries the updated
+  * versions — an UPDATE of 10 rows in a 1 GB file commits a bitmap plus
+  * a 10-row file, never a rewrite.
+  *
   * Scale shape: candidate files come from manifest stats pruning; the scan
   * for matching row positions is a distributed filter with pushdown; the
   * per-file bitmaps are BUILT ON EXECUTORS (groupByKey over only the
@@ -1763,34 +1779,10 @@ object DeltaLogWriter {
   * per touched file — bounded by deleted-row count, never by table size.
   */
 object DeltaDvWriter {
-  private implicit val formats: Formats = DefaultFormats
 
   /** True when the table asks for merge-on-read deletes. */
   def enabled(props: Map[String, String]): Boolean =
     props.get("delta.enableDeletionVectors").exists(_.equalsIgnoreCase("true"))
-
-  def delete(spark: SparkSession, location: String, predicate: String): Unit =
-    withRetry(spark, location, "DELETE")(tryMarkDeleted(spark, location, predicate, "DELETE", None))
-
-  /** Merge-on-read UPDATE: the matching rows' physical positions join the
-    * files' deletion vectors and ONE appended file set carries the updated
-    * versions — an UPDATE of 10 rows in a 1 GB file commits a bitmap plus
-    * a 10-row file, never a rewrite. `set` follows SQL UPDATE semantics
-    * (every right-hand side reads the ORIGINAL row).
-    */
-  def update(spark: SparkSession, location: String, predicate: String,
-      set: Map[String, String]): Unit =
-    withRetry(spark, location, "UPDATE")(tryMarkDeleted(spark, location, predicate, "UPDATE", Some(set)))
-
-  private def withRetry(spark: SparkSession, location: String, op: String)(attempt: => Boolean): Unit = {
-    DeltaLogWriter.requireWritable(spark, location, forOverwrite = true)
-    var attempts = 0
-    while (!attempt) {
-      attempts += 1
-      if (attempts >= 5)
-        throw new java.io.IOException(s"DV $op conflict at $location after $attempts attempts")
-    }
-  }
 
   /** Per-file deletion bitmaps for `marks` (rows carrying the
     * FileMetaCol/RowMetaCol provenance columns), merged with the files'
@@ -1861,75 +1853,23 @@ object DeltaDvWriter {
     Some((results.toSeq.map(r => byAbs(r._1).path), dvAdds))
   }
 
-  /** One Delta commit of a merge-on-read operation: removes + DV re-adds +
-    * appended files, with the protocol upgraded to permit DVs when needed.
-    * On a row-tracked table, fresh adds (UPDATE/MERGE-produced files) get
-    * baseRowId ranges stamped and the watermark advanced in the same
-    * commit; DV re-adds keep their original ids. On an ICT table the
-    * commitInfo carries the monotonic inCommitTimestamp. `newProps`, when
-    * different from the snapshot's, lands as a metaData action (publishing
-    * freshly minted materialized-column names). Returns false on a lost
-    * version race (staged files/bins are orphaned — harmless: the .bin is
-    * outside vacuum's reach, staged parquet ages out via the retention
-    * window, a fresh attempt writes fresh UUIDs).
+  /** Plans one merge-on-read attempt against `snap`: the predicate's rows
+    * join their files' deletion vectors; for UPDATE (`set` defined) their
+    * transformed versions are staged as new files in the same commit.
+    * Returns the commit with the candidate files' paths (the stats fold's
+    * removed set), or None when no row matches. ForeignDeltaCommitLog's
+    * tryCommit writes it — ICT, row-tracking stamps, the metaData line for
+    * freshly minted materialized-column names and the protocol upgrade
+    * that permits DVs included. A lost version race orphans the staged
+    * files and .bin files harmlessly (vacuum reclaims them past
+    * retention; the next attempt writes fresh UUIDs).
     */
-  private[tables] def commitDv(spark: SparkSession, location: String, base: TxLog.Snapshot,
-      op: String, predicate: String,
-      removedPaths: Seq[String], adds: Seq[TxLog.AddFile],
-      cdc: Seq[TxLog.AddFile] = Seq.empty,
-      newProps: Option[Map[String, String]] = None): Boolean = {
-    val props = newProps.getOrElse(base.properties)
-    val ictField: List[(String, JValue)] =
-      if (!props.get("delta.enableInCommitTimestamps").exists(_.equalsIgnoreCase("true"))) Nil
-      else {
-        val f = DeltaLog.fs(spark, location)
-        val prev = DeltaLog.latestVersion(spark, location).map { v =>
-          DeltaLog.commitTimestamp(f,
-            new Path(DeltaLog.logDir(location), f"$v%020d.json"))
-        }.getOrElse(0L)
-        List("inCommitTimestamp" -> JLong(math.max(System.currentTimeMillis(), prev + 1)))
-      }
-    val commitInfo = JsonMethods.compact(JsonMethods.render(JObject("commitInfo" -> JObject(
-      List[(String, JValue)](
-        "timestamp" -> JLong(System.currentTimeMillis()),
-        "operation" -> JString(op),
-        "operationParameters" -> JObject("predicate" -> JString(predicate))) ++ ictField))))
-    val (state, _) = DeltaLog.replayState(spark, location, None)
-    val metaLine: Seq[String] =
-      if (props == base.properties) Seq.empty
-      else Seq(JsonMethods.compact(JsonMethods.render(JObject("metaData" -> JObject(
-        "id" -> JString(Option(state.metaId).filter(_.nonEmpty)
-          .getOrElse(UUID.randomUUID().toString)),
-        "format" -> JObject("provider" -> JString("parquet"), "options" -> JObject()),
-        "schemaString" -> JString(base.schema.json),
-        "partitionColumns" -> JArray(
-          base.partitionColumns.map(c => DeltaLog.columnMappingOf(base.schema)
-            .getOrElse(c, c)).toList.map(JString(_))),
-        "configuration" -> JObject(props.toList.map { case (k, v) => k -> JString(v) }))))))
-    val (adds1, rtLine) =
-      if (!RowTracking.enabled(props)) (adds, None)
-      else RowTracking.stamp(adds, RowTracking.highWaterMark(state.domains), base.version + 1)
-    val lines = (commitInfo +: (protocolUpgrade(spark, location) ++ metaLine ++ rtLine)) ++
-      removedPaths.map(DeltaLogWriter.removeAction(_)) ++
-      adds1.map(DeltaLogWriter.addAction(base.schema, _)) ++
-      cdc.map(DeltaCdf.cdcAction)
-    try {
-      DeltaLogWriter.writeCommit(spark, location, base.version + 1, lines)
-      DeltaLogWriter.maybeCheckpoint(spark, location, base.version + 1)
-      true
-    } catch { case _: graft.catalog.AlreadyExistsError => false }
-  }
-
-  /** One optimistic attempt: mark the predicate's rows deleted via DVs;
-    * for UPDATE additionally stage their transformed versions as new
-    * files in the same commit.
-    */
-  private def tryMarkDeleted(spark: SparkSession, location: String, predicate: String,
-      op: String, set: Option[Map[String, String]]): Boolean = {
+  private[tables] def planMarkDeleted(spark: SparkSession, location: String,
+      snap: TxLog.Snapshot, predicate: String,
+      set: Option[Map[String, String]]): Option[(TxTable.Planned, Seq[String])] = {
     import org.apache.spark.sql.functions.{coalesce, expr}
-    val snap = DeltaLog.snapshot(spark, location)
     val candidates = FileStats.survivingFiles(spark, snap, predicate)
-    if (candidates.isEmpty) return true
+    if (candidates.isEmpty) return None
     // UPDATE on a row-tracked table: the staged replacement rows must
     // carry their original row ids (materialized), so read them alongside
     // the provenance columns; DELETE only marks bits — files keep their
@@ -1939,9 +1879,8 @@ object DeltaDvWriter {
       if (tracked) DeltaLog.withRowIds(spark, location, snap.copy(files = candidates))
       else DeltaLog.readWithRowMeta(spark, location, snap.copy(files = candidates))
     val matchesWithMeta = df.filter(coalesce(expr(predicate), lit(false)))
-    val planned = planDvMarks(spark, location, candidates, matchesWithMeta)
-    if (planned.isEmpty) return true // nothing matched after row-level filtering
-    val (removedPaths, dvAdds) = planned.get
+    val (removedPaths, dvAdds) = planDvMarks(spark, location, candidates, matchesWithMeta)
+      .getOrElse(return None) // nothing matched after row-level filtering
     // UPDATE: stage the transformed matching rows (original values feed
     // every SET expression; all staged rows matched, so no conditional).
     // Updated rows KEEP their row id; the commit version goes fresh (null
@@ -1987,51 +1926,7 @@ object DeltaDvWriter {
         }
         DeltaCdf.stageCdc(spark, location, changes, snap)
       }
-    val committed = commitDv(spark, location, snap, op, predicate,
-      removedPaths, dvAdds ++ newAdds, cdcAdds,
-      newProps = if (props == snap.properties) None else Some(props))
-    // a merge-on-read DELETE folds column stats exactly like the
-    // copy-on-write path: the marked rows are `candidates ⋂ predicate`
-    // over the PRE-delete snapshot (old DVs applied), and commitDv
-    // pinned our commit at exactly snap.version + 1, so the fold's
-    // fingerprint can never mislabel a concurrent commit's state.
-    // A MoR UPDATE is row-preserving too (DV-marked rows come back in
-    // the appended file set 1:1), so the UPDATE fold applies: only the
-    // assigned columns' stats unset, everything else survives — same
-    // partition-column/generated-column bails as the CoW path.
-    if (committed && set.isEmpty)
-      ColumnStats.foldDelete(TxTable.forForeignDelta(spark, location),
-        snap.version + 1, snap.version, candidates.map(_.path), predicate)
-    else if (committed)
-      ColumnStats.foldUpdate(TxTable.forForeignDelta(spark, location),
-        snap.version + 1, snap.version,
-        set.get.keys.toSeq :+ RowTracking.RowCommitVersionCol)
-    committed
-  }
-
-  /** The protocol action permitting DVs, when the table lacks it. Legacy
-    * protocol versions imply features; an upgrade to the table-features
-    * protocol must carry those forward (PROTOCOL.md "Table Features").
-    */
-  private def protocolUpgrade(spark: SparkSession, location: String): Seq[String] = {
-    val (state, _) = DeltaLog.replayState(spark, location, None)
-    val already = state.minReader >= 3 && state.readerFeatures.contains("deletionVectors") &&
-      state.minWriter >= 7 && state.writerFeatures.contains("deletionVectors")
-    if (already) return Seq.empty
-    val impliedReader: Set[String] =
-      if (state.minReader >= 3) state.readerFeatures
-      else if (state.minReader >= 2) Set("columnMapping")
-      else Set.empty
-    val impliedWriter: Set[String] =
-      if (state.minWriter >= 7) state.writerFeatures
-      else if (state.minWriter >= 2) Set("appendOnly", "invariants")
-      else Set.empty
-    val readers = impliedReader + "deletionVectors"
-    val writers = impliedWriter + "deletionVectors"
-    Seq(JsonMethods.compact(JsonMethods.render(JObject("protocol" -> JObject(
-      "minReaderVersion" -> JInt(3),
-      "minWriterVersion" -> JInt(7),
-      "readerFeatures" -> JArray(readers.toList.sorted.map(JString(_))),
-      "writerFeatures" -> JArray(writers.toList.sorted.map(JString(_))))))))
+    Some((TxTable.Planned(dvAdds ++ newAdds, removedPaths, snap.schema,
+      snap.partitionColumns, props, cdcAdds), candidates.map(_.path)))
   }
 }

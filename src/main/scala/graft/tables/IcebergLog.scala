@@ -69,23 +69,30 @@ object IcebergLog {
 
   /** Highest-version metadata file — `version-hint.text` when present
     * (the HadoopCatalog convention), else the max vN lexicographic scan.
+    * The hint is only a hint: committers rewrite it after their publish,
+    * so under concurrent commits it can trail the newest version or be
+    * caught mid-rewrite — when it is unreadable, or the version after the
+    * hinted one exists, the scan decides.
     */
   private[tables] def currentMetadataPath(f: FileSystem, location: String): Path = {
     val dir = metadataDir(location)
     val hint = new Path(dir, "version-hint.text")
-    if (f.exists(hint)) {
-      val in = f.open(hint)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-      val p = new Path(dir, s"v$v.metadata.json")
-      if (f.exists(p)) return p
+    val hinted =
+      try {
+        val in = f.open(hint)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
+        finally in.close()
+      } catch { case _: java.io.IOException => None }
+    def at(v: Long) = new Path(dir, s"v$v.metadata.json")
+    hinted.filter(v => f.exists(at(v)) && !f.exists(at(v + 1))).map(at).getOrElse {
+      f.listStatus(dir).map(_.getPath)
+        .filter(_.getName.endsWith(".metadata.json"))
+        .sortBy { p =>
+          p.getName.stripSuffix(".metadata.json").stripPrefix("v").toLongOption.getOrElse(-1L)
+        }
+        .lastOption
+        .getOrElse(throw graft.catalog.DoesNotExistError(s"no Iceberg metadata at $location"))
     }
-    f.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".metadata.json"))
-      .sortBy { p =>
-        p.getName.stripSuffix(".metadata.json").stripPrefix("v").toLongOption.getOrElse(-1L)
-      }
-      .lastOption
-      .getOrElse(throw graft.catalog.DoesNotExistError(s"no Iceberg metadata at $location"))
   }
 
   private[tables] def readJson(f: FileSystem, p: Path): JValue = {
@@ -777,7 +784,7 @@ object IcebergLog {
     if (!isIcebergTable(spark, location)) None
     else Some(metaVersionOf(currentMetadataPath(fs(spark, location), location)))
 
-  private def metaOf(spark: SparkSession, location: String): JValue =
+  private[tables] def metaOf(spark: SparkSession, location: String): JValue =
     readJson(fs(spark, location), currentMetadataPath(fs(spark, location), location))
 
   /** (schema, identity partition columns) — the register_as_table
@@ -1290,9 +1297,13 @@ object IcebergLog {
   }
 }
 
-/** Spec-compliant Iceberg v2 WRITER: create (unpartitioned or
-  * identity-partitioned) + append + overwrite + position-delete DELETE,
-  * readable by HadoopTables-convention engines (version-hint layout).
+/** Spec-compliant Iceberg v2 WRITER, readable by HadoopTables-convention
+  * engines (version-hint layout): the version-0 creates, the manifest /
+  * manifest-list / metadata building blocks IcebergCommitLog.tryCommit
+  * commits every later snapshot with, metadata-only commits (refs,
+  * schema DDL, expiry) and WAP branch appends. `append`, `overwrite`,
+  * `delete` and `equalityDelete` are entry points onto TxTable's write
+  * surface (the one commit loop); this object stages their delete files.
   * Data files are staged by the same distributed parquet job every other
   * writer uses and carry FULL rows (partition columns included, per
   * spec); manifests carry typed partition values and lower/upper bounds
@@ -2027,7 +2038,7 @@ object IcebergWriter {
     // rows must be refused HERE, not discovered after the publish
     val props = IcebergLog.propertiesOf(stB.meta)
     val data = Constraints.enforce(
-      GeneratedColumns.validate(conformed(stB, df), stB.schema), props, stB.schema)
+      GeneratedColumns.validate(conformed(stB.schema, df), stB.schema), props, stB.schema)
     val specFields = resolvedSpecFields(stB)
     val partFields = specFields.map(sf => sf.name -> sf.resultType)
     val topIds = IcebergLog.topFields(stB.meta).map { case (id, n, _) => n -> id }.toMap
@@ -2208,11 +2219,11 @@ object IcebergWriter {
   /** STRICT schema gate through the Iceberg type bridge (short/byte ride
     * as int etc.), returning the frame cast to the table schema.
     */
-  private[tables] def conformed(st: IcebergLog.IceState, df: DataFrame): DataFrame = {
+  private[tables] def conformed(schema: StructType, df: DataFrame): DataFrame = {
     val (json, _, _) = icebergSchemaJson(df.schema)
     val bridged = IcebergLog.structOf(JsonMethods.parse(json))
-    graft.types.SchemaEquality.requireEqual(st.schema, bridged)
-    df.select(st.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
+    graft.types.SchemaEquality.requireEqual(schema, bridged)
+    df.select(schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
   }
 
   /** Create a v2 Iceberg table with `df` as snapshot 1. Each
@@ -2450,267 +2461,128 @@ object IcebergWriter {
       throw UnsupportedOperationError(
         "column-mapped delta tables store physical column names; iceberg publish " +
           "is not supported for them")
-    val f = IcebergLog.fs(spark, location)
     val adds = snap.files.map(_.copy(deletionVector = None))
-    val now = System.currentTimeMillis()
-    val specFieldsOf = snap.partitionColumns.map { c =>
-      val field = snap.schema.fields.find(_.name == c).getOrElse(
-        throw UnsupportedOperationError(s"partition column $c is not in the schema"))
-      IcebergLog.ResolvedSpecField(c, IceTransforms.Identity, c, field.dataType)
-    }
-    if (!IcebergLog.isIcebergTable(spark, location)) {
-      createFromFiles(spark, location, snap.schema, snap.partitionColumns, adds,
-        Map("graft.published-from" -> "delta",
-          "graft.delta-version" -> snap.version.toString))
-    } else {
-      val partFields = specFieldsOf.map(sf => sf.name -> sf.resultType)
-      val entrySchema = entrySchemaFor(partFields)
-      val st = IcebergLog.stateAt(spark, location, None)
-      // schema drift since the last publish evolves with preserved ids
-      val schemaChanged = snap.schema.json != st.schema.json
-      val (schemaFields, topIds) =
-        if (schemaChanged) evolvedSchemaFields(st.meta, snap.schema)
-        else (Map.empty[String, JValue],
-          IcebergLog.topFields(st.meta).map { case (id, n, _) => n -> id }.toMap)
-      val seq = lastSeq(st.meta) + 1
-      val snapId = nextSnapId(st.meta)
-      val (mPath, mLen, mRows) = writeManifest(f, location, entrySchema, adds,
-        snap.schema, partFields, topIds, snapId, seq, content = 0)
-      val mlPath = writeManifestList(f, location, snapId,
-        Seq(mlRecord(mPath.toString, mLen, 0, seq, snapId, adds.size, mRows)))
-      val props = IcebergLog.propertiesOf(st.meta) +
-        ("graft.published-from" -> "delta") +
-        ("graft.delta-version" -> snap.version.toString)
-      commitExisting(f, location, st,
-        snapshotJson(snapId, now, seq, mlPath, "replace", st.snapshotId),
-        snapId, seq, now, schemaFields ++ Map(
-          "properties" -> (JObject(props.toList.map { case (k, v) =>
-            k -> (JString(v): JValue)
-          }): JValue)))
-    }
+    val published = Map("graft.published-from" -> "delta",
+      "graft.delta-version" -> snap.version.toString)
+    if (!IcebergLog.isIcebergTable(spark, location))
+      createFromFiles(spark, location, snap.schema, snap.partitionColumns, adds, published)
+    else
+      // a re-publish swaps the whole file set for the Delta snapshot's in
+      // one "replace" snapshot; schema drift evolves with preserved ids
+      TxTable.forIceberg(spark, location).commitWithRetryIf("PUBLISH") { ice =>
+        Some(TxTable.Planned(adds, ice.files.map(_.path), snap.schema,
+          ice.partitionColumns, ice.properties ++ published))
+      }
   }
 
   /** Append `df` as a new snapshot (STRICT through the type bridge);
     * partitioned tables partition the incoming data by the default spec.
+    * Runs TxTable's append, so constraints, generated columns, the stats
+    * fold and the optimistic retry apply as on every other write.
     */
-  def append(spark: SparkSession, location: String, df: DataFrame): Unit = {
-    val st = IcebergLog.state(spark, location)
-    val f = IcebergLog.fs(spark, location)
-    val data = conformed(st, df)
-    val specFields = resolvedSpecFields(st)
-    val partFields = specFields.map(sf => sf.name -> sf.resultType)
-    val topIds = IcebergLog.topFields(st.meta).map { case (id, n, _) => n -> id }.toMap
-    val added = stage(spark, location, data, specFields,
-      IcebergLog.currentSchemaJson(st.meta), IcebergLog.sortOrderFields(st.meta))
-    val seq = lastSeq(st.meta) + 1
-    val snapId = nextSnapId(st.meta)
-    val now = System.currentTimeMillis()
-    val entrySchema = entrySchemaFor(partFields)
-    val (mPath, mLen, mRows) = writeManifest(f, location, entrySchema, added,
-      st.schema, partFields, topIds, snapId, seq, content = 0)
-    val ml = priorManifestRecords(spark, location, st) :+
-      mlRecord(mPath.toString, mLen, 0, seq, snapId, added.size, mRows)
-    val mlPath = writeManifestList(f, location, snapId, ml)
-    commitExisting(f, location, st, snapshotJson(snapId, now, seq, mlPath, "append", st.snapshotId),
-      snapId, seq, now)
-  }
+  def append(spark: SparkSession, location: String, df: DataFrame): Unit =
+    TxTable.forIceberg(spark, location).append(
+      conformed(IcebergLog.currentSchema(IcebergLog.metaOf(spark, location)), df))
 
-  /** Replace the table's contents with `df` in one snapshot: the new
-    * manifest list references ONLY the new data manifest; prior snapshots
-    * (and their deletes) stay time-travelable through their own lists.
+  /** Replace the table's contents with `df` in one snapshot; prior
+    * snapshots stay time-travelable through their own manifest lists.
     * With `adoptSchema` the frame's schema replaces the table's (schema
-    * evolution OVERWRITE); partition columns must survive the new schema.
+    * evolution OVERWRITE: surviving columns keep their field ids, the
+    * spec keeps its transforms); partition source columns must survive
+    * the new schema with their types.
     */
   def overwrite(spark: SparkSession, location: String, df: DataFrame,
       adoptSchema: Boolean = false): Unit = {
     val st = IcebergLog.state(spark, location)
-    val f = IcebergLog.fs(spark, location)
-    val specFields0 = resolvedSpecFields(st)
-    val (data, schema, replaceFields, topIds) =
-      if (!adoptSchema)
-        (conformed(st, df), st.schema, Map.empty[String, JValue],
-          IcebergLog.topFields(st.meta).map { case (id, n, _) => n -> id }.toMap)
-      else {
-        specFields0.foreach { sf =>
-          if (!df.schema.fieldNames.contains(sf.source))
-            throw UnsupportedOperationError(
-              s"overwrite schema drops partition source column ${sf.source}; " +
-                "repartition the table instead")
-        }
-        // the spec survives the evolution with its transforms intact —
-        // source-ids re-point at the new schema's ids for the same columns
-        val (json, lastColId, ids) = icebergSchemaJson(df.schema)
-        val specFieldsJson = specFields0.zipWithIndex.map { case (sf, i) =>
-          JObject("name" -> JString(sf.name), "transform" -> JString(sf.t.spec),
-            "source-id" -> JInt(ids(sf.source)), "field-id" -> JInt(1000 + i)): JValue
-        }
-        (df, df.schema, Map[String, JValue](
-          "schemas" -> JArray(List(JsonMethods.parse(json))),
-          "current-schema-id" -> JInt(0),
-          "last-column-id" -> JInt(lastColId),
-          "partition-specs" -> JArray(List(JObject(
-            "spec-id" -> JInt(0), "fields" -> JArray(specFieldsJson.toList)))),
-          "default-spec-id" -> JInt(0)), ids)
+    val t = TxTable.forIceberg(spark, location)
+    if (!adoptSchema) t.overwrite(conformed(st.schema, df))
+    else {
+      // the spec's source ids must survive: a dropped or retyped source
+      // column would take a new field id (or none)
+      val bridged = IcebergLog.structOf(JsonMethods.parse(icebergSchemaJson(df.schema)._1))
+      resolvedSpecFields(st).find(sf => !bridged.fieldNames.contains(sf.source) ||
+          bridged(sf.source).dataType != sf.sourceType).foreach { sf =>
+        throw UnsupportedOperationError(
+          s"overwrite schema drops or retypes partition source column ${sf.source}; " +
+            "repartition the table instead")
       }
-    val specFields =
-      if (!adoptSchema) specFields0
-      else specFields0.map(sf => sf.copy(sourceType = schema(sf.source).dataType))
-    val partFields = specFields.map(sf => sf.name -> sf.resultType)
-    val schemaJson =
-      if (!adoptSchema) IcebergLog.currentSchemaJson(st.meta)
-      else replaceFields("schemas") match {
-        case JArray(j :: _) => j
-        case other => other
-      }
-    val added = stage(spark, location, data, specFields, schemaJson,
-      IcebergLog.sortOrderFields(st.meta))
-    val seq = lastSeq(st.meta) + 1
-    val snapId = nextSnapId(st.meta)
-    val now = System.currentTimeMillis()
-    val entrySchema = entrySchemaFor(partFields)
-    val (mPath, mLen, mRows) = writeManifest(f, location, entrySchema, added,
-      schema, partFields, topIds, snapId, seq, content = 0)
-    val mlPath = writeManifestList(f, location, snapId,
-      Seq(mlRecord(mPath.toString, mLen, 0, seq, snapId, added.size, mRows)))
-    commitExisting(f, location, st, snapshotJson(snapId, now, seq, mlPath, "overwrite", st.snapshotId),
-      snapId, seq, now, replaceFields)
+      t.overwrite(df, graft.catalog.SchemaEvolution.OVERWRITE)
+    }
   }
 
-  /** DELETE WHERE `predicate` as a POSITION-DELETE snapshot (v2
-    * merge-on-read): a distributed job finds matching (file, position)
-    * pairs over the LIVE rows, writes them as sorted parquet delete files
-    * (spec field-ids 2147483546/2147483545 stamped so external planners
-    * recognize the columns), and one content=1 manifest joins the prior
-    * manifests in the new snapshot. No data file is rewritten. Returns
-    * the number of rows deleted.
+  /** DELETE WHERE `predicate` (TxTable.deleteIceberg): whole files drop
+    * when their partition tuples decide the predicate, otherwise a
+    * position-delete snapshot (v2 merge-on-read) marks the matching rows.
+    * No data file is rewritten. Returns the number of rows deleted.
     */
-  def delete(spark: SparkSession, location: String, predicate: String): Long = {
-    val st = IcebergLog.state(spark, location)
-    if (st.files.isEmpty) return 0L
-    val f = IcebergLog.fs(spark, location)
+  def delete(spark: SparkSession, location: String, predicate: String): Long =
+    TxTable.forIceberg(spark, location).deleteIceberg(predicate)
+
+  /** Stage position-delete files for the live rows of `snap` matching
+    * `predicate`: a distributed job finds the (exact manifest path,
+    * position) pairs — the path translation broadcast is O(#files),
+    * positions never funnel through the driver — and writes them as
+    * sorted parquet with the spec's reserved field ids
+    * (2147483546/2147483545) stamped so external planners recognize the
+    * columns. Empty when no row matches.
+    */
+  private[tables] def stagePositionDeletes(spark: SparkSession, location: String,
+      snap: TxLog.Snapshot, predicate: String): Seq[TxLog.AddFile] = {
     import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    // live rows (existing deletes applied) matching the predicate →
-    // (exact manifest path, position). The path translation broadcast is
-    // O(#files); positions never funnel through the driver.
-    val lookup = st.files.map(a =>
-      (DeletionVectors.normalizedUri(a.path), a.path))
+    val lookup = snap.files.map(a => (DeletionVectors.normalizedUri(a.path), a.path))
     val lookupDf = spark.createDataFrame(lookup).toDF("__np", "file_path")
-    val matches = IcebergLog.dfFor(spark, st, withMeta = true)
+    val matches = IcebergCommitLog.liveRows(spark, location, snap, withMeta = true)
       .filter(expr(predicate))
       .select(toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))).as("__np"),
         col(DeltaLog.RowMetaCol).as("pos"))
       .join(broadcast(lookupDf), "__np")
-    // spec: delete rows sorted by file_path then pos, with the reserved
-    // field ids stamped into the parquet schema
+    // spec: delete rows sorted by file_path then pos
     val fpMeta = new MetadataBuilder().putLong("parquet.field.id", 2147483546L).build()
     val posMeta = new MetadataBuilder().putLong("parquet.field.id", 2147483545L).build()
     val sorted = matches
       .repartitionByRange(col("file_path"), col("pos"))
       .sortWithinPartitions(col("file_path"), col("pos"))
       .select(col("file_path").as("file_path", fpMeta), col("pos").as("pos", posMeta))
-    val staged = TxLog.stageData(spark, location, sorted, Seq.empty)
-      .filter(_.rows > 0)
-    val deletedRows = staged.map(_.rows).sum
-    if (deletedRows == 0L) {
-      staged.foreach(a => f.delete(IcebergLog.resolve(location, a.path), false))
-      return 0L
-    }
-    val partFields = writablePartFields(st)
-    val topIds = IcebergLog.topFields(st.meta).map { case (id, n, _) => n -> id }.toMap
-    val seq = lastSeq(st.meta) + 1
-    val snapId = nextSnapId(st.meta)
-    val now = System.currentTimeMillis()
-    val entrySchema = entrySchemaFor(partFields)
-    // bounds/partition stay empty on delete entries: a position-delete
-    // file's stats describe (file_path, pos), not table columns
-    val delAdds = staged.map(_.copy(partitionValues = Map.empty,
-      minValues = None, maxValues = None))
-    val (mPath, mLen, mRows) = writeManifest(f, location, entrySchema, delAdds,
-      st.schema, partFields, topIds, snapId, seq, content = 1)
-    val ml = priorManifestRecords(spark, location, st) :+
-      mlRecord(mPath.toString, mLen, 1, seq, snapId, delAdds.size, mRows)
-    val mlPath = writeManifestList(f, location, snapId, ml)
-    commitExisting(f, location, st, snapshotJson(snapId, now, seq, mlPath, "delete", st.snapshotId),
-      snapId, seq, now)
-    // a MoR position delete folds column stats exactly like the Delta DV
-    // path: the newly-hidden rows are `touched files ⋂ predicate` over
-    // the PRE-delete snapshot (old deletes applied), and writeMetadata
-    // is create-exclusive at metadataVersion+1, so the fold's
-    // fingerprint can never mislabel a concurrent commit's state. The
-    // touched paths come from the just-written delete files themselves —
-    // O(deleted rows) over tiny parquet, never a table scan. Gated on a
-    // stamp existing at all, so stampless tables pay nothing.
-    if (IcebergLog.propertiesOf(st.meta).contains(ColumnStats.FingerprintProp))
-      try {
-        val touched = spark.read
-          .parquet(staged.map(a => IcebergLog.resolve(location, a.path).toString): _*)
-          .select(col("file_path")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        ColumnStats.foldDelete(TxTable.forIceberg(spark, location),
-          st.metadataVersion + 1, st.metadataVersion, touched, predicate)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    deletedRows
+    TxLog.stageData(spark, location, sorted, Seq.empty).filter(_.rows > 0)
   }
 
   /** DELETE BY KEY as an EQUALITY-DELETE snapshot (v2 merge-on-read — the
-    * shape streaming upsert engines like Flink commit): the distinct key
-    * rows are written as a parquet delete file whose columns carry the
-    * table's field ids, one manifest with data_file.content=2 and
-    * `equality_ids` stamped joins the prior manifests, and the new
-    * snapshot's sequence number scopes the delete to every EARLIER data
-    * file — rows with the same keys appended LATER survive, per spec.
-    * No data file is read or rewritten: cost is O(distinct keys)
-    * regardless of table size, which is why upsert engines write these.
-    * Returns the number of delete-key rows committed.
+    * shape streaming upsert engines like Flink commit), through
+    * TxTable.equalityDelete: the distinct key rows are written as a
+    * parquet delete file whose columns carry the table's field ids, one
+    * manifest with data_file.content=2 and `equality_ids` stamped joins
+    * the prior manifests, and the new snapshot's sequence number scopes
+    * the delete to every EARLIER data file — rows with the same keys
+    * appended LATER survive, per spec. No data file is read or
+    * rewritten: cost is O(distinct keys) regardless of table size, which
+    * is why upsert engines write these. Returns the number of delete-key
+    * rows committed.
     */
   def equalityDelete(spark: SparkSession, location: String,
       keyCols: Seq[String], keys: DataFrame): Long = {
     require(keyCols.nonEmpty, "equalityDelete requires at least one key column")
-    val st = IcebergLog.state(spark, location)
-    val f = IcebergLog.fs(spark, location)
-    val topIds = IcebergLog.topFields(st.meta).map { case (id, n, _) => n -> id }.toMap
+    TxTable.forIceberg(spark, location).equalityDelete(keyCols, keys)
+  }
+
+  /** Stage the distinct `keys` rows as one equality-delete file over
+    * `keyCols`, typed and field-id-stamped by `snap`'s schema. None when
+    * there are no keys.
+    */
+  private[tables] def stageEqualityDeletes(spark: SparkSession, location: String,
+      snap: TxLog.Snapshot, keyCols: Seq[String],
+      keys: DataFrame): Option[TxTable.DeleteFiles] = {
+    val topIds = IcebergLog.topFields(IcebergLog.metaAt(spark, location, snap.version))
+      .map { case (id, n, _) => n -> id }.toMap
     val missing = keyCols.filterNot(topIds.contains)
     if (missing.nonEmpty)
       throw UnsupportedOperationError(
         s"equalityDelete: columns ${missing.mkString(", ")} are not in the table schema")
     val typed = keyCols.map { c =>
       val meta = new MetadataBuilder().putLong("parquet.field.id", topIds(c).toLong).build()
-      col(c).cast(st.schema(c).dataType).as(c, meta)
+      col(c).cast(snap.schema(c).dataType).as(c, meta)
     }
-    val rows = keys.select(typed.toIndexedSeq: _*).distinct()
-    val staged = TxLog.stageData(spark, location, rows, Seq.empty).filter(_.rows > 0)
-    if (staged.isEmpty) return 0L
-    val partFields = writablePartFields(st)
-    val seq = lastSeq(st.meta) + 1
-    val snapId = nextSnapId(st.meta)
-    val now = System.currentTimeMillis()
-    val entrySchema = entrySchemaFor(partFields)
-    // partition/bounds stay empty: the delete file's rows are keys, and
-    // an unpartitioned-scope equality delete applies table-wide
-    val delAdds = staged.map(_.copy(partitionValues = Map.empty,
-      minValues = None, maxValues = None))
-    val (mPath, mLen, mRows) = writeManifest(f, location, entrySchema, delAdds,
-      st.schema, partFields, topIds, snapId, seq, content = 2,
-      equalityIds = keyCols.map(topIds))
-    val ml = priorManifestRecords(spark, location, st) :+
-      mlRecord(mPath.toString, mLen, 1, seq, snapId, delAdds.size, mRows)
-    val mlPath = writeManifestList(f, location, snapId, ml)
-    commitExisting(f, location, st, snapshotJson(snapId, now, seq, mlPath, "delete", st.snapshotId),
-      snapId, seq, now)
-    // the equality-delete fold: pinned at metadataVersion+1 by the
-    // create-exclusive metadata write, like the position-delete hook.
-    // The delete keys re-read from the just-staged delete files (tiny,
-    // deterministic); the touched files and removed rows are derived in
-    // ColumnStats.foldEqualityDelete from the base/commit snapshots'
-    // position bitmaps. Gated on a stamp existing, so stampless
-    // Flink-upsert tables pay nothing.
-    if (IcebergLog.propertiesOf(st.meta).contains(ColumnStats.FingerprintProp))
-      try {
-        val keyDf = spark.read.parquet(
-          staged.map(a => IcebergLog.resolve(location, a.path).toString): _*)
-        ColumnStats.foldEqualityDelete(TxTable.forIceberg(spark, location),
-          st.metadataVersion + 1, st.metadataVersion, keyCols, keyDf)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    staged.map(_.rows).sum
+    val staged = TxLog.stageData(spark, location, keys.select(typed.toIndexedSeq: _*).distinct(),
+      Seq.empty).filter(_.rows > 0)
+    Option.when(staged.nonEmpty)(TxTable.DeleteFiles(staged, keyCols.map(topIds)))
   }
 }

@@ -1,5 +1,7 @@
 package graft.tables
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +52,7 @@ final class TxMerge(
     * atomic commit, so an incremental consumer (e.g. materialized-view
     * refresh) can test `latestTxnVersion(appId)` after a crash and know
     * whether this exact batch applied. Not supported on deletion-vector
-    * merge-on-read tables (their commit path is separate).
+    * merge-on-read tables.
     */
   def withTransaction(appId: String, version: Long): TxMerge =
     { txnOpt = Some(TxLog.SetTxn(appId, version)); this }
@@ -79,18 +81,37 @@ final class TxMerge(
     * runs against just those files' rows, and untouched files survive the
     * commit physically unchanged.
     */
-  def execute(): Unit = executeAttempt(0)
-
-  private def executeAttempt(attempt: Int): Unit = {
-    val spark = table.spark
+  def execute(): Unit = {
     val snap = table.snapshot
-    val targetCols = snap.schema.fieldNames.toSeq
     // merge-on-read mode (foreign Delta + delta.enableDeletionVectors):
     // matched target rows join their files' deletion vectors and ONLY the
     // produced rows (updates' new versions, inserts) are written — KEEP
     // rows never move, so merge cost scales with |changes|, not |touched
-    // files|
+    // files|. The whole merge is replanned against each attempt's
+    // snapshot by the table's commit loop.
     val dvMode = table.log == ForeignDeltaCommitLog && DeltaDvWriter.enabled(snap.properties)
+    if (dvMode && txnOpt.isDefined)
+      throw UnsupportedOperationError(
+        "withTransaction is not supported on deletion-vector merge-on-read " +
+          "tables; disable delta.enableDeletionVectors on the target or drop the watermark")
+    try {
+      if (dvMode) table.commitWithRetryIf("MERGE")(mergeAgainst(_, dvMode = true))
+      else mergeAgainst(snap, dvMode = false)
+    } catch {
+      case NonFatal(e) if cardViolation(e) => throw UnsupportedOperationError(cardCheckMsg)
+    }
+  }
+
+  private val cardCheckMsg = "MERGE: a target row matched multiple source rows"
+
+  /** The merge planned against `snap`. In merge-on-read mode returns the
+    * commit to publish (None: no row changes). In copy-on-write mode
+    * commits the rewrite itself through TxTable.commitRewrite, which
+    * checks concurrent commits against `snap`, and returns None.
+    */
+  private def mergeAgainst(snap: TxLog.Snapshot, dvMode: Boolean): Option[TxTable.Planned] = {
+    val spark = table.spark
+    val targetCols = snap.schema.fieldNames.toSeq
 
     val tMark = "__graft_t_exists"
     val sMark = "__graft_s_exists"
@@ -99,7 +120,7 @@ final class TxMerge(
     // probe: which target files contain matched rows?
     val touchedRelPaths: Option[Seq[String]] =
       if (bySource.isEmpty && snap.files.nonEmpty) {
-        val probe = table.toDF
+        val probe = table.toDF(snap)
           .withColumn("__graft_file", input_file_name())
           .alias(targetAlias)
           .join(source.alias(sourceAlias), expr(condition), "inner")
@@ -169,7 +190,6 @@ final class TxMerge(
     // job that writes the result. Insert rows (null target id) get unique
     // negative window keys so they don't pile into one window partition.
     val needCardCheck = matched.nonEmpty || bySource.nonEmpty
-    val cardCheckMsg = "MERGE: a target row matched multiple source rows"
     val joined =
       if (!needCardCheck) joined0
       else {
@@ -304,10 +324,6 @@ final class TxMerge(
     }
 
     if (dvMode) {
-      if (txnOpt.isDefined)
-        throw UnsupportedOperationError(
-          "withTransaction is not supported on deletion-vector merge-on-read " +
-            "tables; disable delta.enableDeletionVectors on the target or drop the watermark")
       // two actions read the joined set (bitmap collect + append stage) —
       // persist so the join/cardinality pass runs once
       val cached = withAction.persist()
@@ -317,12 +333,7 @@ final class TxMerge(
         val dvMarks = cached
           .filter(col(tMark).isNotNull && !col("__graft_action").isin("KEEP", "DROP"))
           .select(col(DeltaLog.FileMetaCol), col(DeltaLog.RowMetaCol))
-        val planned =
-          try DeltaDvWriter.planDvMarks(spark, table.location, touchedAddFiles, dvMarks)
-          catch {
-            case e: Throwable if cardViolation(e) =>
-              throw UnsupportedOperationError(cardCheckMsg)
-          }
+        val planned = DeltaDvWriter.planDvMarks(spark, table.location, touchedAddFiles, dvMarks)
         val produced = allUpdateTags ++ allInsertTags
         // every produced row is (re)written by THIS commit: updates keep
         // their materialized id, inserts go fresh; commit version fresh
@@ -348,42 +359,23 @@ final class TxMerge(
           if (!cdfOn) Seq.empty
           else DeltaCdf.stageCdc(spark, table.location, cdcRowsOf(cached), snap)
         val (dvRemoves, dvAdds) = planned.getOrElse((Seq.empty, Seq.empty))
-        if (dvRemoves.nonEmpty || newAdds.nonEmpty) {
-          val ok = DeltaDvWriter.commitDv(spark, table.location, snap,
-            "MERGE", condition, dvRemoves, dvAdds ++ newAdds, cdcAdds,
-            newProps = if (dvProps == snap.properties) None else Some(dvProps))
-          if (!ok) {
-            // lost the version race: replan everything against the fresh
-            // snapshot (same optimistic shape as the other writers)
-            if (attempt >= 4)
-              throw new java.io.IOException(
-                s"MERGE commit conflict at ${table.location} after ${attempt + 1} attempts")
-            cached.unpersist()
-            executeAttempt(attempt + 1)
-          }
-        }
-      } catch {
-        case e: Throwable if cardViolation(e) =>
-          throw UnsupportedOperationError(cardCheckMsg)
+        Option.when(dvRemoves.nonEmpty || newAdds.nonEmpty)(TxTable.Planned(
+          dvAdds ++ newAdds, dvRemoves, snap.schema, snap.partitionColumns, dvProps, cdcAdds))
       } finally cached.unpersist()
-      return
+    } else {
+      // with CDF on, the joined set feeds two jobs (rewrite + cdc) —
+      // persist so the join/cardinality pass runs once
+      val actioned = if (cdfOn) withAction.persist() else withAction
+      val result = actioned
+        .filter(!col("__graft_action").isin(deletes: _*))
+        .select(targetCols.map(valueFor).toIndexedSeq ++ rtCols(rtTracked): _*)
+      // commit: only the touched files are replaced; the rest of the table
+      // is untouched (physically and in the manifest)
+      try table.commitRewrite(result, removedPaths, snap.version,
+        if (cdfOn) Some(cdcRowsOf(actioned)) else None, txn = txnOpt)
+      finally if (cdfOn) actioned.unpersist()
+      None
     }
-
-    // with CDF on, the joined set feeds two jobs (rewrite + cdc) — persist
-    // so the join/cardinality pass runs once
-    val actioned = if (cdfOn) withAction.persist() else withAction
-    val result = actioned
-      .filter(!col("__graft_action").isin(deletes: _*))
-      .select(targetCols.map(valueFor).toIndexedSeq ++ rtCols(rtTracked): _*)
-
-    // commit: only the touched files are replaced; the rest of the table
-    // is untouched (physically and in the manifest)
-    try table.commitRewrite(result, removedPaths, snap.version,
-      if (cdfOn) Some(cdcRowsOf(actioned)) else None, txn = txnOpt)
-    catch {
-      case e: Throwable if cardViolation(e) =>
-        throw UnsupportedOperationError(cardCheckMsg)
-    } finally if (cdfOn) actioned.unpersist()
   }
 
   /** The fused cardinality guard surfaces as a raise_error failure inside

@@ -822,63 +822,102 @@ final class TxTable(val spark: SparkSession, val location: String,
     * provably outside the predicate survive untouched. On a foreign Delta
     * table with `delta.enableDeletionVectors=true`, deletes are
     * merge-on-read instead: a deletion-vector bitmap per touched file
-    * (DeltaDvWriter), never a file rewrite.
+    * (DeltaDvWriter), never a file rewrite. On Iceberg see deleteIceberg.
     */
   def delete(predicate: String): Unit =
     if (log == ForeignDeltaCommitLog && DeltaDvWriter.enabled(snapshot.properties))
-      DeltaDvWriter.delete(spark, location, predicate)
-    else if (log == IcebergCommitLog) {
-      // the whole-file fast path first (a partition-only predicate that
-      // decides EVERY file removes the matching ones metadata-only and
-      // folds a fresh stats stamp); anything undecidable falls to
-      // Iceberg v2's native merge-on-read position-delete snapshot
-      if (!deleteIcebergWholeFiles(predicate))
-        IcebergWriter.delete(spark, location, predicate)
-    } else deleteCopyOnWrite(predicate)
+      markDeleted(predicate, None)
+    else if (log == IcebergCommitLog) deleteIceberg(predicate)
+    else deleteCopyOnWrite(predicate)
 
-  /** Iceberg DELETE whole-file fast path: when a partition-only
-    * predicate decides EVERY live file from its partition tuple alone
-    * (TRUE = all rows match, FALSE/NULL = none do — the predicate is
-    * constant per file), the matching files are REMOVED in one pinned
-    * metadata commit: no data read, no position-delete file written,
-    * and a fresh column-stats stamp FOLDS through (the commit version
-    * is pinned at base+1 by the optimistic tryCommit, so the fold can
-    * never mislabel a concurrent commit's state — exactly the guarantee
-    * the MoR writer can't give). Returns true when the delete was fully
-    * handled here (including the nothing-matches no-op); false = fall
-    * back to the position-delete path.
+  /** Merge-on-read DELETE (`set` None) or UPDATE on a foreign Delta table:
+    * DeltaDvWriter plans the deletion vectors (and the updated rows)
+    * against each attempt's snapshot. Stats that were fresh going in fold
+    * exactly like the copy-on-write paths: the marked rows are
+    * `candidates ⋂ predicate` over the pre-commit snapshot, and a MoR
+    * UPDATE is row-preserving (DV-marked rows come back 1:1 in the
+    * appended files), so only the assigned columns' stats unset.
     */
-  private def deleteIcebergWholeFiles(predicate: String): Boolean = {
+  private def markDeleted(predicate: String, set: Option[Map[String, String]]): Unit = {
     var statsFold: Option[(Long, Seq[String])] = None
-    var outcome = false
-    commitWithRetryIf("DELETE",
-      postCommit = v => statsFold.foreach { case (baseV, removed) =>
-        ColumnStats.foldDelete(this, v, baseV, removed, predicate) }) { snap =>
-      statsFold = None
-      outcome = false
-      if (snap.files.isEmpty) { outcome = true; None } // nothing to delete
-      else {
-        val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
-        FileStats.partitionTrueEvaluator(spark, parsed, snap) match {
-          case None => None
-          case Some(ev) =>
-            val decided = snap.files.map(f => f -> ev(f))
-            if (decided.exists(_._2.isEmpty)) None // a file undecided: MoR path
-            else {
-              val dropped = decided.collect { case (f, Some(true)) => f }
-              if (dropped.isEmpty) { outcome = true; None } // no row matches
-              else {
-                outcome = true
-                if (ColumnStats.isFresh(snap))
-                  statsFold = Some((snap.version, dropped.map(_.path)))
-                Some(TxTable.Planned(Seq.empty, dropped.map(_.path), snap.schema,
-                  snap.partitionColumns, snap.properties))
-              }
-            }
+    commitWithRetryIf(if (set.isEmpty) "DELETE" else "UPDATE",
+      postCommit = v => statsFold.foreach { case (baseV, candidates) =>
+        set match {
+          case None => ColumnStats.foldDelete(this, v, baseV, candidates, predicate)
+          case Some(s) => ColumnStats.foldUpdate(this, v, baseV,
+            s.keys.toSeq :+ RowTracking.RowCommitVersionCol)
         }
-      }
+      }) { snap =>
+      val planned = DeltaDvWriter.planMarkDeleted(spark, location, snap, predicate, set)
+      statsFold = planned.filter(_ => ColumnStats.isFresh(snap)).map(p => (snap.version, p._2))
+      planned.map(_._1)
     }
-    outcome
+  }
+
+  /** Iceberg DELETE, planned per attempt. When every live file's
+    * partition tuple decides the predicate (TRUE = all its rows match,
+    * FALSE/NULL = none do), the matching files are removed metadata-only:
+    * no data read, no delete file written. Otherwise the matching live
+    * rows become position-delete files (Iceberg v2 merge-on-read, no data
+    * file rewritten). Either way a fresh stats stamp folds through the
+    * commit. Returns the number of rows deleted.
+    */
+  private[tables] def deleteIceberg(predicate: String): Long = {
+    var deleted = 0L
+    var statsFold: Option[(Long, () => Seq[String])] = None
+    commitWithRetryIf("DELETE",
+      postCommit = v => statsFold.foreach { case (baseV, touched) =>
+        ColumnStats.foldDelete(this, v, baseV, touched(), predicate) }) { snap =>
+      val parsed = spark.sessionState.sqlParser.parseExpression(predicate)
+      val decided = FileStats.partitionTrueEvaluator(spark, parsed, snap)
+        .map(ev => snap.files.map(f => f -> ev(f)))
+        .filter(_.forall(_._2.isDefined))
+      // (the commit, the data files it touches) — None when no row matches
+      val planned: Option[(TxTable.Planned, () => Seq[String])] = decided match {
+        case Some(ds) =>
+          val dropped = ds.collect { case (f, Some(true)) => f }
+          deleted = dropped.map(f =>
+            math.max(0L, f.rows) - f.deletionVector.map(_.cardinality).getOrElse(0L)).sum
+          Option.when(dropped.nonEmpty)(TxTable.Planned(Seq.empty, dropped.map(_.path),
+            snap.schema, snap.partitionColumns, snap.properties) -> (() => dropped.map(_.path)))
+        case None =>
+          val staged =
+            if (snap.files.isEmpty) Seq.empty
+            else IcebergWriter.stagePositionDeletes(spark, location, snap, predicate)
+          deleted = staged.map(_.rows).sum
+          // the touched data files are read back from the delete files
+          // themselves: O(deleted rows) over tiny parquet, no table scan
+          Option.when(staged.nonEmpty)(TxTable.Planned(Seq.empty, Seq.empty, snap.schema,
+            snap.partitionColumns, snap.properties, deletes = Some(TxTable.DeleteFiles(staged))) ->
+            (() => spark.read.parquet(staged.map(a => TxLog.resolve(location, a.path)): _*)
+              .select(col("file_path")).distinct().collect().map(_.getString(0)).toSeq))
+      }
+      statsFold = planned.filter(_ => ColumnStats.isFresh(snap)).map(p => (snap.version, p._2))
+      planned.map(_._1)
+    }
+    deleted
+  }
+
+  /** Iceberg DELETE BY KEY as an equality-delete commit: the distinct key
+    * rows become one delete file that applies to every earlier data file
+    * (IcebergWriter.equalityDelete). A fresh stats stamp folds through
+    * the commit (ColumnStats.foldEqualityDelete). Returns the number of
+    * delete-key rows committed.
+    */
+  private[tables] def equalityDelete(keyCols: Seq[String], keys: DataFrame): Long = {
+    var committed = 0L
+    var statsFold: Option[(Long, Seq[AddFile])] = None
+    commitWithRetryIf("DELETE",
+      postCommit = v => statsFold.foreach { case (baseV, staged) =>
+        ColumnStats.foldEqualityDelete(this, v, baseV, keyCols,
+          spark.read.parquet(staged.map(a => TxLog.resolve(location, a.path)): _*)) }) { snap =>
+      val deletes = IcebergWriter.stageEqualityDeletes(spark, location, snap, keyCols, keys)
+      committed = deletes.map(_.files.map(_.rows).sum).getOrElse(0L)
+      statsFold = deletes.filter(_ => ColumnStats.isFresh(snap)).map(d => (snap.version, d.files))
+      deletes.map(d => TxTable.Planned(Seq.empty, Seq.empty, snap.schema,
+        snap.partitionColumns, snap.properties, deletes = Some(d)))
+    }
+    committed
   }
 
   private def deleteCopyOnWrite(predicate: String): Unit =
@@ -902,7 +941,7 @@ final class TxTable(val spark: SparkSession, val location: String,
     */
   def update(predicate: String, set: Map[String, String]): Unit =
     if (log == ForeignDeltaCommitLog && DeltaDvWriter.enabled(snapshot.properties))
-      DeltaDvWriter.update(spark, location, predicate, set)
+      markDeleted(predicate, Some(set))
     else updateCopyOnWrite(predicate, set)
 
   private def updateCopyOnWrite(predicate: String, set: Map[String, String]): Unit = {
@@ -1569,9 +1608,7 @@ final class TxTable(val spark: SparkSession, val location: String,
     * follow-on commit. Attached to the write path so small files never
     * accumulate between nightly OPTIMIZE runs; cost is O(debris) by
     * construction (optimizeCompact picks only sub-threshold files).
-    * Best-effort: the data commit already succeeded, so a compaction
-    * failure (e.g. losing every optimistic retry to concurrent writers)
-    * is swallowed — the next write or the nightly OPTIMIZE retries.
+    * Best-effort like every post-commit step (see commitWithRetryIf).
     * Guarded against self-triggering (OPTIMIZE/ZORDER are excluded ops).
     */
   private def maybeAutoCompact(op: String, props: Map[String, String]): Unit =
@@ -1584,26 +1621,35 @@ final class TxTable(val spark: SparkSession, val location: String,
       val snap = snapshot
       val worth = snap.files.groupBy(_.partitionValues).valuesIterator
         .exists(fs => fs.count(_.sizeBytes < minBytes) >= minFiles)
-      if (worth)
-        try optimizeCompact(minBytes)
-        catch { case scala.util.control.NonFatal(_) => () }
+      if (worth) optimizeCompact(minBytes)
     }
 
   private def commitWithRetry(op: String)(
       plan: Snapshot => TxTable.Planned): Unit =
     commitWithRetryIf(op)(s => Some(plan(s)))
 
-
-  /** Like commitWithRetry, but the planner may return None against a fresh
-    * snapshot to turn the whole operation into a no-op (e.g. an idempotent
-    * append discovering its txn watermark already landed — including via a
-    * CONCURRENT writer that won a version race mid-retry). Returns whether
-    * a commit was published.
+  /** The one commit loop every table write publishes through: plan
+    * against the latest snapshot, `log.tryCommit` at its version + 1, and
+    * replan on a lost version race (up to 8 attempts, jittered backoff).
+    * The planner may return None to turn the whole operation into a no-op
+    * (e.g. an idempotent append discovering its txn watermark already
+    * landed — including via a CONCURRENT writer that won a version race
+    * mid-retry). Returns whether a commit was published.
+    *
+    * Once the commit is published, the post-commit steps (checkpoint,
+    * stats restamp, the caller's `postCommit` stats fold, auto-compact)
+    * are best-effort: each one that fails is skipped and the write still
+    * returns normally — a committed write is never reported as failed.
+    * A stats step that fails before its own property commit leaves the
+    * stamp stale (its fingerprint no longer matches the file set), never
+    * fresh and wrong.
     */
-  private def commitWithRetryIf(op: String,
+  private[tables] def commitWithRetryIf(op: String,
       postCommit: Long => Unit = _ => ())(
       plan: Snapshot => Option[TxTable.Planned]): Boolean = {
     log.checkWritable(spark, location, op)
+    def bestEffort(step: => Unit): Unit =
+      try step catch { case scala.util.control.NonFatal(_) => () }
     var attempts = 0
     while (true) {
       val snap = snapshot
@@ -1612,9 +1658,9 @@ final class TxTable(val spark: SparkSession, val location: String,
         case None => return false
       }
       if (log.tryCommit(spark, location, snap, op, p.added, p.removedPaths, p.schema,
-          p.partitionColumns, p.properties, p.cdc, p.txn)) {
+          p.partitionColumns, p.properties, p.cdc, p.txn, p.deletes)) {
         // periodic checkpoint so snapshot replay stays O(interval)
-        log.maybeCheckpoint(spark, location, snap.version + 1)
+        bestEffort(log.maybeCheckpoint(spark, location, snap.version + 1))
         // OPTIMIZE/ZORDER/REORG preserve the VISIBLE rows exactly (a
         // compaction re-lays bytes; REORG PURGE materializes deletes
         // already subtracted from every stat) — so a column-stats stamp
@@ -1623,7 +1669,7 @@ final class TxTable(val spark: SparkSession, val location: String,
         // maintenance would silently kill stats that one nightly COPY
         // INTO just paid an O(batch) fold to keep.
         if (TxTable.StatsPreservingOps.contains(op) && ColumnStats.isFresh(snap))
-          ColumnStats.restampFingerprint(this, snap.version + 1)
+          bestEffort(ColumnStats.restampFingerprint(this, snap.version + 1))
         // the caller's post-commit step (the append paths' stats FOLD)
         // must land BEFORE auto-compaction: the fold re-freshens the
         // stamp, so the compaction's own OPTIMIZE restamp can then carry
@@ -1631,8 +1677,8 @@ final class TxTable(val spark: SparkSession, val location: String,
         // and the fold would stamp a fingerprint the compaction already
         // outdated (an analyzed auto-compacting table losing its stats
         // on every append)
-        postCommit(snap.version + 1)
-        maybeAutoCompact(op, p.properties)
+        bestEffort(postCommit(snap.version + 1))
+        bestEffort(maybeAutoCompact(op, p.properties))
         return true
       }
       attempts += 1
@@ -1661,7 +1707,7 @@ object TxTable {
 
   /** One planned commit: the file-level outcome a write operation hands to
     * the commit log. `cdc` carries staged change-data files (foreign Delta
-    * CDF only; ignored by the native log).
+    * CDF only); `deletes` carries staged delete files (Iceberg only).
     */
   private[tables] final case class Planned(
       added: Seq[AddFile],
@@ -1670,7 +1716,14 @@ object TxTable {
       partitionColumns: Seq[String],
       properties: Map[String, String],
       cdc: Seq[AddFile] = Seq.empty,
-      txn: Option[TxLog.SetTxn] = None)
+      txn: Option[TxLog.SetTxn] = None,
+      deletes: Option[DeleteFiles] = None)
+
+  /** Iceberg delete files one commit adds: position deletes (rows of
+    * `file_path`, `pos`) when `equalityIds` is empty, else equality
+    * deletes whose rows are keys over those field ids.
+    */
+  private[tables] final case class DeleteFiles(files: Seq[AddFile], equalityIds: Seq[Int] = Nil)
 
   /** Metadata-only table summary (see TxTable.describeStats). */
   final case class TableStats(rowCount: Long, fileCount: Long, sizeBytes: Long)

@@ -354,6 +354,22 @@ class IcebergSpec extends AnyFunSuite {
     intercept[Exception] { IcebergWriter.append(spark, loc, df1) }
   }
 
+  test("adoptSchema overwrite refuses to drop or retype a partition source column") {
+    val loc = TestSpark.tmpDir("ice-ow-part") + "/t"
+    IcebergWriter.create(spark, loc, Seq((1L, 1L), (2L, 2L)).toDF("id", "p"), Seq("p"))
+    val version = TxTable.forIceberg(spark, loc).version
+    Seq(Seq((3L, "x")).toDF("id", "p"), Seq(3L).toDF("id")).foreach { df =>
+      intercept[UnsupportedOperationError] {
+        IcebergWriter.overwrite(spark, loc, df, adoptSchema = true)
+      }
+    }
+    assert(TxTable.forIceberg(spark, loc).version == version)
+    // a schema that keeps the source column's type is adopted
+    IcebergWriter.overwrite(spark, loc, Seq((3L, 3L, "x")).toDF("id", "p", "s"), adoptSchema = true)
+    assert(IcebergLog.toDF(spark, loc).collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      .toSeq == Seq((3L, 3L, "x")))
+  }
+
   test("TxTable runs the full write surface over the Iceberg log") {
     val loc = TestSpark.tmpDir("ice-tx") + "/t"
     val t = TxTable.forIceberg(spark, loc)
