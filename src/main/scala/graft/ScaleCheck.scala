@@ -158,8 +158,11 @@ object ScaleCheck {
     }
 
     // the direct Iceberg read under a DENSE mass position delete with the
-    // inline threshold forced low (the anti-join path — cost must track
-    // data volume, residency must not track files × bitmap bytes anywhere)
+    // inline threshold forced low: the snapshot fold spills its bitmaps to
+    // executor-written DV sidecars and the read broadcasts only their
+    // descriptors (the fold memo keys by the inline/spill choice, so the
+    // DELETE's own inline fold never answers this read) — cost must track
+    // data volume, residency must not track files × bitmap bytes anywhere
     r.group("massdel") {
       val loc = tmp("scalecheck-massdel") + "/t"
       val t = TxTable.forIceberg(spark, loc)

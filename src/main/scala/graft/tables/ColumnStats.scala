@@ -1292,7 +1292,7 @@ object ColumnStats {
     * [[foldEqualityDelete]]: the keys ARE a removable-row
     * specification — the removed rows are the base-visible rows of the
     * touched files matching the delete keys null-safely, exactly the
-    * reader's own kill semantics.
+    * snapshot fold's own kill semantics (equalityVictimPositions).
     */
   private[tables] def foldDelete(table: TxTable, commitVersion: Long,
       baseVersion: Long, removedPaths: Seq[String], predicate: String): Unit =
@@ -1435,7 +1435,7 @@ object ColumnStats {
         case Right((keyCols, keys)) =>
           // equality-delete keys: concrete values, deterministic by
           // construction — no time-dependence hazard. NULL-SAFE match,
-          // mirroring the reader's kill join exactly.
+          // mirroring the snapshot fold's victim join exactly.
           val tagged = keyCols.foldLeft(keys.select(
               keyCols.map(c => col(s"`$c`")): _*).distinct())(
             (acc, c) => acc.withColumnRenamed(c, s"__fold_eq_$c"))

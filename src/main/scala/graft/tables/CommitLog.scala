@@ -76,8 +76,44 @@ private[graft] sealed trait CommitLog {
   def appendOnlyBetween(spark: SparkSession, location: String, fromExclusive: Long,
       toInclusive: Option[Long]): Boolean
 
-  /** Plan a distributed read over a snapshot's active files. */
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame
+  /** The snapshot's live rows — the one read of all three logs. Files
+    * without a deletion vector read as they are; files with one read
+    * with their row positions and drop the deleted rows through ONE
+    * broadcast of the snapshot's DV descriptors (DvIsRowLive: codegen'd,
+    * no join, pushdown intact). The descriptors are the only deletes a
+    * read applies: Iceberg position and equality deletes reach it folded
+    * into them (IcebergCommitLog.snapshotOf). The broadcast carries
+    * descriptors, not bitmap bytes, so driver and broadcast stay
+    * O(files); each executor materializes only the bitmaps of files its
+    * tasks scan (see DvDescriptorLookup). `withMeta` keeps each row's
+    * data-file path and position (DeltaLog.FileMetaCol / RowMetaCol) —
+    * the input of the DV, position-delete and MERGE planners.
+    */
+  final def liveRows(spark: SparkSession, location: String, s: Snapshot,
+      withMeta: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
+    import org.apache.spark.sql.functions.col
+    val read = reader(spark, location, s)
+    val (dvFiles, plain) = s.files.partition(_.deletionVector.exists(_.cardinality > 0))
+    if (dvFiles.isEmpty) return read(s.files, withMeta)
+    val conf = spark.sessionState.newHadoopConf()
+    val byPath = dvFiles.map(a =>
+      DeletionVectors.normalizedAbs(conf, location, a.path) -> a.deletionVector.get).toMap
+    val bc = spark.sparkContext.broadcast(
+      new DvDescriptorLookup(location, byPath, new SerializableHadoopConf(conf)))
+    val marked = read(dvFiles, true)
+      .filter(toCol(DvIsRowLive(
+        toExpr(col(DeltaLog.FileMetaCol)), toExpr(col(DeltaLog.RowMetaCol)), bc)))
+    val live = if (withMeta) marked else marked.drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+    if (plain.isEmpty) live else read(plain, withMeta).unionAll(live)
+  }
+
+  /** The log's physical relation under `liveRows`: (files of `s`,
+    * withMeta) → those files at `s.schema`, deletion vectors NOT
+    * applied, plus DeltaLog.FileMetaCol / RowMetaCol when withMeta.
+    */
+  protected def reader(spark: SparkSession, location: String,
+      s: Snapshot): (Seq[AddFile], Boolean) => DataFrame
 
   /** Stage `df`'s parquet files for a commit against `snap` (logical
     * column names in, log-convention files out — the foreign Delta impl
@@ -162,8 +198,10 @@ private[graft] object NativeCommitLog extends CommitLog {
         c.operation == "REORG" || c.operation == "RENAME COLUMN" ||
         c.operation == "DROP COLUMN")
 
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame =
-    LogFileIndex.readSnapshot(spark, location, s, s.files)
+  protected def reader(spark: SparkSession, location: String,
+      s: Snapshot): (Seq[AddFile], Boolean) => DataFrame =
+    (files, withMeta) =>
+      LogFileIndex.readSnapshot(spark, location, s, files, DeltaLog.rowMeta(withMeta))
 
   def stage(spark: SparkSession, location: String, df: DataFrame, snap: Snapshot): Seq[AddFile] =
     TxLog.stageData(spark, location,
@@ -322,8 +360,9 @@ private[graft] object ForeignDeltaCommitLog extends CommitLog {
       toInclusive: Option[Long]): Boolean =
     DeltaLog.appendOnlyBetween(spark, location, fromExclusive, toInclusive)
 
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame =
-    DeltaLog.dfForSnapshot(spark, location, s)
+  protected def reader(spark: SparkSession, location: String,
+      s: Snapshot): (Seq[AddFile], Boolean) => DataFrame =
+    (files, withMeta) => DeltaLog.rawRead(spark, location, s.copy(files = files), withMeta)
 
   def stage(spark: SparkSession, location: String, df: DataFrame, snap: Snapshot): Seq[AddFile] =
     // constraints and generated columns check LOGICAL column names, before
@@ -358,11 +397,10 @@ private[graft] object ForeignDeltaCommitLog extends CommitLog {
   * (two racers at v+1: one wins, one replans), exactly like the Delta
   * JSON commit.
   *
-  * Live position deletes surface as INLINE deletion-vector descriptors on
-  * the snapshot's AddFiles (bounded by deleted-row count, the DV
-  * argument), so every generic read/rewrite path sees only live rows; the
-  * delete FILES themselves are carried forward by path in each commit's
-  * manifest list.
+  * Live position and equality deletes surface as deletion-vector
+  * descriptors on the snapshot's AddFiles (snapshotOf), so `liveRows` and
+  * every rewrite see only live rows; the delete FILES themselves are
+  * carried forward by path in each commit's manifest list.
   */
 private[graft] object IcebergCommitLog extends CommitLog {
   private implicit val formats: Formats = DefaultFormats
@@ -373,8 +411,15 @@ private[graft] object IcebergCommitLog extends CommitLog {
     */
   private[tables] val TxnPropPrefix = "graft.txn."
 
-  def snapshot(spark: SparkSession, location: String, asOfVersion: Option[Long]): Snapshot = {
-    val st = IcebergLog.stateAt(spark, location, asOfVersion)
+  def snapshot(spark: SparkSession, location: String, asOfVersion: Option[Long]): Snapshot =
+    snapshotOf(spark, location, IcebergLog.stateAt(spark, location, asOfVersion))
+
+  /** `st` as a log snapshot: its delete files folded into the data
+    * files' DV descriptors (attachDeletes), so `liveRows` over it is the
+    * state's live rows. Every Iceberg read goes through this fold.
+    */
+  private[tables] def snapshotOf(spark: SparkSession, location: String,
+      st: IcebergLog.IceState): Snapshot = {
     val allProps = IcebergLog.propertiesOf(st.meta)
     val (txnProps, userProps) = allProps.partition(_._1.startsWith(TxnPropPrefix))
     Snapshot(st.metadataVersion, st.schema, st.partitionColumns,
@@ -384,18 +429,12 @@ private[graft] object IcebergCommitLog extends CommitLog {
       })
   }
 
-  /** Fold the snapshot's position-delete files into per-data-file DV
-    * descriptors — inline ("i", Z85 in the descriptor, no extra file)
-    * below [[InlineFoldMaxDeleteBytes]], deletion-vector sidecar files
-    * written by the EXECUTORS ("u", Delta's own large-DV design) above
-    * it — so rewrites and reads treat deleted rows uniformly.
-    */
   /** Bounded memo of folded delete descriptors (snapshots are immutable,
-    * so a (location, version, snapshot, file-set fingerprint) key can
-    * never go stale); cleared wholesale past the cap.
+    * so a (location, version, snapshot, file-set fingerprint, spilled)
+    * key can never go stale); cleared wholesale past the cap.
     */
   private val deleteFoldCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Int),
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Int, Boolean),
       Map[String, DeletionVectors.Descriptor]]()
   private val DeleteFoldCacheMax = 64
 
@@ -416,6 +455,13 @@ private[graft] object IcebergCommitLog extends CommitLog {
     "graft.iceberg.deleteFold.inlineMaxBytes"
   private[graft] val InlineFoldMaxDeleteBytes: Long = 16L << 20
 
+  /** Fold the state's position- and equality-delete files into
+    * per-data-file DV descriptors — inline ("i", Z85 in the descriptor,
+    * no extra file) up to [[InlineFoldMaxDeleteBytes]] of delete files,
+    * deletion-vector sidecar files written by the EXECUTORS ("u",
+    * Delta's own large-DV design) above it — so rewrites and reads
+    * treat deleted rows uniformly.
+    */
   private def attachDeletes(spark: SparkSession, location: String,
       st: IcebergLog.IceState): Seq[AddFile] = {
     if (st.deletes.isEmpty) return st.files
@@ -432,10 +478,15 @@ private[graft] object IcebergCommitLog extends CommitLog {
     // memoized per (location, snapshot, file-set fingerprint): snapshots
     // are immutable per the spec, so repeated snapshot() calls (version
     // → read → merge in one flow) pay the victim scan once; REORG or
-    // compaction retires it entirely.
+    // compaction retires it entirely. The inline/spill choice is part of
+    // the key: a fold memoized inline never answers a read that must
+    // spill, and the reverse.
+    val inlineMax = spark.conf.getOption(InlineFoldMaxDeleteBytesConf)
+      .map(_.toLong).getOrElse(InlineFoldMaxDeleteBytes)
+    val spill = st.deletes.map(_.bytes).sum > inlineMax
     val cacheKey = (location, st.metadataVersion, st.snapshotId.getOrElse(-1L),
       scala.util.hashing.MurmurHash3.orderedHash(
-        st.files.map(_.path) ++ st.deletes.map(_.path)))
+        st.files.map(_.path) ++ st.deletes.map(_.path)), spill)
     val byFile: Map[String, DeletionVectors.Descriptor] = {
       val hit = deleteFoldCache.get(cacheKey)
       if (hit != null) hit
@@ -462,10 +513,8 @@ private[graft] object IcebergCommitLog extends CommitLog {
               it.foreach { case (_, pos) => bm.add(pos) }
               (p, bm.serialize)
             }
-        val inlineMax = spark.conf.getOption(InlineFoldMaxDeleteBytesConf)
-          .map(_.toLong).getOrElse(InlineFoldMaxDeleteBytes)
         val computed: Map[String, DeletionVectors.Descriptor] =
-          if (st.deletes.map(_.bytes).sum <= inlineMax)
+          if (!spill)
             grouped.collect().toMap.map { case (p, data) =>
               p -> DeletionVectors.Descriptor(
                 storageType = "i",
@@ -716,59 +765,40 @@ private[graft] object IcebergCommitLog extends CommitLog {
     }
   }
 
-  def dfForSnapshot(spark: SparkSession, location: String, s: Snapshot): DataFrame =
-    liveRows(spark, location, s, withMeta = false)
-
-  /** The snapshot's live rows; `withMeta` keeps each row's data-file path
-    * and position (DeltaLog.FileMetaCol / RowMetaCol) on a non-empty
-    * snapshot — the position-delete planner's input.
+  /** Iceberg data files carry full rows, read against the snapshot's
+    * metadata document (read once per snapshot read); no files read as
+    * an empty frame of the same columns (readData needs a file).
     */
-  private[tables] def liveRows(spark: SparkSession, location: String, s: Snapshot,
-      withMeta: Boolean): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (dvFiles, plain) = s.files.partition(_.deletionVector.exists(_.cardinality > 0))
-    if (s.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    // iceberg AddFile paths are absolute (manifests record full paths)
-    val metaJson = IcebergLog.metaAt(spark, location, s.version)
-    def read(files: Seq[AddFile], withMeta: Boolean): DataFrame = {
-      val metaSel =
-        if (withMeta) Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
-          col("_metadata.row_index").as(DeltaLog.RowMetaCol))
-        else Seq.empty
-      IcebergLog.readData(spark, metaJson, s, files, metaSel)
-    }
-    if (dvFiles.isEmpty) return read(s.files, withMeta)
-    // broadcast DESCRIPTORS, not bitmap bytes: driver and broadcast stay
-    // O(files); each executor lazily materializes only the bitmaps of
-    // files its tasks scan (inline ones decode in place, sidecar ones
-    // read their .bin range from storage) — a mass-deleted table's read
-    // no longer parks O(files × bitmap bytes) everywhere
-    val m = dvFiles.map { a =>
-      DeletionVectors.normalizedUri(a.path) -> a.deletionVector.get
-    }.toMap
-    val bc = spark.sparkContext.broadcast(new DvDescriptorLookup(location, m,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf())): DvProbe)
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    val marked = read(dvFiles, withMeta = true)
-      .filter(toCol(DvIsRowLive(
-        toExpr(col(DeltaLog.FileMetaCol)), toExpr(col(DeltaLog.RowMetaCol)), bc)))
-    val live = if (withMeta) marked else marked.drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-    if (plain.isEmpty) live else read(plain, withMeta).unionAll(live)
+  protected def reader(spark: SparkSession, location: String,
+      s: Snapshot): (Seq[AddFile], Boolean) => DataFrame = {
+    lazy val meta = IcebergLog.metaAt(spark, location, s.version)
+    (files, withMeta) =>
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(s.schema.fields.toSeq ++ (if (withMeta) DeltaLog.RowMetaFields else Nil)))
+      else IcebergLog.readData(spark, meta, s, files, DeltaLog.rowMeta(withMeta))
   }
 
   def stage(spark: SparkSession, location: String, df: DataFrame, snap: Snapshot): Seq[AddFile] = {
     // stage by the table's FULL default spec (transforms included), so
     // TxTable-routed appends cluster by hidden partitions too; source
     // types resolve through the possibly-evolved snapshot schema
-    val st = IcebergLog.stateAt(spark, location, None)
-    val specFields = IcebergWriter.resolvedSpecFields(st)
+    val meta = IcebergLog.metaAt(spark, location, snap.version)
+    val specFields = IcebergWriter.resolvedSpecFields(meta)
       .map(sf => snap.schema.fields.find(_.name == sf.source)
         .map(f => sf.copy(sourceType = f.dataType)).getOrElse(sf))
+    // field ids of the schema this commit publishes: an evolved schema
+    // gets the ids tryCommit assigns (evolvedSchemaFields over the same
+    // base metadata), so a column the commit adds has its id in the
+    // files the commit writes
+    val schemaJson =
+      if (snap.schema.json == IcebergLog.currentSchema(meta).json)
+        IcebergLog.currentSchemaJson(meta)
+      else IcebergWriter.evolvedSchemaFields(meta, snap.schema)._1("schemas").children.last
     IcebergWriter.stage(spark, location,
       Constraints.enforce(GeneratedColumns.validate(df, snap.schema),
         snap.properties, snap.schema), specFields,
-      IcebergLog.currentSchemaJson(st.meta), IcebergLog.sortOrderFields(st.meta),
+      schemaJson, IcebergLog.sortOrderFields(meta),
       TxLog.writerOptions(snap.properties))
   }
 

@@ -337,10 +337,11 @@ object DeletionVectors {
     rest
   }
 
-  def normalizedAbs(spark: SparkSession, tableLocation: String, relPath: String): String = {
+  /** The same key for a log path, resolved against the table. */
+  def normalizedAbs(conf: org.apache.hadoop.conf.Configuration, tableLocation: String,
+      relPath: String): String = {
     val p = new Path(tableLocation, relPath)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    f.makeQualified(p).toUri.getPath
+    p.getFileSystem(conf).makeQualified(p).toUri.getPath
   }
 }
 
@@ -361,29 +362,8 @@ private[tables] final class SerializableHadoopConf(
   }
 }
 
-/** Probe interface of the DV filter's broadcast payload — either the
-  * bitmaps themselves (small folds) or descriptors the executors
-  * materialize lazily (large folds).
-  */
-sealed trait DvProbe extends Serializable {
-  def deleted(filePathUri: String, rowIndex: Long): Boolean
-}
-
-/** Broadcast payload of the DV filter: serialized bitmaps keyed by
-  * normalized absolute file path, parsed lazily once per executor JVM.
-  */
-final class DvLookup(serialized: Map[String, Array[Byte]]) extends DvProbe {
-  @transient private lazy val parsed: Map[String, DeletionVectors.Bitmap64] =
-    serialized.map { case (k, v) => k -> DeletionVectors.Bitmap64.deserialize(v) }
-
-  def deleted(filePathUri: String, rowIndex: Long): Boolean =
-    parsed.get(DeletionVectors.normalizedUri(filePathUri)) match {
-      case Some(bm) => bm.contains(rowIndex)
-      case None => false
-    }
-}
-
-/** Descriptor-keyed DV probe: the broadcast carries O(files) descriptor
+/** Broadcast payload of the DV filter (DvIsRowLive), keyed by the
+  * normalized absolute file path: the broadcast carries O(files) descriptor
   * TUPLES (~100 bytes each), never bitmap bytes — each executor
   * materializes only the bitmaps of files its own tasks actually scan,
   * decoding inline ("i") descriptors in place and reading sidecar
@@ -394,8 +374,8 @@ final class DvLookup(serialized: Map[String, Array[Byte]]) extends DvProbe {
   * residency tracks its own task assignment.
   */
 final class DvDescriptorLookup(tableLocation: String,
-    descriptors: Map[String, DeletionVectors.Descriptor],
-    conf: SerializableHadoopConf) extends DvProbe {
+    private[tables] val descriptors: Map[String, DeletionVectors.Descriptor],
+    conf: SerializableHadoopConf) extends Serializable {
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DeletionVectors.Bitmap64]()
 
@@ -443,7 +423,8 @@ case class NormalizedPath(child: Expression)
   * filter applied over `_metadata.file_path` / `_metadata.row_index`.
   * Codegen'd so DV'd scans stay inside whole-stage codegen.
   */
-case class DvIsRowLive(left: Expression, right: Expression, lookup: Broadcast[DvProbe])
+case class DvIsRowLive(left: Expression, right: Expression,
+    lookup: Broadcast[DvDescriptorLookup])
     extends BinaryExpression with Predicate {
 
   override def nullable: Boolean = false
@@ -454,7 +435,7 @@ case class DvIsRowLive(left: Expression, right: Expression, lookup: Broadcast[Dv
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("dvLookup", lookup, classOf[Broadcast[_]].getName)
     nullSafeCodeGen(ctx, ev, (p, i) =>
-      s"${ev.value} = !((graft.tables.DvProbe) $ref.value()).deleted($p.toString(), $i);")
+      s"${ev.value} = !((graft.tables.DvDescriptorLookup) $ref.value()).deleted($p.toString(), $i);")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DvIsRowLive =

@@ -199,7 +199,7 @@ private[graft] object DeltaCdf {
     val commitTags = Seq(LogFileIndex.CommitVersionTag, LogFileIndex.CommitTimestampTag)
     def read(s: TxLog.Snapshot, tags: Seq[StructField],
         entries: Seq[(TxLog.AddFile, Seq[String])]): Seq[DataFrame] =
-      LogFileIndex.tagged(s, tags, entries).map(DeltaLog.dfForSnapshot(spark, location, _))
+      LogFileIndex.tagged(s, tags, entries).map(ForeignDeltaCommitLog.liveRows(spark, location, _))
     val cdcEntries = cdc.result()
     val derivedEntries = derived.result()
     val cdcReads =

@@ -612,7 +612,7 @@ object DeltaLog {
     // keyed by PHYSICAL names (PROTOCOL.md "Column Mapping") — remap them
     // to logical names so pruning and partition handling work in the same
     // logical terms as unmapped tables. The schema keeps its mapping
-    // metadata; dfForSnapshot uses it to read the physical columns.
+    // metadata; rawRead uses it to read the physical columns.
     val files = state.active.values.toSeq.map(logicalKeys(columnMappingOf(schema).map(_.swap)))
 
     TxLog.Snapshot(
@@ -640,7 +640,7 @@ object DeltaLog {
 
   /** Current (or time-traveled) contents of a real Delta table. */
   def toDF(spark: SparkSession, location: String, asOfVersion: Option[Long] = None): DataFrame =
-    dfForSnapshot(spark, location, snapshot(spark, location, asOfVersion))
+    ForeignDeltaCommitLog.liveRows(spark, location, snapshot(spark, location, asOfVersion))
 
   /** Row-tracking read: the table plus `_row_id` and
     * `_row_commit_version` (PROTOCOL.md "Row Tracking"): the MATERIALIZED
@@ -675,9 +675,11 @@ object DeltaLog {
       Seq(org.apache.spark.sql.types.StructField(rid, org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField(rcv, org.apache.spark.sql.types.LongType))
     })
-    val df = readWithRowMeta(spark, location, s.copy(schema = schemaPlus))
+    val df = ForeignDeltaCommitLog.liveRows(spark, location, s.copy(schema = schemaPlus),
+      withMeta = true)
+    val conf = spark.sessionState.newHadoopConf()
     val base = s.files.map { a =>
-      (DeletionVectors.normalizedAbs(spark, location, a.path),
+      (DeletionVectors.normalizedAbs(conf, location, a.path),
         a.baseRowId.getOrElse(
           throw UnsupportedOperationError(
             s"file ${a.path} has no baseRowId; the table's history predates row tracking")),
@@ -872,55 +874,26 @@ object DeltaLog {
   private[tables] val FileMetaCol = "__gr_dv_file"
   private[tables] val RowMetaCol = "__gr_dv_row"
 
-  /** Current (or time-traveled) contents of the snapshot, deletion
-    * vectors applied: files without a DV read exactly as before; files
-    * with one read with row positions and drop the deleted rows through a
-    * broadcast bitmap filter (merge-on-read — no join, no shuffle).
+  /** The provenance columns as a read's `_metadata` selection (empty
+    * unless `withMeta`), and their schema.
     */
-  def dfForSnapshot(spark: SparkSession, location: String, s: TxLog.Snapshot): DataFrame = {
-    val (dvFiles, plain) = s.files.partition(_.deletionVector.exists(_.cardinality > 0))
-    if (dvFiles.isEmpty) return rawRead(spark, location, s, withMeta = false)
-    val dvPart = applyDvFilter(spark, location,
-        rawRead(spark, location, s.copy(files = dvFiles), withMeta = true), dvFiles)
-      .drop(FileMetaCol, RowMetaCol)
-    if (plain.isEmpty) dvPart
-    else rawRead(spark, location, s.copy(files = plain), withMeta = false).unionAll(dvPart)
-  }
+  private[tables] def rowMeta(withMeta: Boolean): Seq[org.apache.spark.sql.Column] =
+    if (withMeta) Seq(col("_metadata.file_path").as(FileMetaCol),
+      col("_metadata.row_index").as(RowMetaCol))
+    else Seq.empty
+  private[tables] val RowMetaFields = Seq(
+    org.apache.spark.sql.types.StructField(FileMetaCol, org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField(RowMetaCol, org.apache.spark.sql.types.LongType))
 
-  /** Read WITH the provenance columns (all files), DVs applied — what a
-    * DV-writing DELETE scans to learn which physical positions match.
-    */
-  private[tables] def readWithRowMeta(spark: SparkSession, location: String,
-      s: TxLog.Snapshot): DataFrame =
-    applyDvFilter(spark, location, rawRead(spark, location, s, withMeta = true), s.files)
-
-  private def applyDvFilter(spark: SparkSession, location: String,
-      df: DataFrame, files: Seq[TxLog.AddFile]): DataFrame = {
-    val withDv = files.filter(_.deletionVector.exists(_.cardinality > 0))
-    if (withDv.isEmpty) return df
-    // descriptors only in the broadcast — executors lazy-load each
-    // file's bitmap on first probe (see DvDescriptorLookup)
-    val m = withDv.map { a =>
-      DeletionVectors.normalizedAbs(spark, location, a.path) ->
-        a.deletionVector.get
-    }.toMap
-    val bc = spark.sparkContext.broadcast(new DvDescriptorLookup(location, m,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf())): DvProbe)
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    df.filter(toCol(DvIsRowLive(toExpr(col(FileMetaCol)), toExpr(col(RowMetaCol)), bc)))
-  }
-
-  /** Plan a distributed read over a snapshot's active files: one
+  /** Plan a distributed read over a snapshot's active files, deletion
+    * vectors not applied (CommitLog.liveRows applies them): one
     * LogFileIndex relation, partition values from the log (the layout
     * of the files is irrelevant — absolute SHALLOW CLONE paths and
     * directories that disagree with the log read alike).
     */
-  private def rawRead(spark: SparkSession, location: String, s: TxLog.Snapshot,
+  private[tables] def rawRead(spark: SparkSession, location: String, s: TxLog.Snapshot,
       withMeta: Boolean): DataFrame = {
-    val metaSel =
-      if (withMeta) Seq(col("_metadata.file_path").as(FileMetaCol),
-        col("_metadata.row_index").as(RowMetaCol))
-      else Seq.empty
+    val metaSel = rowMeta(withMeta)
     val mapping = columnMappingOf(s.schema)
     if (mapping.isEmpty) LogFileIndex.readSnapshot(spark, location, s, s.files, metaSel)
     else mappedRead(spark, location, s, mapping, metaSel)
@@ -1807,12 +1780,12 @@ object DeltaDvWriter {
     // per-file metadata the executors need: existing DV descriptor (to OR
     // in earlier deletions) and the physical row count (to detect
     // fully-deleted files) — KBs per file, metadata-sized
+    val hconf = spark.sessionState.newHadoopConf()
     val fileMeta: Map[String, (Option[DeletionVectors.Descriptor], Long)] =
-      candidates.map(a => DeletionVectors.normalizedAbs(spark, location, a.path) ->
+      candidates.map(a => DeletionVectors.normalizedAbs(hconf, location, a.path) ->
         (a.deletionVector, a.rows)).toMap
     val bcMeta = spark.sparkContext.broadcast(fileMeta)
-    val bcConf = spark.sparkContext.broadcast(
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+    val bcConf = spark.sparkContext.broadcast(new SerializableHadoopConf(hconf))
     val tableLoc = location
     // (abs path, storageType|null = fully deleted, pathOrInlineDv,
     //  offset | -1, sizeInBytes, cardinality)
@@ -1845,7 +1818,7 @@ object DeltaDvWriter {
       }.collect()
     if (results.isEmpty) return None
     val byAbs = candidates.map(a =>
-      DeletionVectors.normalizedAbs(spark, location, a.path) -> a).toMap
+      DeletionVectors.normalizedAbs(hconf, location, a.path) -> a).toMap
     val dvAdds = results.toSeq.collect { case (abs, st, pd, off, size, card) if st != null =>
       byAbs(abs).copy(deletionVector = Some(DeletionVectors.Descriptor(
         st, pd, if (off < 0) None else Some(off), size, card)))
@@ -1877,7 +1850,8 @@ object DeltaDvWriter {
     val tracked = set.isDefined && RowTracking.enabled(snap.properties)
     val df =
       if (tracked) DeltaLog.withRowIds(spark, location, snap.copy(files = candidates))
-      else DeltaLog.readWithRowMeta(spark, location, snap.copy(files = candidates))
+      else ForeignDeltaCommitLog.liveRows(spark, location, snap.copy(files = candidates),
+        withMeta = true)
     val matchesWithMeta = df.filter(coalesce(expr(predicate), lit(false)))
     val (removedPaths, dvAdds) = planDvMarks(spark, location, candidates, matchesWithMeta)
       .getOrElse(return None) // nothing matched after row-level filtering

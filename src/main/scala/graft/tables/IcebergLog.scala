@@ -33,24 +33,23 @@ import graft.catalog.UnsupportedOperationError
   *     the manifests feed the SAME FileStats pruner the Delta paths use,
   *     so `scan(predicate)` skips files before Spark sees them;
   *   - v2 POSITION deletes (content=1 manifests → parquet files of
-  *     (file_path, pos)) are applied merge-on-read through the same
-  *     broadcast bitmap filter deletion vectors use (DvIsRowLive) —
-  *     position deletes name explicit data-file paths, so applying every
+  *     (file_path, pos)) and EQUALITY deletes (content=2, read AND
+  *     written) fold into per-data-file deletion-vector descriptors on
+  *     the snapshot (IcebergCommitLog.snapshotOf), which every read
+  *     applies through the one DV filter of CommitLog.liveRows.
+  *     Position deletes name explicit data-file paths, so applying every
   *     live delete file to its named data file matches the spec's
-  *     sequence-number rule for non-reused paths. EQUALITY deletes
-  *     (content=2) are read AND written: key-matched files applied with
-  *     the spec's strictly-smaller-sequence rule (per-file data
-  *     sequence numbers tracked in IceState.dataSeq), so later
-  *     re-inserts of a deleted key survive. The TxTable surface folds
-  *     live equality deletes into the same per-file position bitmaps
-  *     position deletes use — one sequence-scoped victim-locating scan
-  *     per snapshot() (equalityVictimPositions); compaction retires the
+  *     sequence-number rule for non-reused paths; equality deletes are
+  *     located by one key-matched, sequence-scoped scan per snapshot
+  *     (equalityVictimPositions) under the spec's strictly-smaller rule
+  *     (per-file data sequence numbers tracked in IceState.dataSeq), so
+  *     later re-inserts of a deleted key survive; compaction retires the
   *     cost.
   *
   * Scale posture mirrors DeltaLog: snapshot state is file metadata only;
   * the data read is a manifest-planned distributed parquet scan (no
   * directory listing); delete positions are bounded by deleted-row count
-  * (the DV argument), broadcast once.
+  * (the DV argument), and the read broadcasts one descriptor per file.
   */
 object IcebergLog {
 
@@ -869,20 +868,20 @@ object IcebergLog {
     *     (refs, properties, branch stages) → nothing, byte/metadata
     *     rearrangement is not change;
     *   - delete snapshots, position deletes → the NEW (path, pos)
-    *     entries joined back to their data rows — read as of the
-    *     PREVIOUS deletes (a row can only die once), so re-deletes of
+    *     entries joined back to their data rows live at the PREVIOUS
+    *     version (a row can only die once), so re-deletes of
     *     already-dead positions never surface;
     *   - delete snapshots, EQUALITY deletes (the Flink-upsert shape) →
-    *     the dying rows are the previous live state semi-joined on each
-    *     delete file's `equality_ids` columns under the spec's
-    *     strictly-smaller-sequence rule — the same match the reader's
-    *     anti-join applies, flipped;
+    *     the dying rows are the previous version's live rows semi-joined
+    *     on each delete file's `equality_ids` columns under the spec's
+    *     strictly-smaller-sequence rule — the same match the snapshot
+    *     fold locates victims with;
     *   - overwrite snapshots (dynamic partition overwrite, CoW
     *     MERGE/UPDATE/REPLACE WHERE — the labels Spark's own Iceberg
     *     writer uses for the most common batch-maintenance commits) →
     *     the SAME file-diff machinery: data files leaving the live set
-    *     contribute their still-live rows (read under the previous
-    *     deletes) as deletes, entering files contribute inserts, and
+    *     contribute their rows live at the previous version as deletes,
+    *     entering files contribute inserts, and
     *     any same-commit delete files fold in like delete snapshots.
     *     A row a CoW rewrite merely CARRIES (file rewritten, value
     *     unchanged) surfaces as a delete+insert pair at that version —
@@ -899,7 +898,10 @@ object IcebergLog {
     * (LogFileIndex.tagged), so a 1,000-commit feed plans one scan, not
     * 1,000 branches. Only inserts under same-commit delete files and
     * the deletes stay per commit: each needs that version's delete set
-    * and schema era.
+    * and schema era. Those frames read through the one live-rows read
+    * (IcebergCommitLog.liveRows) over the state folded at v (entering
+    * files) or at v-1 (everything else), each fold memoized per
+    * snapshot and run only when a frame needs it.
     */
   def tableChanges(spark: SparkSession, location: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
@@ -930,6 +932,15 @@ object IcebergLog {
         eraById.get(id).filter(df.columns.contains)
           .map(eraName => col(eraName).as(outName))
       }: _*)
+    }
+    // the live rows of `files` in `st`: the state folded into DV
+    // descriptors (memoized per snapshot), so a frame drops exactly the
+    // rows the state's deletes kill — folded only when a frame reads
+    def live(st: IceState, files: Seq[TxLog.AddFile], withMeta: Boolean = false): DataFrame = {
+      val snap = IcebergCommitLog.snapshotOf(spark, location, st)
+      val keep = files.map(_.path).toSet
+      IcebergCommitLog.liveRows(spark, location,
+        snap.copy(files = snap.files.filter(f => keep.contains(f.path))), withMeta)
     }
     val start = math.max(1L, fromVersion)
     // previous-version state, threaded through the loop — v1 is the
@@ -976,27 +987,24 @@ object IcebergLog {
             val newDel = st.deletes.filterNot(d => prevDel.contains(d.path))
             // 1) entering data files → inserts. With same-commit delete
             // files present (MoR engines commit data + deletes together),
-            // apply exactly those to the added files so a row that never
-            // became visible is not reported — position deletes can hit
-            // same-sequence files, equality deletes cannot
-            // (strictly-smaller rule), and dfFor enforces both. Such
-            // files can't join the one read of appended files, so they
-            // emit their own frame (rare shape; our writer never
+            // the added files read as live at v, so a row that never
+            // became visible is not reported: only the new deletes can
+            // reach them (older position deletes cannot name new paths,
+            // older equality deletes cannot kill newer-sequence files).
+            // Such files can't join the one read of appended files, so
+            // they emit their own frame (rare shape; our writer never
             // produces it).
             if (added.nonEmpty) {
               if (newDel.isEmpty) appends ++= added.map(_ ->
                 Seq("insert", v.toString, LogFileIndex.timestampTag(tsMs)))
-              else insertFrames += tag(alignToOut(
-                dfFor(spark, st.copy(files = added, deletes = newDel)),
-                st.meta), "insert", v, tsMs)
+              else insertFrames += tag(alignToOut(live(st, added), st.meta), "insert", v, tsMs)
             }
             // 2) data files leaving the live set → their still-live rows
-            // (read under the PREVIOUS deletes: already-dead positions
-            // died in an earlier version) are deletes
+            // (live at v-1: already-dead positions died in an earlier
+            // version) are deletes
             if (removed.nonEmpty && stPrev.isDefined) {
               val prev = stPrev.get
-              deleteFrames += tag(alignToOut(
-                dfFor(spark, prev.copy(files = removed)), prev.meta),
+              deleteFrames += tag(alignToOut(live(prev, removed), prev.meta),
                 "delete", v, tsMs)
             }
             // 3) new delete files kill rows among the SURVIVING previous
@@ -1007,7 +1015,7 @@ object IcebergLog {
             if (posDel.nonEmpty && stPrev.isDefined && surviving.nonEmpty) {
               val prev = stPrev.get
               // the dying rows: new (path, pos) entries joined to their
-              // data files read under the PREVIOUS deletes only
+              // data files' rows live at v-1
               val entries = spark.read.parquet(posDel.map(_.path): _*)
                 .select(toCol(NormalizedPath(toExpr(col("file_path")))).as("__np"),
                   col("pos").cast("long").as("__pos"))
@@ -1015,8 +1023,7 @@ object IcebergLog {
                 .collect().map(_.getString(0)).toSet
               val dataFiles = surviving.filter(f =>
                 touched.contains(DeletionVectors.normalizedUri(f.path)))
-              val base = dfFor(spark,
-                prev.copy(files = dataFiles), withMeta = true)
+              val base = live(prev, dataFiles, withMeta = true)
                 .withColumn("__np",
                   toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))))
                 .withColumnRenamed(DeltaLog.RowMetaCol, "__pos")
@@ -1025,18 +1032,27 @@ object IcebergLog {
               deleteFrames += tag(alignToOut(base.join(entries, Seq("__np", "__pos"))
                 .drop("__np", "__pos", DeltaLog.FileMetaCol), prev.meta), "delete", v, tsMs)
             }
-            if (eqDel.nonEmpty && stPrev.isDefined && surviving.nonEmpty)
-              deleteFrames += tag(alignToOut(
-                equalityDying(spark, stPrev.get.copy(files = surviving), eqDel),
-                stPrev.get.meta), "delete", v, tsMs)
+            // the rows live at v-1 that a new equality delete kills,
+            // each once however many delete groups it matches
+            if (eqDel.nonEmpty && stPrev.isDefined && surviving.nonEmpty) {
+              val scoped = equalityScope(stPrev.get.copy(files = surviving), eqDel)
+              val dying = equalityKilled(spark, scoped,
+                  live(stPrev.get, scoped.files, withMeta = true), eqDel)
+                .dropDuplicates(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+                .drop("__np", DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
+              deleteFrames += tag(alignToOut(dying, scoped.meta), "delete", v, tsMs)
+            }
         }
         stPrev = Some(st)
       }
     }
-    val inserts = LogFileIndex.tagged(pruneView(outState), Seq(LogFileIndex.ChangeTypeTag,
-        LogFileIndex.CommitVersionTag, LogFileIndex.CommitTimestampTag), appends.result())
-      .map(l => dfFor(spark, outState.copy(schema = l.schema,
-        partitionColumns = l.partitionColumns, files = l.files, deletes = Seq.empty)))
+    // appended files carry no deletes (a same-commit delete put them in
+    // insertFrames), so they read unfolded
+    val inserts = LogFileIndex.tagged(TxLog.Snapshot(to, outState.schema,
+        outState.partitionColumns, outState.files, propertiesOf(outState.meta)),
+        Seq(LogFileIndex.ChangeTypeTag, LogFileIndex.CommitVersionTag,
+          LogFileIndex.CommitTimestampTag), appends.result())
+      .map(IcebergCommitLog.liveRows(spark, location, _))
     (inserts ++ insertFrames ++ deleteFrames).reduce(_ unionByName _)
   }
 
@@ -1048,12 +1064,15 @@ object IcebergLog {
         s"timestamp $tsMs predates the first Iceberg snapshot at $location"))
   }
 
-  /** Current (or time-traveled) contents of an Iceberg table, position
-    * deletes applied merge-on-read.
+  /** Current (or time-traveled) contents of an Iceberg table: the
+    * snapshot's live rows (IcebergCommitLog.liveRows), its position and
+    * equality deletes folded into deletion-vector descriptors — the same
+    * read a SQL SELECT of the catalog table runs.
     */
   def toDF(spark: SparkSession, location: String,
       asOfSnapshotId: Option[Long] = None): DataFrame =
-    dfFor(spark, state(spark, location, asOfSnapshotId))
+    IcebergCommitLog.liveRows(spark, location,
+      IcebergCommitLog.snapshotOf(spark, location, state(spark, location, asOfSnapshotId)))
 
   /** Predicate scan: `toDF.filter(predicate)`; the read's LogFileIndex
     * prunes files on identity partition values, decoded lower/upper
@@ -1087,96 +1106,6 @@ object IcebergLog {
     }
   }
 
-  /** The state as a Snapshot: the pruning context of its reads. */
-  private def pruneView(st: IceState): TxLog.Snapshot =
-    TxLog.Snapshot(0L, st.schema, st.partitionColumns, st.files, propertiesOf(st.meta))
-
-  private[tables] def dfFor(spark: SparkSession, st: IceState,
-      withMeta: Boolean = false): DataFrame = {
-    val metaFields =
-      if (withMeta) Seq(StructField(DeltaLog.FileMetaCol, StringType),
-        StructField(DeltaLog.RowMetaCol, LongType))
-      else Seq.empty
-    if (st.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(st.schema.fields.toSeq ++ metaFields))
-    // Iceberg data files carry FULL rows (identity partition source
-    // columns included — unlike hive layout, file paths are opaque), so
-    // one schema'd scan over the manifest-planned paths suffices.
-    val needMeta = withMeta || st.deletes.nonEmpty
-    val metaSel =
-      if (needMeta) Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
-        col("_metadata.row_index").as(DeltaLog.RowMetaCol))
-      else Seq.empty
-    val base = readData(spark, st.meta, pruneView(st), st.files, metaSel)
-    val live = applyEqualityDeletes(spark,
-      applyPositionDeletes(spark, base, st), st)
-    if (withMeta) live else live.drop(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-  }
-
-  /** Merge-on-read position deletes: the delete parquet files hold
-    * (file_path, pos) rows; per-file bitmaps broadcast into the same
-    * codegen'd DvIsRowLive filter deletion vectors use — no join on the
-    * data path, pushdown intact.
-    *
-    * The bitmaps are BUILT ON EXECUTORS (groupByKey on the normalized
-    * data-file path, one Bitmap64 per group in mapGroups) — the driver
-    * collects only the serialized bitmaps, O(touched files × compressed
-    * bitmap bytes), never the raw delete rows. Mirrors the executor-side
-    * DV write in DeltaInterop.markRowsDeleted.
-    */
-  private[tables] def positionDeleteBitmaps(spark: SparkSession,
-      posDeletes: Seq[IceFile]): Map[String, Array[Byte]] = {
-    import spark.implicits._
-    spark.read.parquet(posDeletes.map(_.path): _*)
-      .select(col("file_path"), col("pos"))
-      .as[(String, Long)]
-      .groupByKey { case (p, _) => DeletionVectors.normalizedUri(p) }
-      .mapGroups { (p, it) =>
-        val bm = new DeletionVectors.Bitmap64
-        it.foreach { case (_, pos) => bm.add(pos) }
-        (p, bm.serialize)
-      }
-      .collect().toMap
-  }
-
-  private def applyPositionDeletes(spark: SparkSession, df: DataFrame,
-      st: IceState): DataFrame = {
-    val posDeletes = st.deletes.filter(_.content == 1)
-    if (posDeletes.isEmpty) return df
-    import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
-    // Size-dispatched on delete-file manifest bytes — known BEFORE any
-    // scan, the same threshold the TxTable fold spills at. Below it
-    // (the micro-batch shape) the bitmaps broadcast into the codegen'd
-    // DvIsRowLive filter: no join on the data path, pushdown intact.
-    // Above it (a mass delete) broadcasting bitmaps would park
-    // O(touched files × bitmap bytes) on the driver AND in every
-    // executor, so the deletes apply as a plain shuffle anti-join on
-    // (normalized path, position) instead — AQE picks the build side,
-    // driver residency zero, the same design as the bulk
-    // equality-delete joins. (A sidecar spill would also cap residency
-    // but makes a READ write files; the join needs neither.)
-    val inlineMax = spark.conf.getOption(IcebergCommitLog.InlineFoldMaxDeleteBytesConf)
-      .map(_.toLong).getOrElse(IcebergCommitLog.InlineFoldMaxDeleteBytes)
-    if (posDeletes.map(_.bytes).sum <= inlineMax) {
-      val byFile = positionDeleteBitmaps(spark, posDeletes)
-      val bc = spark.sparkContext.broadcast(new DvLookup(byFile): DvProbe)
-      df.filter(toCol(DvIsRowLive(
-        toExpr(col(DeltaLog.FileMetaCol)), toExpr(col(DeltaLog.RowMetaCol)), bc)))
-    } else {
-      val del = spark.read.parquet(posDeletes.map(_.path): _*)
-        .select(toCol(NormalizedPath(toExpr(col("file_path")))).as("__np"),
-          col("pos").cast("long").as("__pos"))
-      val withNp = df.withColumn("__np",
-        toCol(NormalizedPath(toExpr(col(DeltaLog.FileMetaCol)))))
-      withNp.join(del,
-          withNp("__np") === del("__np") &&
-            withNp(DeltaLog.RowMetaCol) === del("__pos"),
-          "left_anti")
-        .drop("__np")
-    }
-  }
-
   /** Test-visible count of full state reconstructions (manifest-list +
     * manifest traversals) — pins the change feeds' (tableChanges,
     * changesSince) one-derivation-per-version contract. Thread-local so concurrently running suites can't skew a
@@ -1188,11 +1117,11 @@ object IcebergLog {
 
   /** (normalized data-file path, row position) of every row the state's
     * LIVE equality-delete files kill — located by ONE sequence-scoped
-    * scan (the same match the reader's anti-join applies). Lets the
-    * TxTable surface fold equality deletes into the per-file position
-    * bitmaps it already uses for position deletes, so reads/MERGE/version
-    * work uniformly over Flink-upsert-shaped tables. Rows also covered by
-    * a position delete may appear (they union into the same bitmap).
+    * scan. Lets the snapshot fold equality deletes into the per-file
+    * position bitmaps it already builds for position deletes, so every
+    * read, MERGE and version works uniformly over Flink-upsert-shaped
+    * tables. Rows also covered by a position delete may appear (they
+    * union into the same bitmap).
     */
   private[tables] def equalityVictimPositions(spark: SparkSession,
       st: IceState): DataFrame = {
@@ -1201,36 +1130,12 @@ object IcebergLog {
     if (scoped.files.isEmpty)
       return spark.createDataFrame(Seq.empty[(String, Long)])
         .toDF("__np", "__pos")
-    val metaSel = Seq(col("_metadata.file_path").as(DeltaLog.FileMetaCol),
-      col("_metadata.row_index").as(DeltaLog.RowMetaCol))
-    equalityJoin(spark, scoped,
-        readData(spark, st.meta, pruneView(st), scoped.files, metaSel), eqDel, kill = true)
+    val view = TxLog.Snapshot(st.metadataVersion, st.schema, st.partitionColumns, st.files,
+      propertiesOf(st.meta))
+    equalityKilled(spark, scoped,
+        readData(spark, st.meta, view, scoped.files, DeltaLog.rowMeta(true)), eqDel)
       .select(col("__np"), col(DeltaLog.RowMetaCol).as("__pos"))
       .distinct()
-  }
-
-  /** Rows of `stPrev`'s live state KILLED by the given new
-    * equality-delete files — the reader's anti-join flipped to a
-    * semi-join, deduplicated by (file, pos) so a row matching several
-    * delete groups dies exactly once.
-    */
-  private def equalityDying(spark: SparkSession, stPrev: IceState,
-      eqDel: Seq[IceFile]): DataFrame = {
-    val scoped = equalityScope(stPrev, eqDel)
-    equalityJoin(spark, scoped, dfFor(spark, scoped, withMeta = true), eqDel, kill = true)
-      .dropDuplicates(DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-      .drop("__np", DeltaLog.FileMetaCol, DeltaLog.RowMetaCol)
-  }
-
-  /** Merge-on-read EQUALITY deletes (content=2 — the shape streaming
-    * upsert engines like Flink commit): the rows of `df` no live
-    * equality-delete file of `st` kills.
-    */
-  private def applyEqualityDeletes(spark: SparkSession, df: DataFrame,
-      st: IceState): DataFrame = {
-    val eqDeletes = st.deletes.filter(_.content == 2)
-    if (eqDeletes.isEmpty) df
-    else equalityJoin(spark, st, df, eqDeletes, kill = false).drop("__np")
   }
 
   /** `st` narrowed to the files an equality delete of `eqDel` can reach:
@@ -1243,29 +1148,28 @@ object IcebergLog {
     st.copy(files = st.files.filter(f => st.dataSeq.getOrElse(f.path, 0L) < maxDelSeq))
   }
 
-  /** The equality-delete match over `rows`, a read of `st`'s files
-    * carrying DeltaLog.FileMetaCol: a data row dies when some row of an
-    * `eqDel` file matches it on that delete's `equality_ids` columns AND
-    * the row's data file has a STRICTLY SMALLER data sequence number than
-    * the delete file (so re-inserts after the delete survive, per spec
-    * "Scan Planning"). Null-safe equality matches null keys, like
-    * Iceberg's own readers. `kill` keeps the rows some delete kills (a
-    * row matching several delete groups appears once per group); else
-    * the rows none kills. Either way the rows gain `__np`, their
-    * normalized file path.
+  /** The rows of `rows` (a read of `st`'s files carrying
+    * DeltaLog.FileMetaCol) that an `eqDel` file kills: a data row dies
+    * when some row of an `eqDel` file matches it on that delete's
+    * `equality_ids` columns AND the row's data file has a STRICTLY
+    * SMALLER data sequence number than the delete file (so re-inserts
+    * after the delete survive, per spec "Scan Planning"). Null-safe
+    * equality matches null keys, like Iceberg's own readers. A row
+    * matching several delete groups appears once per group; the rows
+    * gain `__np`, their normalized file path.
     *
     * Plan shape: the per-file sequence number broadcast-joins onto the
     * scan by file path (metadata-sized, map-side); each distinct
-    * equality-ids set becomes ONE semi- or anti-join against the union
-    * of its delete files. The null-safe key equalities extract as hash
+    * equality-ids set becomes ONE semi-join against the union of its
+    * delete files. The null-safe key equalities extract as hash
     * join keys and the sequence predicate rides as a post-join filter,
     * so the strategy is left to AQE: a Flink-upsert micro-batch is tiny
     * and broadcasts at runtime, while a bulk equality delete (a
     * compliance purge, O(table keys) rows in one group) sort-merges
     * instead of OOMing the driver.
     */
-  private def equalityJoin(spark: SparkSession, st: IceState, rows: DataFrame,
-      eqDel: Seq[IceFile], kill: Boolean): DataFrame = {
+  private def equalityKilled(spark: SparkSession, st: IceState, rows: DataFrame,
+      eqDel: Seq[IceFile]): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{toCol, toExpr}
     import org.apache.spark.sql.functions.lit
     val byId = topFields(st.meta).map { case (id, n, _) => id -> n }.toMap
@@ -1286,14 +1190,10 @@ object IcebergLog {
       }.reduce(_ unionByName _)
       cols -> cols.foldLeft(delRows)((acc, c) => acc.withColumnRenamed(c, s"__eq_$c"))
     }
-    def join(df: DataFrame, cols: Seq[String], dels: DataFrame, how: String): DataFrame =
-      df.join(dels, cols.map(c => df(c) <=> dels(s"__eq_$c")).reduce(_ && _) &&
-        df("__dataseq") < dels("__delseq"), how)
-    val out =
-      if (kill) groups.map { case (cols, dels) => join(withSeq, cols, dels, "left_semi") }
-        .reduce(_ unionByName _)
-      else groups.foldLeft(withSeq) { case (df, (cols, dels)) => join(df, cols, dels, "left_anti") }
-    out.drop("__dataseq")
+    groups.map { case (cols, dels) =>
+      withSeq.join(dels, cols.map(c => withSeq(c) <=> dels(s"__eq_$c")).reduce(_ && _) &&
+        withSeq("__dataseq") < dels("__delseq"), "left_semi")
+    }.reduce(_ unionByName _).drop("__dataseq")
   }
 }
 
@@ -2039,7 +1939,7 @@ object IcebergWriter {
     val props = IcebergLog.propertiesOf(stB.meta)
     val data = Constraints.enforce(
       GeneratedColumns.validate(conformed(stB.schema, df), stB.schema), props, stB.schema)
-    val specFields = resolvedSpecFields(stB)
+    val specFields = resolvedSpecFields(stB.meta)
     val partFields = specFields.map(sf => sf.name -> sf.resultType)
     val topIds = IcebergLog.topFields(stB.meta).map { case (id, n, _) => n -> id }.toMap
     val added = stage(spark, location, data, specFields,
@@ -2198,10 +2098,10 @@ object IcebergWriter {
     * this writer cannot evaluate (unknown strings, spec-undefined type
     * pairs surface later from IceTransforms.column).
     */
-  private[tables] def resolvedSpecFields(st: IcebergLog.IceState): Seq[IcebergLog.ResolvedSpecField] = {
-    val defaultSpec = (st.meta \ "default-spec-id").extractOrElse[Int](0)
-    val byId = IcebergLog.topFields(st.meta).map { case (id, n, dt) => id -> ((n, dt)) }.toMap
-    IcebergLog.specsById(st.meta).getOrElse(defaultSpec, Seq.empty).map { sf =>
+  private[tables] def resolvedSpecFields(meta: JValue): Seq[IcebergLog.ResolvedSpecField] = {
+    val defaultSpec = (meta \ "default-spec-id").extractOrElse[Int](0)
+    val byId = IcebergLog.topFields(meta).map { case (id, n, dt) => id -> ((n, dt)) }.toMap
+    IcebergLog.specsById(meta).getOrElse(defaultSpec, Seq.empty).map { sf =>
       val t = IceTransforms.parseSpec(sf.transform).getOrElse(throw UnsupportedOperationError(
         s"iceberg writer: unknown partition transform '${sf.transform}'"))
       val (src, dt) = byId.getOrElse(sf.sourceId, throw UnsupportedOperationError(
@@ -2214,7 +2114,7 @@ object IcebergWriter {
     * partition-tuple shape manifest entries serialize.
     */
   private[tables] def writablePartFields(st: IcebergLog.IceState): Seq[(String, DataType)] =
-    resolvedSpecFields(st).map(f => f.name -> f.resultType)
+    resolvedSpecFields(st.meta).map(f => f.name -> f.resultType)
 
   /** STRICT schema gate through the Iceberg type bridge (short/byte ride
     * as int etc.), returning the frame cast to the table schema.
@@ -2500,7 +2400,7 @@ object IcebergWriter {
       // the spec's source ids must survive: a dropped or retyped source
       // column would take a new field id (or none)
       val bridged = IcebergLog.structOf(JsonMethods.parse(icebergSchemaJson(df.schema)._1))
-      resolvedSpecFields(st).find(sf => !bridged.fieldNames.contains(sf.source) ||
+      resolvedSpecFields(st.meta).find(sf => !bridged.fieldNames.contains(sf.source) ||
           bridged(sf.source).dataType != sf.sourceType).foreach { sf =>
         throw UnsupportedOperationError(
           s"overwrite schema drops or retypes partition source column ${sf.source}; " +

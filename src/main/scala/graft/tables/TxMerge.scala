@@ -161,7 +161,8 @@ final class TxMerge(
     val (targetDf, removedPaths) =
       if (dvMode)
         ((if (rtTracked) DeltaLog.withRowIds(spark, table.location, snap.copy(files = touchedAddFiles))
-          else DeltaLog.readWithRowMeta(spark, table.location, snap.copy(files = touchedAddFiles))),
+          else table.log.liveRows(spark, table.location, snap.copy(files = touchedAddFiles),
+            withMeta = true)),
           touchedAddFiles.map(_.path))
       else touchedRelPaths match {
         case Some(touched) =>

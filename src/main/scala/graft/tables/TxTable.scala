@@ -64,7 +64,7 @@ final class TxTable(val spark: SparkSession, val location: String,
     val entries = log.addsBetween(spark, location, fromVersion, toVersion)
       .flatMap { case (v, added) => added.map(_ -> Seq(v.toString)) }
     LogFileIndex.tagged(snapshot, Seq(LogFileIndex.CommitVersionTag), entries)
-      .map(log.dfForSnapshot(spark, location, _)).reduce(_ unionByName _)
+      .map(log.liveRows(spark, location, _)).reduce(_ unionByName _)
   }
 
   /** True iff every commit in (fromVersion, toVersion∨latest] only ADDED
@@ -100,9 +100,9 @@ final class TxTable(val spark: SparkSession, val location: String,
   def tableChanges(fromVersion: Long, toVersion: Option[Long] = None): DataFrame =
     if (log == ForeignDeltaCommitLog) DeltaCdf.tableChanges(spark, location, fromVersion, toVersion)
     else if (log == IcebergCommitLog)
-      // snapshot-diff changelog: appends as inserts, position deletes
-      // joined back to their rows; raises for overwrite/equality-delete
-      // histories (the caller re-syncs)
+      // snapshot-diff changelog: appends as inserts, removed files and
+      // position/equality-delete victims as deletes, each read live at
+      // its version
       IcebergLog.tableChanges(spark, location, fromVersion, toVersion)
     else throw UnsupportedOperationError(
       "tableChanges requires a Delta (_delta_log) or Iceberg table; " +
@@ -180,7 +180,7 @@ final class TxTable(val spark: SparkSession, val location: String,
   }
 
   private def dfFor(s: Snapshot): DataFrame = {
-    val df = log.dfForSnapshot(spark, location, s)
+    val df = log.liveRows(spark, location, s)
     // while an ANALYZE stamp is fresh (fingerprint match — maintained
     // across appends AND provable deletes by ColumnStats.foldAppend/
     // foldDelete), hand the planner the TRUTHFUL size — exact metadata

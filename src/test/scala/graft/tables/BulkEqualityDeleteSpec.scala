@@ -4,17 +4,36 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A BULK equality delete — the compliance-purge shape: one delete file
-  * group carrying O(table keys) rows, not a Flink micro-batch. The three
-  * victim joins (read-path bitmap fold, changelog delete feed, scan-time
-  * anti-join) must leave the build-side choice to AQE: with the
-  * broadcast threshold below the delete-key size, NONE of them may plan
-  * a BroadcastHashJoin for the semi/anti join (a forced broadcast hint
-  * would collect 10^7-10^8 purge keys onto the driver and every
-  * executor). The metadata-sized path→sequence lookup joins still
-  * broadcast — only the delete-row joins are pinned.
+  * group carrying O(table keys) rows, not a Flink micro-batch. The two
+  * victim joins (the snapshot's DV fold, the changelog delete feed) must
+  * leave the build-side choice to AQE: with the broadcast threshold
+  * below the delete-key size, NEITHER may plan a BroadcastHashJoin for
+  * the semi join (a forced broadcast hint would collect 10^7-10^8 purge
+  * keys onto the driver and every executor). The metadata-sized
+  * path→sequence lookup joins still broadcast — only the delete-row
+  * joins are pinned. Reads apply the folded descriptors (DvIsRowLive)
+  * and plan no delete join at all.
   */
 class BulkEqualityDeleteSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
+
+  private def planOf(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.toString
+
+  /** The read drops deleted rows through the snapshot's DV descriptors
+    * and joins nothing against delete rows; returns the descriptors it
+    * broadcast.
+    */
+  private def readsThroughFold(df: org.apache.spark.sql.DataFrame)
+      : Seq[DeletionVectors.Descriptor] = {
+    val p = planOf(df)
+    assert(p.toLowerCase.contains("dvisrowlive") && !p.contains("LeftAnti") &&
+      !p.contains("LeftSemi"), s"deletes must apply as the DV filter, not a join:\n$p")
+    // one broadcast per read; the scan's pushed filters repeat it
+    df.queryExecution.sparkPlan.flatMap(_.expressions.flatMap(_.collect {
+      case d: DvIsRowLive => d.lookup
+    })).distinct.flatMap(_.value.descriptors.values)
+  }
 
   private def noBroadcastSemiOrAnti(plan: String, what: String): Unit = {
     val bad = plan.linesIterator.filter(l => l.contains("BroadcastHashJoin") &&
@@ -39,22 +58,21 @@ class BulkEqualityDeleteSpec extends AnyFunSuite {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024).toString)
     try {
-      // scan-time anti-join (applyEqualityDeletes inside the direct read)
+      // the direct read applies the snapshot's folded descriptors
       val direct = IcebergLog.toDF(spark, loc)
       assert(direct.count() == n / 2)
       assert(direct.agg(sum(col("id"))).as[Long].head() ==
         (1L until n by 2).sum)
-      noBroadcastSemiOrAnti(direct.queryExecution.executedPlan.toString,
-        "scan-time equality anti-join")
+      assert(readsThroughFold(direct).map(_.cardinality).sum == n / 2)
 
-      // read-path victim scan (feeds the TxTable bitmap fold)
+      // the fold's victim scan
       val st = IcebergLog.state(spark, loc)
       val victims = IcebergLog.equalityVictimPositions(spark, st)
       assert(victims.count() == n / 2)
       noBroadcastSemiOrAnti(victims.queryExecution.executedPlan.toString,
         "bitmap-fold victim semi-join")
 
-      // changelog delete feed (equalityDying)
+      // changelog delete feed (the dying rows live at v-1)
       val ch = IcebergLog.tableChanges(spark, loc, deleteVersion, Some(deleteVersion))
       assert(ch.filter(col("_change_type") === "delete").count() == n / 2)
       noBroadcastSemiOrAnti(ch.queryExecution.executedPlan.toString,
@@ -110,35 +128,31 @@ class BulkEqualityDeleteSpec extends AnyFunSuite {
     t.delete("id % 5 != 0") // dense MoR position deletes: 80% of every file
     val expectLive = (0L until 20000L by 5L)
 
-    def planOf(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.executedPlan.toString
-
-    // below the threshold: codegen'd broadcast-bitmap filter, no join
+    // below the threshold: the fold inlines its bitmaps, the read
+    // applies them through the codegen'd DV filter, no join
     val small = IcebergLog.toDF(spark, loc)
     assert(small.select("id").as[Long].collect().sorted.toSeq == expectLive)
-    assert(!planOf(small).contains("LeftAnti"),
-      s"small deletes must apply as the bitmap filter, not a join:\n${planOf(small)}")
+    val inline = readsThroughFold(small)
+    assert(inline.nonEmpty && inline.forall(_.storageType == "i"))
 
-    // above the threshold (forced to 1 byte): IcebergLog.toDF/dfFor must
-    // NOT collect+broadcast O(files × bitmap bytes) — the deletes apply
-    // as a plain anti-join on (path, pos) with the build side left to
-    // the planner. Threshold -1 disables auto-broadcast entirely, so a
-    // BroadcastHashJoin here could only come from a forced hint — the
-    // exact scale bug this pins against (AQE re-enables broadcast on
-    // real configs when the delete delta is genuinely small).
+    // above the threshold (forced to 1 byte): IcebergLog.toDF must NOT
+    // collect+broadcast O(files × bitmap bytes) — the fold spills the
+    // bitmaps to executor-written sidecars and the read broadcasts only
+    // their "u" descriptors, O(files); executors load the bitmaps of the
+    // files they scan. With auto-broadcast off, no delete row may be
+    // broadcast either (the read joins none).
     spark.conf.set(IcebergCommitLog.InlineFoldMaxDeleteBytesConf, "1")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val direct = IcebergLog.toDF(spark, loc)
       assert(direct.select("id").as[Long].collect().sorted.toSeq == expectLive)
-      val p = planOf(direct)
-      assert(p.contains("LeftAnti"),
-        s"mass position deletes must apply as an anti-join:\n$p")
-      val badBc = p.linesIterator.filter(l =>
-        l.contains("BroadcastHashJoin") && l.contains("LeftAnti")).toSeq
-      assert(badBc.isEmpty,
-        s"mass-delete anti-join must not broadcast:\n${badBc.mkString("\n")}")
+      val spilled = readsThroughFold(direct)
+      assert(spilled.nonEmpty && spilled.forall(_.storageType == "u"),
+        s"above the threshold the read must broadcast sidecar descriptors, got " +
+          spilled.map(_.storageType))
+      assert(!planOf(direct).contains("BroadcastHashJoin"),
+        s"mass-delete read must not broadcast delete rows:\n${planOf(direct)}")
     } finally {
       spark.conf.unset(IcebergCommitLog.InlineFoldMaxDeleteBytesConf)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)

@@ -126,4 +126,30 @@ class IcebergFieldIdSpec extends AnyFunSuite {
     assert(byName("id") == 1 && byName("name") == 2 && byName("score") == 3)
     assert(byName("tag") > 3)
   }
+
+  test("a column an evolving append adds carries its field id in that append's files") {
+    val loc = TestSpark.tmpDir("ice-fid-evolved-file") + "/t"
+    val t = TxTable.forIceberg(spark, loc)
+    t.create(seed.toDF("id", "name", "score"))
+    t.append(Seq((4L, "delta", 40.0, "x"), (5L, "eps", 50.0, "y"))
+      .toDF("id", "name", "score", "extra"), graft.catalog.SchemaEvolution.MERGE)
+    val extraId = IcebergLog.topFields(IcebergLog.state(spark, loc).meta)
+      .collectFirst { case (id, "extra", _) => id }.get
+    // after a rename the read resolves every id-bearing file by id
+    IcebergWriter.renameColumn(spark, loc, "name", "label")
+    assert(IcebergLog.toDF(spark, loc).select("id", "extra").as[(Long, String)]
+      .collect().toSet == Set((1L, null), (2L, null), (3L, null), (4L, "x"), (5L, "y")))
+    assert(t.toDF.filter($"extra".isNotNull).count() == 2)
+    val conf = spark.sessionState.newHadoopConf()
+    val footerIds = IcebergLog.state(spark, loc).files.flatMap { f =>
+      val r = FileStats.openFooter(conf, new org.apache.hadoop.fs.Path(f.path))
+      try {
+        import scala.jdk.CollectionConverters._
+        r.getFileMetaData.getSchema.getFields.asScala
+          .collect { case fld if fld.getName == "extra" => Option(fld.getId).map(_.intValue) }
+      } finally r.close()
+    }
+    assert(footerIds.nonEmpty && footerIds.forall(_.contains(extraId)),
+      s"the evolving append's files must stamp extra's field id $extraId, got $footerIds")
+  }
 }

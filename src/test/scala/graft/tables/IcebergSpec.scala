@@ -497,18 +497,19 @@ class IcebergSpec extends AnyFunSuite {
     IcebergWriter.create(spark, loc, df1)
     assert(IcebergWriter.delete(spark, loc, "id = 2 OR id = 3") == 2L)
     val st = IcebergLog.stateAt(spark, loc, None)
-    val posDeletes = st.deletes.filter(_.content == 1)
-    assert(posDeletes.nonEmpty)
-    // the driver-side payload of the MoR read path: per-file SERIALIZED
-    // Bitmap64s (the mapGroups output), never raw (file_path, pos) rows
-    val payload = IcebergLog.positionDeleteBitmaps(spark, posDeletes)
-    assert(payload.nonEmpty)
-    payload.values.foreach(bytes =>
-      assert(DeletionVectors.Bitmap64.deserialize(bytes).cardinality > 0))
-    val total = payload.values
-      .map(b => DeletionVectors.Bitmap64.deserialize(b).cardinality).sum
-    assert(total == 2L)
-    // and the filter built from those bitmaps still reads correctly
+    assert(st.deletes.exists(_.content == 1))
+    // the driver-side payload of the MoR read path: the snapshot fold's
+    // per-file SERIALIZED Bitmap64s (the mapGroups output) as inline
+    // descriptors, never raw (file_path, pos) rows
+    IcebergCommitLog.clearDeleteFoldCacheForTest()
+    val payload = IcebergCommitLog.snapshotOf(spark, loc, st).files.flatMap(_.deletionVector)
+    assert(payload.nonEmpty && payload.forall(_.storageType == "i"))
+    val bitmaps = payload.map(d =>
+      DeletionVectors.Bitmap64.deserialize(
+        DeletionVectors.decodeData(d.pathOrInlineDv, d.sizeInBytes)))
+    bitmaps.foreach(bm => assert(bm.cardinality > 0))
+    assert(bitmaps.map(_.cardinality).sum == 2L)
+    // and the filter built from those descriptors still reads correctly
     assert(IcebergLog.toDF(spark, loc).select("id").collect()
       .map(_.getLong(0)).toSeq == Seq(1L))
   }
