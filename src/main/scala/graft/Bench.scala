@@ -228,6 +228,10 @@ object Bench {
     // through a scan — the at-scale delta IS the point
     r.time("bigram_lm_score")(noop(graft.ext.TextOps.bigramLmScore(documents)))
     r.time("doc_chunking")(noop(docChunks(spark, sfDir)))
+    // point reads that differ only in a literal: per-read time and
+    // compiles. Its client replaces the session's registered one, so it
+    // runs before the table the SQL probes below resolve through theirs
+    Probes.literalSweep(r, spark, s"benchsweep$pass", n = 20, first = 100 * pass)
     // the stamped-stats family below all runs against this table
     val (grpCat, grpLoc) = (s"benchgrp$pass", tmp("bench-grp") + "/t")
     r.group("grouped_rollup") {

@@ -3,7 +3,10 @@ package graft
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.catalog.FileType
 
 /** The probe runner Bench and ScaleCheck share. One instance collects the
   * probes of one JSON object of a record, in run order: each label maps
@@ -37,6 +40,13 @@ private[graft] final class Probes private (
       }
     } catch { case NonFatal(e) => add(label, -1.0); fail(label, e) }
     value(label)
+  }
+
+  /** Records `v` under `label` as one pass of a probe that is not a
+    * time (a count), printing `[tag] <label>_pass<i> <v>`. */
+  def record(label: String, v: Double): Unit = {
+    add(label, v)
+    System.err.println(f"[$tag] $prefix${label}_pass${passes(label).size} $v%.3f")
   }
 
   /** Runs a fixture shared by several probes: a failure outside any
@@ -90,6 +100,34 @@ private[graft] object Probes {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Point reads of a native catalog table `<cat>.s.t` that differ only
+    * in the key's value: one warm read of the shape at key `first`, then
+    * `n` reads at keys `first + 1 .. first + n` (inside the table's key
+    * range, so every read scans). Records the mean seconds per read
+    * (`literal_sweep`) and the classes compiled per read
+    * (`literal_sweep_compiles`): a read whose generated code depends on
+    * the value compiles afresh for each key. Callers that run it more
+    * than once in a JVM pass `first` values whose key ranges do not
+    * overlap.
+    */
+  def literalSweep(r: Probes, spark: SparkSession, cat: String, n: Int, first: Int): Unit =
+    r.group("literal_sweep") {
+      require(first + n < SweepKeys, s"keys up to ${first + n} outside the table's $SweepKeys")
+      ScaleCheck.catalog(spark, cat).createAsTable(
+        spark.range(4L * SweepKeys).selectExpr("id", s"CAST(id % $SweepKeys AS INT) AS k",
+          "id * 3 AS v").repartition(2),
+        cat, "s", "t", FileType.DELTA, ScaleCheck.tmp(s"$cat-sweep") + "/t")
+      def read(k: Int): Unit = spark.sql(s"SELECT id, v FROM $cat.s.t WHERE k = $k").collect()
+      read(first)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t = timed((first + 1 to first + n).foreach(read))
+      r.record("literal_sweep", t / n)
+      r.record("literal_sweep_compiles",
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before).toDouble / n)
+    }
+
+  private val SweepKeys = 1000
 
   /** Seconds `f` takes to run. */
   private def timed(f: => Unit): Double = {

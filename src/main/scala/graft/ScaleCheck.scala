@@ -176,6 +176,9 @@ object ScaleCheck {
     // COPY INTO: the initial load tracks new bytes, the re-run no-op must
     // track ingest-log metadata only (≈flat)
     copyIntoCycle(r, spark, sfDir, "scalecheck", files = 16)
+    // point reads that differ only in a literal: the per-read time must
+    // stay flat with the data and the reads compile no class
+    Probes.literalSweep(r, spark, "scalesweep", n = 50, first = 0)
     // canonical-URL dedup (map-only key derivation + one group-by
     // shuffle — must track url volume)
     best("canonical_url_dedup") {

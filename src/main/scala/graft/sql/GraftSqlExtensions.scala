@@ -3,10 +3,13 @@ package graft.sql
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession, Dataset => ClassicDataset}
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+import org.apache.spark.sql.types.IntegerType
 
 import scala.util.control.NonFatal
 
@@ -1566,11 +1569,15 @@ object GraftSqlExtensions {
   }
 
   /** Entries for Spark's generated-class cache
-    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). One
-    * pass of the 16 headline queries generates ~244 distinct classes,
-    * and the cache is an LRU: a cyclic pass over more classes than it
-    * holds evicts each before its next use, so at the default every
-    * pass recompiles all of them. 512 is ~2x that working set; a
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). Spark
+    * 4.1 keys an entry by (context class loader, source), so in local
+    * mode a new whole-stage class takes two entries: the planner's
+    * compile check and the first task's compile. The first pass of the
+    * 16 headline queries in a fresh JVM fills 246 entries
+    * (`CodegenMetrics` compile count, sf0.01; the next passes compile
+    * none), and the cache is an LRU: a cyclic pass over more entries
+    * than it holds evicts each before its next use, so at the default
+    * every pass recompiles all of them. 512 is ~2x that working set; a
     * retained class costs ~30-40 KB of heap, so a full cache holds
     * ~20 MB.
     */
@@ -1582,17 +1589,41 @@ object GraftSqlExtensions {
     if (!conf.contains(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key))
       conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
 
+  /** Creates this JVM's generated-class cache, unless code generation
+    * already did, at the size `sizeCodegenCache` gives the key's value
+    * in the Spark conf (where builder options land). Spark builds the
+    * cache in `CodeGenerator`'s initializer from `SQLConf.get`; a session
+    * builds its state before its first code generation, so this runs
+    * from a state builder, where the session's own SQLConf is not yet
+    * reachable.
+    */
+  private[sql] def createCodegenCache(session: org.apache.spark.sql.SparkSession): Unit = {
+    val conf = new SQLConf
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    session.sparkContext.getConf.getOption(key).foreach(conf.setConfString(key, _))
+    sizeCodegenCache(conf)
+    // the first call into CodeGenerator runs its initializer; later ones
+    // find the cache built
+    SQLConf.withExistingConf(conf)(CodeGenerator.javaType(IntegerType))
+  }
+
   /** Install into a builder: SparkSession.builder()
     * .withExtensions(GraftSqlExtensions.install). Clients register
     * themselves on construction (LakehouseClient does this).
     *
     * Each session that installs graft gets
     * `spark.sql.codegen.cache.maxEntries` = 512 when that key is unset;
-    * a value set on the builder wins. The cache is JVM-wide: Spark
-    * sizes it once, from the first session in the JVM that generates
-    * code. The key is set when the session first analyzes a query;
-    * encoding a local collection before that generates code at
-    * Spark's default size.
+    * a value set on the builder wins. The cache is per JVM: the planning
+    * JVM's is created when the first such session builds its state, before
+    * any code generation in it, a local collection's encoding included
+    * (unless code generated earlier in the JVM created it already). The
+    * key is also set in the session's SQLConf when it first analyzes a
+    * query, so executors, which read it from the task's properties,
+    * create theirs at the same size.
+    *
+    * Physical plans get HoistLiterals before whole-stage codegen, so
+    * queries that differ only in a numeric, date or timestamp operand
+    * reuse one generated class.
     */
   def install(extensions: SparkSessionExtensions): Unit = {
     // the Hints batch runs before Spark's own relation resolution, which
@@ -1600,10 +1631,8 @@ object GraftSqlExtensions {
     // it cannot map to a registered catalog plugin
     extensions.injectHintResolutionRule { s =>
       val session = s.asInstanceOf[ClassicSparkSession]
-      // sized here, not in install: withExtensions calls install before
-      // any SparkContext exists, and this is the earliest per-session hook
-      // that reaches the session's SQLConf. A local collection encoded
-      // before the first analysis still creates the cache at Spark's default
+      // for the executors' caches: tasks read SQL confs from the
+      // session's SQLConf, which the parser builder cannot reach yet
       sizeCodegenCache(session.sessionState.conf)
       ResolveGraftRelations(session)
     }
@@ -1614,8 +1643,17 @@ object GraftSqlExtensions {
     extensions.injectPostHocResolutionRule(s => MetadataOnlyCount(s.asInstanceOf[ClassicSparkSession]))
     // custom physical operators (SURVEY preference tier c)
     extensions.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    // maintenance statements Spark's grammar lacks (OPTIMIZE / VACUUM)
-    extensions.injectParser((session, delegate) => new GraftSqlParser(session, delegate))
+    // both the AQE per-stage path and the non-AQE preparations apply
+    // pre-transition columnar rules before CollapseCodegenStages
+    extensions.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = HoistLiterals
+    })
+    // maintenance statements Spark's grammar lacks (OPTIMIZE / VACUUM);
+    // the parser is built with the session state
+    extensions.injectParser { (session, delegate) =>
+      createCodegenCache(session)
+      new GraftSqlParser(session, delegate)
+    }
   }
 }
 

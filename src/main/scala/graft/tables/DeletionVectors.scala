@@ -337,11 +337,14 @@ object DeletionVectors {
     rest
   }
 
-  /** The same key for a log path, resolved against the table. */
+  /** The same key for a log path, resolved against the table: the
+    * URI-encoded path, as `_metadata.file_path` spells it, so a file
+    * under a directory like `p=a b` matches without decoding per row.
+    */
   def normalizedAbs(conf: org.apache.hadoop.conf.Configuration, tableLocation: String,
       relPath: String): String = {
     val p = new Path(tableLocation, relPath)
-    p.getFileSystem(conf).makeQualified(p).toUri.getPath
+    p.getFileSystem(conf).makeQualified(p).toUri.getRawPath
   }
 }
 

@@ -38,6 +38,9 @@ class ProbesSpec extends AnyFunSuite {
     // a failed pass does not count against the passes that succeeded
     r.time("twice")(throw new RuntimeException)
     assert(r.value("twice") >= 0.005 && r.value("twice") < 0.05)
+    // a recorded count merges the same way
+    r.record("count", 2.0); r.record("count", 0.0)
+    assert(r.value("count") == 0.0)
     // an untimed check that fails records the probe as failed, body unrun
     var ran = false
     assert(r.time("checked", check = require(false, "wrong plan")) { ran = true } == -1.0)

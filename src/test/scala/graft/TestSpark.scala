@@ -21,11 +21,6 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // analyze once so graft sizes the generated-class cache before any
-    // spec encodes a local Seq: that encoding generates code before the
-    // session analyzes anything, and Spark creates its JVM-wide cache at
-    // the first code generation
-    s.range(0)
     s
   }
 

@@ -174,6 +174,24 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(t.toDF.filter(col("grp") === 2 && col("s") =!= "upd").count() === 0L)
   }
 
+  test("DV delete on a partition value a path URI escapes") {
+    val loc = TestSpark.tmpDir("dvspace")
+    // the "a b" directory is p=a%20b in _metadata.file_path
+    val df = (0 until 20).map(i => (i.toLong, if (i % 2 == 1) "a b" else "c")).toDF("id", "p")
+    DeltaLogWriter.create(spark, loc, df, partitionColumns = Seq("p"),
+      properties = Map("delta.enableDeletionVectors" -> "true"))
+    val client = new graft.client.LakehouseClient(spark)
+    client.createCatalog("dvspace"); client.createSchema("dvspace", "s")
+    client.registerAsTable("dvspace", "s", "t", graft.catalog.FileType.DELTA, loc)
+    val t = TxTable.forForeignDelta(spark, loc)
+    t.delete("id = 1")
+    assert(t.snapshot.files.exists(_.deletionVector.isDefined))
+    assert(t.toDF.count() === 19L)
+    assert(spark.sql("SELECT id FROM dvspace.s.t").collect().length === 19)
+    assert(spark.sql("SELECT id FROM dvspace.s.t WHERE p = 'a b'").collect()
+      .map(_.getLong(0)).sorted.toSeq === (3L to 19L by 2L))
+  }
+
   test("DVs survive checkpoints (written and replayed)") {
     val loc = TestSpark.tmpDir("dvckpt")
     DeltaLogWriter.create(spark, loc, sample.repartition(3),
